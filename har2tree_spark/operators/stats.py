@@ -3,97 +3,113 @@
 Re-grounds the reference's ``stats`` property (reference har2tree.py:505-528;
 golden values asserted at tests/simple_test.py:63-75), the HostNode rollups
 (nodes.py:802-835, :735-760) and ``build_all_hashes`` (har2tree.py:550-569)
-as single groupBy aggregates, plus a scalable pointer-doubling depth operator
-for the tree-depth / redirect-chain figures (Spark has no recursion; depth
-over parent pointers converges in ceil(log2(depth)) self-joins).
+as single groupBy aggregates, plus a pointer-doubling depth operator for the
+tree-depth / redirect-chain figures (Spark has no recursion; depth over
+parent pointers converges in bit_length(n) doubling steps, run inside one
+groupBy(doc_id) row per doc with higher-order array functions).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
 
 
-def compute_depths(
-    join_result: DataFrame,
-    max_doubling: int | None = None,
-    depth_complete: bool | None = None,
-) -> DataFrame:
-    """(doc_id, span_idx, depth) from parent pointers.
+def _rooted_depths() -> Column:
+    """Aggregate over one doc's (span_idx, parent_idx) rows:
+    array<struct<span_idx, depth>>, one entry per row.
 
-    Exact-mode join results carry ``depth`` already (the DFS computes it for
-    free) — pass through with zero jobs. Otherwise: pointer doubling; each
-    pass jumps every node twice as far up its ancestor chain, so depth up to
-    2^k resolves in k shuffles. The iteration count is bounded ONCE from the
-    largest per-doc row count (one cheap agg) instead of a convergence
-    action per pass — per-pass driver actions were the scaling bottleneck
-    (fixed latency independent of cores).
+    The parent pointers go into an array indexed by span_idx (positions of
+    dropped spans filled with null parents), then pointer doubling runs
+    inside the row: each step sets every node's ancestor to its ancestor's
+    ancestor and adds up the hops, so bit_length(n_rows) steps reach past
+    the root (-1) from any rooted span. Every span, the root too, counts
+    the hop to -1, so depth is hops - 1. ``F.get`` returns null out of
+    range (-1 included), which keeps -1 and dangling pointers where they
+    are. A span that never reaches -1 (in or behind a parent cycle, or
+    under a dangling pointer) gets a null depth."""
+    nodes = F.collect_list(F.struct("span_idx", "parent_idx"))
+    max_idx = F.max("span_idx")
+    idx = nodes["span_idx"]
+    gaps = F.transform(
+        F.array_except(F.sequence(F.lit(0), max_idx), idx),
+        lambda i: F.struct(i.alias("span_idx"), F.lit(None).cast("int").alias("parent_idx")),
+    )
+    parents = F.transform(F.array_sort(F.concat(nodes, gaps)), lambda r: r["parent_idx"])
 
-    ``depth_complete`` is the path switch for frames that carry a ``depth``
-    column: True = trust it (zero jobs), False = ignore it and re-derive by
-    doubling. The default (None) probes ONE row and passes through iff it is
-    non-null — correct only under the homogeneity PRECONDITION that
-    ``depth`` is all-filled or all-null, which holds for every frame this
-    package produces (exact mode fills every row, rank mode none). For a
-    mixed frame (e.g. a caller's union of exact- and rank-mode results) the
-    one-row probe is nondeterministic: pass ``depth_complete=False`` there,
-    or the rank rows may silently keep their null depths."""
-    if "depth" in join_result.columns and depth_complete is not False:
-        if depth_complete is True:
-            return join_result.select("doc_id", "span_idx", "depth")
-        probe = join_result.select("depth").limit(1).collect()
-        if probe and probe[0][0] is not None:
-            return join_result.select("doc_id", "span_idx", "depth")
-    if max_doubling is None:
-        max_rows = (
-            join_result.groupBy("doc_id").count().agg(F.max("count")).collect()[0][0]
+    def double(acc, _):
+        anc, hops = acc["anc"], acc["hops"]
+        return F.struct(
+            F.transform(anc, lambda a: F.coalesce(F.get(anc, a), a)).alias("anc"),
+            F.transform(
+                hops, lambda h, i: h + F.coalesce(F.get(hops, F.get(anc, i)), F.lit(0))
+            ).alias("hops"),
         )
-        max_doubling = max(1, int(max_rows or 1).bit_length())
-    cur = join_result.select(
-        "doc_id",
-        F.col("span_idx").alias("node"),
-        F.col("parent_idx").alias("anc"),
-        F.when(F.col("parent_idx") == -1, 0).otherwise(1).alias("steps"),
-    ).localCheckpoint()
-    for _ in range(max_doubling):
-        cur = (
-            cur.alias("a")
-            .join(
-                cur.select(
-                    "doc_id",
-                    F.col("node").alias("anc"),
-                    F.col("anc").alias("anc2"),
-                    F.col("steps").alias("steps2"),
-                ).alias("b"),
-                ["doc_id", "anc"],
-                "left",
-            )
-            .select(
-                "doc_id",
-                "node",
-                F.coalesce(F.col("anc2"), F.col("anc")).alias("anc"),
-                (F.col("steps") + F.coalesce(F.col("steps2"), F.lit(0))).alias("steps"),
-            )
-            .localCheckpoint()
+
+    def finish(acc):
+        # gap entries keep a null ancestor for good: drop them
+        return F.filter(
+            F.transform(
+                acc["anc"],
+                lambda a, i: F.when(
+                    a.isNotNull(),
+                    F.struct(
+                        i.alias("span_idx"),
+                        F.when(a == -1, F.get(acc["hops"], i) - 1).alias("depth"),
+                    ),
+                ),
+            ),
+            lambda r: r.isNotNull(),
         )
-    return cur.select("doc_id", F.col("node").alias("span_idx"), F.col("steps").alias("depth"))
+
+    return F.aggregate(
+        F.sequence(F.lit(1), F.length(F.bin(F.count("*")))),
+        F.struct(parents.alias("anc"), F.array_repeat(F.lit(1), max_idx + 1).alias("hops")),
+        double,
+        finish,
+    )
+
+
+def compute_depths(join_result: DataFrame, depth_complete: bool = False) -> DataFrame:
+    """(doc_id, span_idx, depth) from parent pointers; no Spark job.
+
+    ``depth_complete`` is the producer's contract: True means every row's
+    ``depth`` column is filled and current (exact-mode cascade output) and
+    it passes through. Anything else re-derives depth from ``parent_idx``
+    in one groupBy(doc_id): pointer doubling inside each doc's row
+    (:func:`_rooted_depths`), O(n log n) per doc of n spans, whatever the
+    size of the other docs in the frame.
+
+    Depth counts parent hops from the doc root (depth 0). A span that is
+    not reachable from the root -- in or behind a parent cycle, which rank
+    mode can produce, or under a pointer to a span not in the frame -- gets
+    a null depth."""
+    if depth_complete:
+        return join_result.select("doc_id", "span_idx", "depth")
+    return (
+        join_result.groupBy("doc_id")
+        .agg(_rooted_depths().alias("depths"))
+        .select("doc_id", F.inline("depths"))
+    )
 
 
 def doc_stats(
     features: DataFrame,
     join_result: DataFrame,
-    depth_complete: bool | None = None,
+    depth_complete: bool = False,
 ) -> DataFrame:
     """Golden per-doc stats (DOC_STATS_SCHEMA; A4 analogue).
 
-    ``depth_complete`` is forwarded to :func:`compute_depths`. Pass False
-    when ``join_result`` carries a partially stale ``depth`` column — e.g.
-    after ``pages.attach_pages``, which re-parents rows and nulls only
-    THEIR depths, leaving descendants' depths stale — so tree_depth is
-    re-derived from the new parent pointers instead of read from the
-    mixed column (r7 ADVICE #1)."""
+    ``total_chain`` and ``tree_depth`` come from one groupBy(doc_id) over
+    ``join_result``. ``tree_depth`` is the deepest depth reachable from
+    the root, plus 1; spans with a null depth (unreachable, see
+    :func:`compute_depths`) do not count. ``depth_complete`` as in
+    :func:`compute_depths`: pass True only for exact-mode cascade output
+    as the kernel emits it -- e.g. not after ``pages.attach_pages``, which
+    re-parents rows and nulls only THEIR depths, leaving descendants'
+    depths stale (r7 ADVICE #1)."""
     f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
     base = f.groupBy("doc_id").agg(
         F.count("*").cast("int").alias("total_spans"),
@@ -102,29 +118,22 @@ def doc_stats(
         F.count_distinct("cell").cast("int").alias("unique_cells"),
         F.sum("nbytes").cast("long").alias("total_bytes"),
     )
-    chains = join_result.groupBy("doc_id").agg(
+    deepest = F.max("depth") if depth_complete else F.array_max(_rooted_depths()["depth"])
+    per_doc = join_result.groupBy("doc_id").agg(
         F.sum(F.when(F.col("join_kind") == "redirect", 1).otherwise(0))
         .cast("int")
-        .alias("total_chain")
+        .alias("total_chain"),
+        (deepest + 1).cast("int").alias("tree_depth"),
     )
-    depths = (
-        compute_depths(join_result, depth_complete=depth_complete)
-        .groupBy("doc_id")
-        .agg((F.max("depth") + 1).cast("int").alias("tree_depth"))
-    )
-    return (
-        base.join(chains, "doc_id", "left")
-        .join(depths, "doc_id", "left")
-        .select(
-            "doc_id",
-            "total_spans",
-            "unique_keys",
-            "total_cells",
-            "unique_cells",
-            F.coalesce("tree_depth", F.lit(0)).alias("tree_depth"),
-            F.coalesce("total_chain", F.lit(0)).alias("total_chain"),
-            "total_bytes",
-        )
+    return base.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        "total_spans",
+        "unique_keys",
+        "total_cells",
+        "unique_cells",
+        F.coalesce("tree_depth", F.lit(0)).alias("tree_depth"),
+        F.coalesce("total_chain", F.lit(0)).alias("total_chain"),
+        "total_bytes",
     )
 
 
@@ -169,7 +178,7 @@ def hash_groups(features: DataFrame) -> DataFrame:
 def redirect_chains(
     features: DataFrame,
     join_result: DataFrame,
-    depth_complete: bool | None = None,
+    depth_complete: bool = False,
 ) -> DataFrame:
     """Redirect-chain listing per doc (the ``redirects`` property analogue,
     har2tree.py:530-533): redirect-edge members ordered root-to-leaf.

@@ -4,19 +4,17 @@ The flagship flow (reference CrawledTree lifecycle, SURVEY.md §3) with
 per-stage lineage. Shuffle budget at scale:
 
   parse          narrow (array-level ops)            0 shuffles
-  cascade exact  groupBy(doc_id) applyInPandas       1 shuffle (none if the
-                                                     source is bucketed/
-                                                     partitioned by doc_id)
+  cascade exact  repartition(doc_id) + mapInArrow    1 shuffle
   tiles          narrow projection                   0 shuffles
   tile_rollup    groupBy(level, cell)                1 shuffle (AQE-skew
                                                      aware; hot cells salted)
-  doc_stats      groupBy(doc_id)                     co-partitioned with
-                                                     cascade output
+  doc_stats      groupBy(doc_id) over the features,  no driver action: rank-
+                 ONE groupBy(doc_id) over the        mode depths double
+                 cascade output (chain + depth)      pointers inside each
+                                                     doc's row, no job loop
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +28,8 @@ def run_pipeline(
     with_depths: bool = True,
 ) -> dict[str, DataFrame]:
     """Returns the engine's output tables. ``mode``: 'exact' (reference
-    parity, applyInPandas kernel) or 'rank' (single-window relational)."""
+    parity, Arrow kernel) or 'rank' (single-window relational). Only the
+    exact kernel fills ``depth``, so rank-mode doc_stats re-derives it."""
     features = parse.parse_documents(docs)
     join_result = (
         cascade.resolve_exact(features) if mode == "exact" else cascade.resolve_rank(features)
@@ -44,7 +43,9 @@ def run_pipeline(
         "quarantine": features.filter(F.col("n_live") == 0).select("doc_id").distinct(),
     }
     if with_depths:
-        out["doc_stats"] = stats.doc_stats(features, join_result)
+        out["doc_stats"] = stats.doc_stats(
+            features, join_result, depth_complete=(mode == "exact")
+        )
     # span-sequence invariant surface: the document rows pass through
     # untouched, joined with their computed root — proving the engine only
     # re-parents, never mutates/reorders spans (BASELINE.json input_hint)
@@ -52,26 +53,6 @@ def run_pipeline(
         features.select("doc_id", "root_idx").distinct(), "doc_id", "left"
     )
     return out
-
-
-def run_and_measure(
-    spark: SparkSession, docs: DataFrame, mode: str = "exact"
-) -> dict[str, float]:
-    """Materialize the pipeline, returning docs/sec throughput — the
-    BASELINE.md headline metric."""
-    t0 = time.time()
-    out = run_pipeline(docs, mode=mode, with_depths=True)
-    n_join = out["join_result"].count()
-    n_tiles = out["tile_rollup"].count()
-    n_stats = out["doc_stats"].count()
-    wall = time.time() - t0
-    return {
-        "docs": float(n_stats),
-        "join_rows": float(n_join),
-        "tiles": float(n_tiles),
-        "wall_s": wall,
-        "docs_per_sec": n_stats / wall if wall > 0 else 0.0,
-    }
 
 
 def capture_report(spark: SparkSession, path: str) -> DataFrame:
@@ -136,8 +117,7 @@ def capture_report(spark: SparkSession, path: str) -> DataFrame:
     tree = pages.attach_pages(cascade.resolve_exact(features), caps)
     # depth_complete=False: attach_pages nulls depth only on the rows it
     # re-parents, leaving their descendants' depths stale — re-derive every
-    # depth from the post-ladder parent pointers (r7 ADVICE #1; the one-row
-    # probe in compute_depths must not see this mixed column).
+    # depth from the post-ladder parent pointers (r7 ADVICE #1).
     ds = stats.doc_stats(features, tree, depth_complete=False)
     # total_redirects = whole-tree redirect-EDGE count (see redirect_chains
     # docstring: deliberately broader than the reference's root->rendered

@@ -124,11 +124,12 @@ def test_marker_rollup_single_shuffle(spark, tmp_path):
     assert _n_exchanges(_plan(roll)) <= 2
 
 
-def test_rank_cascade_plan_shape(spark, tmp_path):
+def test_rank_cascade_plan_shape(spark, tmp_path, monkeypatch):
     import re
 
     from har2tree_spark.operators.cascade import resolve_rank
 
+    monkeypatch.delenv("SPARK_GRAFT_CASCADE_JOIN", raising=False)
     p = str(tmp_path / "docs9")
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     feats = parse_documents(spark.read.parquet(p))
@@ -162,6 +163,38 @@ def test_rank_cascade_plan_shape(spark, tmp_path):
     # the full edge fan-out
     assert _n_exchanges(plan) <= 3, plan
     assert re.search(r"\(\d+\) (?:SortAggregate|ObjectHashAggregate|HashAggregate)", plan), plan
+
+
+def _jobs_started(spark, group: str, build):
+    """Runs ``build`` under job group ``group``; returns its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rank_pipeline_build_jobs(spark, tmp_path):
+    """Building the rank-mode output frames runs only the rank cascade's
+    features checkpoint; depths need no job of their own (no probe, no
+    max-size count, no checkpointed doubling loop)."""
+    from har2tree_spark.operators import stats
+    from har2tree_spark.pipeline import run_pipeline
+
+    p = str(tmp_path / "docs_jobs")
+    gen_documents_df(spark, 50, seed=3).write.parquet(p)
+    docs = spark.read.parquet(p)
+    out, n_build = _jobs_started(spark, "rank-build", lambda: run_pipeline(docs, mode="rank"))
+    assert n_build <= 1, f"building rank-mode outputs started {n_build} jobs"
+    _, n_depths = _jobs_started(
+        spark, "rank-depths", lambda: stats.compute_depths(out["join_result"])
+    )
+    assert n_depths == 0, f"compute_depths started {n_depths} jobs"
 
 
 def test_lsh_fused_signatures_match_per_table(spark):

@@ -1,13 +1,16 @@
-"""doc_stats vs oracle golden stats; tile assignment & compaction laws."""
+"""doc_stats vs oracle golden stats; depths vs independent answers; tile
+assignment & compaction laws."""
+
+import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from har2tree_spark.datagen import gen_docs, scenario_docs
+from har2tree_spark.datagen import GenConfig, gen_docs, scenario_docs
 from har2tree_spark.geo import grid
 from har2tree_spark.operators import stats, tiling
-from har2tree_spark.operators.cascade import resolve_exact
+from har2tree_spark.operators.cascade import resolve_exact, resolve_rank
 from har2tree_spark.operators.parse import parse_documents
 from har2tree_spark.oracle import pycascade
 from har2tree_spark.schema import DOCUMENTS_SCHEMA
@@ -57,8 +60,8 @@ def test_depths_match_oracle_chain(spark):
 
 def test_depths_mixed_frame_recomputed(spark):
     # a caller-made union of exact rows (depth filled) and rank rows
-    # (depth null) violates compute_depths' homogeneity precondition;
-    # depth_complete=False must re-derive every depth from the pointers
+    # (depth null): depth_complete=False must re-derive every depth from
+    # the pointers
     import pyspark.sql.functions as F
 
     docs = [scenario_docs()[0]]
@@ -72,6 +75,95 @@ def test_depths_mixed_frame_recomputed(spark):
         "span_idx"
     )
     assert list(d.depth) == [0, 1, 2, 3]
+
+
+def _walk_depths(rows) -> dict[tuple[str, int], int | None]:
+    """Parent walk per span: hops to the root, None when the walk meets a
+    cycle or a pointer to a span that is not there."""
+    parent = {(r.doc_id, r.span_idx): r.parent_idx for r in rows}
+    out = {}
+    for (doc, i) in parent:
+        seen, cur, hops = set(), i, 0
+        while cur != -1 and cur not in seen and (doc, cur) in parent:
+            seen.add(cur)
+            cur = parent[(doc, cur)]
+            hops += 1
+        out[(doc, i)] = hops - 1 if cur == -1 else None
+    return out
+
+
+def test_rank_depths_match_parent_walk(spark):
+    # the hot-key corpus gives rank mode parent cycles: spans in or behind
+    # one are unreachable from the root and get a null depth
+    docs = gen_docs(5, 200, GenConfig(max_spans=32, p_hot=0.9, zipf_s=2.0, n_hot_keys=8))
+    jr = resolve_rank(parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))).cache()
+    want = _walk_depths(jr.select("doc_id", "span_idx", "parent_idx").collect())
+    got = {(r.doc_id, r.span_idx): r.depth for r in stats.compute_depths(jr).collect()}
+    assert got == want
+    assert any(d is None for d in want.values()), "corpus has no unrooted span"
+    jr.unpersist()
+
+
+def test_depths_recomputed_equal_exact_kernel(spark):
+    docs = scenario_docs() + gen_docs(23, 120)
+    jr = resolve_exact(parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))).cache()
+    kernel = jr.select("doc_id", "span_idx", "depth")
+    recomputed = stats.compute_depths(jr, depth_complete=False)
+    assert kernel.exceptAll(recomputed).count() == 0
+    assert recomputed.exceptAll(kernel).count() == 0
+    jr.unpersist()
+
+
+def test_cyclic_doc_tree_depth_independent_of_batch(spark):
+    # root 0 <- 1 <- 2; 3 <-> 4 a cycle with 5 behind it; span 6 dropped;
+    # 7 points at the dropped 6
+    cyc = [("cyc", 0, -1), ("cyc", 1, 0), ("cyc", 2, 1), ("cyc", 3, 4),
+           ("cyc", 4, 3), ("cyc", 5, 4), ("cyc", 7, 6)]
+    big = [("big", i, i - 1) for i in range(200)]
+
+    def join_rows(rows):
+        return spark.createDataFrame(
+            [(d, i, p, "redirect" if p >= 0 else "root", None) for d, i, p in rows],
+            "doc_id string, span_idx int, parent_idx int, join_kind string, depth int",
+        )
+
+    def tree_depth(rows):
+        jr = join_rows(rows)
+        feats = jr.select(
+            "doc_id",
+            "span_idx",
+            F.lit(1).alias("n_live"),
+            F.concat(F.lit("k"), F.col("span_idx")).alias("key"),
+            F.lit(None).cast("long").alias("cell"),
+            F.lit(1).cast("long").alias("nbytes"),
+        )
+        got = stats.doc_stats(feats, jr).filter(F.col("doc_id") == "cyc")
+        return got.select("tree_depth").first()[0]
+
+    assert tree_depth(cyc) == 3
+    assert tree_depth(cyc + big) == 3
+    depths = {
+        r.span_idx: r.depth
+        for r in stats.compute_depths(join_rows(cyc + big)).collect()
+        if r.doc_id == "cyc"
+    }
+    assert depths == {0: 0, 1: 1, 2: 2, 3: None, 4: None, 5: None, 7: None}
+
+
+def test_depths_long_redirect_chain(spark):
+    n = 10_000
+    jr = spark.range(n).select(
+        F.lit("chain").alias("doc_id"),
+        F.col("id").cast("int").alias("span_idx"),
+        (F.col("id") - 1).cast("int").alias("parent_idx"),
+    )
+    t0 = time.perf_counter()
+    got = stats.compute_depths(jr).agg(
+        F.max("depth"), F.count("depth"), F.max(F.when(F.col("span_idx") == n - 1, F.col("depth")))
+    ).first()
+    wall = time.perf_counter() - t0
+    assert tuple(got) == (n - 1, n, n - 1)
+    assert wall < 30, f"10^4-span chain took {wall:.1f}s"
 
 
 def test_tile_assignment_levels(spark):

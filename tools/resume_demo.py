@@ -68,7 +68,7 @@ def main() -> None:
     tiles = stage(
         "tiles", lambda: tiling.tile_rollup(tiling.tile_assignment(feats))
     )
-    st = stage("stats", lambda: stats.doc_stats(feats, jr))
+    st = stage("stats", lambda: stats.doc_stats(feats, jr, depth_complete=True))
     print(
         json.dumps(
             {

@@ -63,7 +63,7 @@ def main() -> None:
     n_tiles = tiling.tile_rollup(tiles).count()
     phases["tiles_s"] = round(time.time() - t1, 2)
     t1 = time.time()
-    st = stats.doc_stats(slim, jr)
+    st = stats.doc_stats(slim, jr, depth_complete=True)
     n_docs = st.count()
     phases["stats_s"] = round(time.time() - t1, 2)
     wall = time.time() - t0
