@@ -22,16 +22,14 @@ Two resolution modes:
 
   * ``resolve_exact`` — reference-parity sequential semantics: the per-doc
     DFS with true consume-once ordering and the spatial fallback cascade,
-    run as a vectorized kernel behind ``mapInArrow`` (r8 default; the
-    mapInPandas / applyInPandas entries remain as parity paths — docs are
-    independent and small, the natural unit of parallelism at 10^12-doc
-    scale; there is no cross-doc dataflow, so this parallelizes linearly).
-    Matches the pure-Python oracle (oracle/pycascade.py) bit-for-bit.
+    run as a vectorized kernel behind ``mapInArrow`` (operators/kernel.py)
+    — docs are independent and small, the natural unit of parallelism at
+    10^12-doc scale; there is no cross-doc dataflow, so this parallelizes
+    linearly. Matches the pure-Python oracle (oracle/pycascade.py)
+    bit-for-bit.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,9 +44,7 @@ def live_features(features: DataFrame) -> DataFrame:
     return features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
 
 
-def candidate_edges(
-    features: DataFrame, materialize: bool = False, dedup: bool = True
-) -> DataFrame:
+def candidate_edges(features: DataFrame, dedup: bool = True) -> DataFrame:
     """Union of candidate (child, parent, stage) edges for the five cascade
     stages. Returns columns:
     doc_id, child_idx, parent_idx, join_kind, priority, p_offset, root_idx.
@@ -79,18 +75,8 @@ def candidate_edges(
     parent row can never appear in its own surviving candidate list, and
     the per-(doc, key) prefix equals the per-parent prefix exactly. The
     window therefore runs once over the n-row target table instead of over
-    the edge fan-out.
-
-    materialize: persist ONE slim projection (drops the text/geometry
-    columns; keeps the join scalars + ref_tokens) that the probe/target
-    branches fan out from — a single upstream evaluation instead of one per
-    branch, without paying to cache the full feature table."""
+    the edge fan-out."""
     f = live_features(features)
-    if materialize:
-        f = f.select(
-            "doc_id", "span_idx", "kind", "media_ref", "offset",
-            "key", "valid", "root_idx", "ref_tokens",
-        ).persist()
 
     # target: spans addressable by key. The redirect prefix rule (rn up to
     # and including the first valid hit, per (doc_id, key), ordered by
@@ -127,12 +113,8 @@ def candidate_edges(
     # sides grow with the data, so a broadcast is not on the table anyway;
     # shuffled-hash keeps the window-exchange reuse and skips sort-merge's
     # per-side sorts, the build side is the narrower table, and AQE's
-    # skew-join splitting applies to SHJ. Env override for memory-tight
-    # clusters where the per-partition hash build is the binding risk
-    # ('merge') or to let the planner decide by size ('auto').
-    strategy = os.environ.get("SPARK_GRAFT_CASCADE_JOIN", "shuffle_hash")
-    if strategy in ("shuffle_hash", "merge", "broadcast"):
-        tgt = tgt.hint(strategy)
+    # skew-join splitting applies to SHJ.
+    tgt = tgt.hint("shuffle_hash")
 
     # probes: one row per pointer lookup, generated by a SINGLE scan — each
     # span contributes a small array of (ptr, probe) structs (0-1 redirect,
@@ -253,25 +235,23 @@ def _is_cheap_rescan(df: DataFrame) -> bool:
     return not any(node in plan for node in _EXPENSIVE_PLAN_NODES)
 
 
-def resolve_rank(
-    features: DataFrame, edges: DataFrame | None = None, materialize: bool = True
-) -> DataFrame:
-    """Single-window consume-once resolution (rank mode). Children with no
-    candidate edge fall to 'fallback_root' (the spatial fallback stages are
-    applied by operators.fallback on top of this). Returns
-    JOIN_RESULT_SCHEMA columns.
+def resolve_rank(features: DataFrame) -> DataFrame:
+    """Consume-once resolution (rank mode): one candidate equi-join plus
+    one ``min_by`` winner aggregate. Children with no candidate edge fall
+    to 'fallback_root' (the spatial fallback stages are applied by
+    operators.fallback on top of this). Returns JOIN_RESULT_SCHEMA columns.
 
-    materialize: persist one slim projection of the live features (no text/
+    Materializes one slim projection of the live features (no text/
     geometry columns) that the candidate probe/target branches AND the
     roots/unmatched branches all fan out from — a single upstream
     evaluation. At cluster scale this is the table the features stage
-    writes to storage. Skipped automatically when the input plan is
-    already a cheap re-scannable leaf (a checkpoint or file scan under
-    only projections/filters): re-checkpointing such an input costs one
-    full eager pass and buys nothing, since each branch re-scan is
-    exactly as cheap as scanning the new checkpoint (r8 measured: ~0.3 s
-    of the bench's q2 was this double materialization)."""
-    if materialize and edges is None and not _is_cheap_rescan(features):
+    writes to storage. Skipped when the input plan is already a cheap
+    re-scannable leaf (a checkpoint or file scan under only
+    projections/filters): re-checkpointing such an input costs one full
+    eager pass and buys nothing, since each branch re-scan is exactly as
+    cheap as scanning the new checkpoint (r8 measured: ~0.3 s of the
+    bench's q2 was this double materialization)."""
+    if not _is_cheap_rescan(features):
         # EAGER localCheckpoint, not persist(): (a) a lazy persist lets the
         # candidate branches of one cold job race to compute the uncached
         # upstream concurrently (measured ~5x the upstream cost); (b) a
@@ -284,8 +264,7 @@ def resolve_rank(
             "key", "valid", "root_idx", "ref_tokens", "n_live",
         ).localCheckpoint()
     f = live_features(features).select("doc_id", "span_idx", "root_idx")
-    if edges is None:
-        edges = candidate_edges(features, materialize=False, dedup=False)
+    edges = candidate_edges(features, dedup=False)
     # spans with no candidate edge fall to the doc root: modeled as a
     # synthetic lowest-priority edge per non-root span rather than a
     # left-anti join against the winners — the anti-join variant makes the
@@ -341,47 +320,35 @@ def resolve_rank(
     return out.select([c.name for c in JOIN_RESULT_SCHEMA.fields])
 
 
-def resolve_exact(features: DataFrame, method: str = "arrow") -> DataFrame:
-    """Reference-parity sequential cascade per doc (operators/kernel.py).
-
-    method='arrow' (default, r8): hash-repartition by doc_id +
-    sortWithinPartitions (docs contiguous in the Arrow stream) +
-    ``mapInArrow`` — numpy views straight off the Arrow buffers, no
-    pandas block-manager round trip (guide §4.2; the conversion was most
-    of the kernel stage's Python-side cost). method='batch': the prior
-    ``mapInPandas`` entry over the same kernel (kept as the independently
-    converted parity path). method='group': applyInPandas
-    one-frame-per-doc (the second parity check)."""
+def resolve_exact(features: DataFrame) -> DataFrame:
+    """Reference-parity sequential cascade per doc (operators/kernel.py):
+    hash-repartition by doc_id + sortWithinPartitions (docs contiguous in
+    the Arrow stream) + ``mapInArrow`` — numpy views straight off the
+    Arrow buffers, no pandas block-manager round trip (guide §4.2; the
+    conversion was most of the kernel stage's Python-side cost)."""
     from har2tree_spark.operators.kernel import (  # noqa: PLC0415
         KERNEL_COLS,
-        cascade_batch,
         cascade_batch_arrow,
-        cascade_kernel,
     )
 
     f = live_features(features).select(*KERNEL_COLS)
-    if method == "group":
-        return f.groupBy("doc_id").applyInPandas(cascade_kernel, JOIN_RESULT_SCHEMA)
     # full ordering done JVM-side (we shuffle anyway, and Tungsten sort is
-    # far cheaper than a pandas object-dtype sort per Arrow batch); the
-    # kernel trusts the (doc_id, offset, span_idx) stream order.
+    # far cheaper than a per-batch sort in Python); the kernel trusts the
+    # (doc_id, offset, span_idx) stream order.
     # EXPLICIT partition count (1 task/core): repartition("doc_id") without
     # a count lets AQE coalesce by shuffle BYTES — but this stage's cost is
     # Python-kernel CPU per row, not bytes, so AQE under-partitions it
     # (measured: 9 tasks on 8 cores = a 2-wave schedule with a one-task
     # second wave, ~40% idle; the whole N-vs-4N scaling gap lived there).
-    # One task per core, not 4: each kernel task pays a fixed Arrow-stream +
-    # Python-worker round-trip cost, so extra waves multiply overhead
-    # without adding parallelism (r8 measured, 20k-doc corpus: 128 tasks on
-    # 32 cores 2.56s vs 32 tasks 1.12s — and the gap persists at 10x rows
-    # because docs hash-spread evenly, so one wave has no straggler tail).
-    # SPARK_GRAFT_KERNEL_WAVES (default 1) scales it back up for clusters
-    # where per-partition skew, not per-task overhead, is the binding risk.
-    waves = max(1, int(os.environ.get("SPARK_GRAFT_KERNEL_WAVES", "1")))
-    n_parts = waves * f.sparkSession.sparkContext.defaultParallelism
-    clustered = f.repartition(n_parts, "doc_id").sortWithinPartitions(
-        "doc_id", "offset", "span_idx"
+    # One task per core, not more: each kernel task pays a fixed Arrow-
+    # stream + Python-worker round-trip cost, so extra waves multiply
+    # overhead without adding parallelism (r8 measured on 32 cores, q4
+    # kernel: 32 tasks 0.85 s, 64 tasks 1.10 s, 128 tasks 1.48 s — and the
+    # gap persists at 10x rows because docs hash-spread evenly, so one
+    # wave has no straggler tail).
+    n_parts = f.sparkSession.sparkContext.defaultParallelism
+    return (
+        f.repartition(n_parts, "doc_id")
+        .sortWithinPartitions("doc_id", "offset", "span_idx")
+        .mapInArrow(cascade_batch_arrow, JOIN_RESULT_SCHEMA)
     )
-    if method == "batch":
-        return clustered.mapInPandas(cascade_batch, JOIN_RESULT_SCHEMA)
-    return clustered.mapInArrow(cascade_batch_arrow, JOIN_RESULT_SCHEMA)

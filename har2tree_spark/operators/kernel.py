@@ -6,16 +6,12 @@ feature rows. The DFS is an explicit traversal — inherently sequential per
 doc, exactly like the reference — but embarrassingly parallel across docs,
 which is where the 10^12-doc parallelism lives.
 
-Two Spark entry points share the same per-doc core (``_run_doc``):
-
-  * ``cascade_kernel``  — applyInPandas per group (one pandas frame per
-    DOC; simple, used by tests);
-  * ``cascade_batch``   — mapInPandas over doc_id-clustered partitions:
-    one pandas frame per ARROW BATCH (thousands of docs), sliced per doc
-    with numpy index math, with carry-over buffering for a doc that
-    straddles a batch boundary. This drops the per-doc overhead from a
-    pandas-frame construction (~ms) to a numpy slice (~µs) — measured 3-4x
-    on the scaling bench — and is the default engine path.
+One Spark entry point, ``cascade_batch_arrow``, runs behind ``mapInArrow``
+over doc_id-clustered, (doc_id, offset, span_idx)-sorted partitions: one
+RecordBatch holds thousands of docs, each doc is a numpy slice of the
+batch's column views, and the trailing doc of a batch is carried over to
+the next so a doc that straddles batch boundaries runs once, whole. The
+independent check is the pure-Python oracle (oracle/pycascade.py).
 
 Float-sensitive geometry (point-in-region ray casting) calls the shared
 kernels in geo/geometry.py with the same operand order as the oracle, so
@@ -24,11 +20,11 @@ results are bit-identical.
 
 from __future__ import annotations
 
+import functools
 from collections import defaultdict
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from har2tree_spark.geo import grid
 from har2tree_spark.geo.geometry import REGION_RADIUS_DEG, hex_polygon, points_in_polygon
@@ -39,7 +35,7 @@ DANGLING_CAP = 1000
 
 _STAGES = ("redirect", "frame", "initiator", "referer", "resource")
 
-# fixed-width columns only: object/string columns dominate Arrow->pandas
+# fixed-width columns only: object/string columns dominate the Arrow
 # conversion cost, so keys/kinds/refs cross as int codes and the geometry is
 # recomputed in-kernel from key_num (vectorized integer hashes, geo/grid.py)
 KERNEL_COLS = [
@@ -50,39 +46,6 @@ KERNEL_COLS = [
 KC_TEXT, KC_HTML, KC_CSS, KC_JS = 0, 1, 2, 3
 KC_IFRAME, KC_REDIRECT = 7, 8
 _RESOURCE_PARENTS = (KC_HTML, KC_CSS, KC_JS)
-
-
-def _prep(pdf: pd.DataFrame) -> dict[str, np.ndarray | list]:
-    """Column arrays for a (doc_id, offset, span_idx)-sorted frame.
-    Nullable ints arrive as float64; -1 is the null sentinel (key space is
-    non-negative)."""
-    key = pdf["key_num"].to_numpy(dtype=np.float64, na_value=np.nan)
-    media = pdf["media_num"].to_numpy(dtype=np.float64, na_value=np.nan)
-    has_key = ~np.isnan(key)
-    key_i = np.where(has_key, key, -1).astype(np.int64)
-    kn = np.where(has_key, key, 0).astype(np.int64)
-    lon, lat = grid.np_point(kn)
-    cell = grid.np_cell(kn, grid.FINE_RES).astype(np.float64)
-    coarse = grid.np_cell(kn, grid.COARSE_RES).astype(np.float64)
-    nankey = ~has_key
-    lon[nankey] = np.nan
-    lat[nankey] = np.nan
-    cell[nankey] = np.nan
-    coarse[nankey] = np.nan
-    return {
-        "doc_id": pdf["doc_id"].to_numpy(),
-        "span_idx": pdf["span_idx"].to_numpy(),
-        "kind": pdf["kind_code"].to_numpy(dtype=np.int8),
-        "has_media": pdf["has_media"].to_numpy(dtype=bool),
-        "media": np.where(np.isnan(media), -1, media).astype(np.int64),
-        "key": key_i,
-        "valid": pdf["valid"].to_numpy(dtype=bool),
-        "lon": lon,
-        "lat": lat,
-        "cell": cell,
-        "coarse": coarse,
-        "ref_nums": pdf["ref_nums"].tolist(),
-    }
 
 
 def _run_doc(a: dict, lo: int, hi: int) -> tuple[list[int], list[int], list[str], np.ndarray]:
@@ -101,7 +64,7 @@ def _run_doc(a: dict, lo: int, hi: int) -> tuple[list[int], list[int], list[str]
     lat = a["lat"][lo:hi]
     cell = a["cell"][lo:hi]
     coarse = a["coarse"][lo:hi]
-    ref_nums = [r.tolist() if hasattr(r, "tolist") else r for r in a["ref_nums"][lo:hi]]
+    ref_nums = [r.tolist() for r in a["ref_nums"][lo:hi]]
 
     # positional candidate indexes (inverted hash indexes, the
     # all_url_requests / all_referer analogue of har2tree.py:331-339);
@@ -251,99 +214,14 @@ def _run_doc(a: dict, lo: int, hi: int) -> tuple[list[int], list[int], list[str]
     return out_child, out_parent, out_stage, np.asarray(depth, dtype=np.int64)
 
 
-def _emit(a: dict, chunks: list[tuple[int, list[int], list[int], list[str], np.ndarray]]) -> pd.DataFrame:
-    """Assemble one output frame from per-doc results (lo, children,
-    parents, stages, depth)."""
-    if not chunks:
-        return _empty()
-    doc_ids = []
-    span_out = []
-    parent_out = []
-    stage_out: list[str] = []
-    depth_out = []
-    span_idx = a["span_idx"]
-    did = a["doc_id"]
-    for lo, ch, par, st, dep in chunks:
-        loc = np.asarray(ch, dtype=np.int64)
-        doc_ids.append(np.repeat(did[lo], len(ch)))
-        span_out.append(span_idx[lo + loc])
-        parent_out.append(
-            np.asarray(
-                [span_idx[lo + p] if p >= 0 else -1 for p in par], dtype=np.int64
-            )
-        )
-        stage_out.extend(st)
-        depth_out.append(dep[loc])
-    return pd.DataFrame(
-        {
-            "doc_id": np.concatenate(doc_ids),
-            "span_idx": np.concatenate(span_out).astype(np.int32),
-            "parent_idx": np.concatenate(parent_out).astype(np.int32),
-            "join_kind": stage_out,
-            "priority": np.asarray([PRIORITY[s] for s in stage_out], dtype=np.int32),
-            "depth": np.concatenate(depth_out).astype(np.int32),
-        }
-    )
-
-
-def cascade_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas entry: one document per call."""
-    if len(pdf) == 0:
-        return _empty()
-    pdf = pdf.sort_values(["offset", "span_idx"], kind="stable").reset_index(drop=True)
-    a = _prep(pdf)
-    res = _run_doc(a, 0, len(pdf))
-    return _emit(a, [(0, *res)])
-
-
-def _process_frame(pdf: pd.DataFrame, presorted: bool = False) -> pd.DataFrame:
-    """Many docs in one frame: sort (unless the upstream already did — the
-    batch path sorts JVM-side inside the shuffle), find doc boundaries,
-    run each."""
-    if not presorted:
-        pdf = pdf.sort_values(
-            ["doc_id", "offset", "span_idx"], kind="stable"
-        ).reset_index(drop=True)
-    a = _prep(pdf)
-    did = a["doc_id"]
-    bounds = np.flatnonzero(np.concatenate(([True], did[1:] != did[:-1])))
-    bounds = np.append(bounds, len(did))
-    chunks = []
-    for i in range(len(bounds) - 1):
-        lo, hi = int(bounds[i]), int(bounds[i + 1])
-        chunks.append((lo, *_run_doc(a, lo, hi)))
-    return _emit(a, chunks)
-
-
-def cascade_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entry over doc_id-clustered partitions. A document may
-    straddle two Arrow batches: hold back the trailing doc of each batch
-    and prepend it to the next."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if len(pdf) == 0:
-            continue
-        last_doc = pdf["doc_id"].iloc[-1]
-        mask = pdf["doc_id"] == last_doc
-        carry = pdf[mask]
-        head = pdf[~mask]
-        if len(head):
-            yield _process_frame(head, presorted=True)
-    if carry is not None and len(carry):
-        yield _process_frame(carry, presorted=True)
-
-
 # --------------------------------------------------------------- Arrow ----
-# Arrow-native variant of cascade_batch (r8, guide §4.2): mapInArrow skips
-# the Arrow->pandas block-manager round trip that dominated the kernel
-# stage (measured: identity mapInPandas 0.66s vs identity mapInArrow 0.50s
-# vs kernel compute +0.05s on the 20k-doc corpus). Columns become numpy
-# views straight from the Arrow buffers; doc_id stays an Arrow string
-# array end-to-end (boundaries via dictionary codes, output via take), so
-# no Python string object is ever materialized per row.
+# mapInArrow skips the Arrow->pandas block-manager round trip that
+# dominated the kernel stage (r8, guide §4.2; measured: identity
+# mapInPandas 0.66s vs identity mapInArrow 0.50s vs kernel compute +0.05s
+# on the 20k-doc corpus). Columns become numpy views straight from the
+# Arrow buffers; doc_id stays an Arrow string array end-to-end (boundaries
+# via dictionary codes, output via take), so no Python string object is
+# ever materialized per row.
 
 _STAGE_NAMES = (
     "root", "redirect", "frame", "initiator", "referer", "resource",
@@ -354,8 +232,7 @@ _STAGE_PRIO = [PRIORITY[s] for s in _STAGE_NAMES]
 
 
 def _np_nullable(col, dtype=np.float64):
-    """Arrow column -> numpy with nulls as NaN (matches the pandas path's
-    na_value=np.nan conversion)."""
+    """Arrow column -> numpy float64 with nulls as NaN."""
     import pyarrow.compute as pc  # noqa: PLC0415
 
     if col.null_count:
@@ -364,8 +241,9 @@ def _np_nullable(col, dtype=np.float64):
 
 
 def _prep_arrow(batch) -> dict:
-    """Prepared-array dict (same contract as ``_prep``) from a RecordBatch
-    of KERNEL_COLS rows sorted by (doc_id, offset, span_idx)."""
+    """Prepared-array dict (the ``_run_doc`` contract) from a RecordBatch
+    of KERNEL_COLS rows sorted by (doc_id, offset, span_idx). Nullable ints
+    arrive as NaN; -1 is the null sentinel (key space is non-negative)."""
     key = _np_nullable(batch.column("key_num"))
     media = _np_nullable(batch.column("media_num"))
     has_key = ~np.isnan(key)
@@ -448,7 +326,8 @@ def _process_block(did_codes: np.ndarray, a: dict):
 
 def cascade_batch_arrow(batches) -> Iterator:
     """mapInArrow entry over doc_id-clustered, (doc_id, offset, span_idx)-
-    sorted partitions; same carry-over contract as ``cascade_batch``."""
+    sorted partitions. A document may straddle Arrow batches: hold back the
+    trailing doc of each batch and prepend it to the next."""
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
 
@@ -479,22 +358,13 @@ def cascade_batch_arrow(batches) -> Iterator:
 # function of the cell id, and the zipf hot-key pool means the same few
 # cells dominate fallback_knn probes across documents, so a bounded
 # memo turns the per-call np_ring arithmetic + element boxing into a
-# dict hit. Python-list values make the loop below iterate native ints
+# cache hit. Python-list values make the loop below iterate native ints
 # (no per-element numpy unboxing) and are never mutated by callers.
-# Bounded insert-only (~16k entries, a few MB): a reused worker keeps
-# the hot entries across tasks, cold cells just miss.
-_RING_CACHE: dict[tuple[int, int], list[int]] = {}
-_RING_CACHE_MAX = 1 << 14
-
-
+# LRU over ~16k entries (a few MB): a reused worker keeps the currently
+# hot cells across tasks, cold cells age out.
+@functools.lru_cache(maxsize=1 << 14)
 def _ring_cells(cell: int, r: int) -> list[int]:
-    key = (cell, r)
-    got = _RING_CACHE.get(key)
-    if got is None:
-        got = grid.np_ring(cell, r).tolist()
-        if len(_RING_CACHE) < _RING_CACHE_MAX:
-            _RING_CACHE[key] = got
-    return got
+    return grid.np_ring(cell, r).tolist()
 
 
 def _fallback(d, consumed, depth, attach_seq, kind, lon, lat, cell, coarse, root):
@@ -564,15 +434,3 @@ def _grid_d2(cell: np.ndarray, cands: np.ndarray, d: int) -> np.ndarray:
     _, dx, dy = grid.np_cell_xy(np.asarray([int(cell[d])], dtype=np.int64))
     return (ax - dx[0]) ** 2 + (ay - dy[0]) ** 2
 
-
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="object"),
-            "span_idx": pd.Series(dtype="int32"),
-            "parent_idx": pd.Series(dtype="int32"),
-            "join_kind": pd.Series(dtype="object"),
-            "priority": pd.Series(dtype="int32"),
-            "depth": pd.Series(dtype="int32"),
-        }
-    )

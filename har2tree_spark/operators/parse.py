@@ -195,17 +195,3 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
         F.transform(F.col("ref_tokens"), grid.col_key_num),
     )
 
-
-def quarantine_empty_docs(docs: DataFrame) -> DataFrame:
-    """Docs with no surviving spans (Har2TreeError analogue,
-    har2tree.py:244-248) — routed to lineage, not failure."""
-    live = F.filter(
-        F.coalesce(F.col("spans"), F.array()),
-        lambda s: ~(
-            (_span_key(s).isNull())
-            & (_resolve_media(F.coalesce(s["media_ref"], F.lit(""))) == "")
-            & (F.coalesce(s["text"], F.lit("")) == "")
-        )
-        & (F.coalesce(s["kind"], F.lit("")) != "empty"),
-    )
-    return docs.filter(F.size(live) == 0).select("doc_id")

@@ -57,71 +57,6 @@ def tile_rollup(tiles: DataFrame) -> DataFrame:
     )
 
 
-def tile_rollup_hierarchical(
-    features: DataFrame, levels: tuple[int, ...] = grid.TILE_LEVELS
-) -> DataFrame:
-    """Scale-path rollup: aggregate ONCE at the finest level, then roll the
-    (much smaller) per-cell aggregate up the hierarchy with integer parent
-    arithmetic — the shuffle moves #distinct-fine-cells rows instead of
-    n_levels x n_spans rows (4x less at the default 4 levels; the gap grows
-    with level count). n_spans is exact; n_docs uses HLL sketches
-    (hll_sketch_agg at the fine level, hll_union_agg upward), which merge
-    losslessly across levels — estimates differ slightly from
-    ``tile_rollup``'s per-level approx_count_distinct but carry the same
-    accuracy class. Returns (level, cell, n_spans, n_docs)."""
-    fine_res = max(levels)
-    f = features.filter(F.col("cell").isNotNull())
-    fine = (
-        f.groupBy(grid.col_cell_parent(F.col("cell"), grid.FINE_RES, fine_res).alias("cell"))
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.hll_sketch_agg("doc_id").alias("sk"),
-        )
-    )
-    parts = []
-    cur = fine
-    prev = fine_res
-    for lvl in sorted(levels, reverse=True):
-        if lvl != prev:
-            cur = (
-                cur.groupBy(
-                    grid.col_cell_parent(F.col("cell"), prev, lvl).alias("cell")
-                )
-                .agg(
-                    F.sum("n_spans").alias("n_spans"),
-                    F.hll_union_agg("sk").alias("sk"),
-                )
-            )
-            prev = lvl
-        parts.append(
-            cur.select(
-                F.lit(lvl).cast("int").alias("level"),
-                "cell",
-                F.col("n_spans").cast("long").alias("n_spans"),
-                F.hll_sketch_estimate("sk").cast("long").alias("n_docs"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def hot_cells(tiles: DataFrame, level: int, threshold_ratio: float = 0.01) -> DataFrame:
-    """Cells holding more than ``threshold_ratio`` of all spans at a level —
-    the mega-hostname-subtree detector (skew handling input)."""
-    at = tiles.filter(F.col("level") == level)
-    total = at.count()
-    if total == 0:
-        return at.select("cell").limit(0)
-    return (
-        at.groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= F.lit(max(1, int(total * threshold_ratio))))
-        .select("cell", "n")
-    )
-
-
 def compact_cells(cells: DataFrame, res: int = grid.FINE_RES, min_res: int = 0) -> DataFrame:
     """H3 compactCells analogue over a distinct (doc_id, cell) set at a single
     resolution: any parent whose 4 children are ALL present replaces them;

@@ -7,7 +7,7 @@ per-stage lineage. Shuffle budget at scale:
   cascade exact  repartition(doc_id) + mapInArrow    1 shuffle
   tiles          narrow projection                   0 shuffles
   tile_rollup    groupBy(level, cell)                1 shuffle (AQE-skew
-                                                     aware; hot cells salted)
+                                                     aware)
   doc_stats      groupBy(doc_id) over the features,  no driver action: rank-
                  ONE groupBy(doc_id) over the        mode depths double
                  cascade output (chain + depth)      pointers inside each
@@ -22,13 +22,9 @@ from pyspark.sql import functions as F
 from har2tree_spark.operators import cascade, parse, stats, tiling
 
 
-def run_pipeline(
-    docs: DataFrame,
-    mode: str = "exact",
-    with_depths: bool = True,
-) -> dict[str, DataFrame]:
+def run_pipeline(docs: DataFrame, mode: str = "exact") -> dict[str, DataFrame]:
     """Returns the engine's output tables. ``mode``: 'exact' (reference
-    parity, Arrow kernel) or 'rank' (single-window relational). Only the
+    parity, Arrow kernel) or 'rank' (relational: one equi-join + min_by). Only the
     exact kernel fills ``depth``, so rank-mode doc_stats re-derives it."""
     features = parse.parse_documents(docs)
     join_result = (
@@ -41,11 +37,10 @@ def run_pipeline(
         "tiles": tiles,
         "tile_rollup": tiling.tile_rollup(tiles),
         "quarantine": features.filter(F.col("n_live") == 0).select("doc_id").distinct(),
-    }
-    if with_depths:
-        out["doc_stats"] = stats.doc_stats(
+        "doc_stats": stats.doc_stats(
             features, join_result, depth_complete=(mode == "exact")
-        )
+        ),
+    }
     # span-sequence invariant surface: the document rows pass through
     # untouched, joined with their computed root — proving the engine only
     # re-parents, never mutates/reorders spans (BASELINE.json input_hint)

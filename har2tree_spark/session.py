@@ -55,12 +55,8 @@ def get_spark(
         # stage writes 13 ms. The sort writer is the scale-safe default
         # everywhere (one data + one index file per map task regardless of
         # reduce count); bypass only ever wins when partitions are few AND
-        # file metadata ops are cheap. Env override for hosts where the
-        # bypass path is profitable.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"),
-        )
+        # file metadata ops are cheap, and no host measured so far is one.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         # Unix-domain sockets for the executor<->Python-worker channel
         # (Spark 4.1). The channel is host-local by construction on any
         # deployment (workers fork next to their executor), so skipping

@@ -11,12 +11,6 @@ from har2tree_spark.oracle import pycascade
 from har2tree_spark.schema import DOCUMENTS_SCHEMA, PRIORITY
 
 
-def _spark_exact(spark, docs):
-    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    out = resolve_exact(parse_documents(df)).toPandas()
-    return out.sort_values(["doc_id", "span_idx"]).reset_index(drop=True)
-
-
 def _oracle(docs):
     rows = pycascade.cascade_docs(docs)
     out = pd.DataFrame(
@@ -27,8 +21,13 @@ def _oracle(docs):
 
 
 def _assert_match(spark, docs):
-    got = _spark_exact(spark, docs)
-    want = _oracle(docs)
+    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
+    _assert_frames_equal(resolve_exact(parse_documents(df)).toPandas(), _oracle(docs))
+
+
+def _assert_frames_equal(got, want):
+    """``got`` in any row order against the sorted oracle frame."""
+    got = got.sort_values(["doc_id", "span_idx"]).reset_index(drop=True)
     assert len(got) == len(want), f"row count {len(got)} != {len(want)}"
     for col in ["doc_id", "span_idx", "parent_idx", "join_kind", "priority", "depth"]:
         mism = (got[col].to_numpy() != want[col].to_numpy())
@@ -116,28 +115,6 @@ def test_random_docs_exact_large_skewed(spark):
     _assert_match(spark, docs)
 
 
-def test_batch_and_group_methods_agree(spark):
-    docs = gen_docs(77, 100)
-    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    feats = parse_documents(df)
-    cols = ["doc_id", "span_idx", "parent_idx", "join_kind", "priority", "depth"]
-    a = (
-        resolve_exact(feats, method="batch")
-        .toPandas()
-        .sort_values(["doc_id", "span_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        resolve_exact(feats, method="group")
-        .toPandas()
-        .sort_values(["doc_id", "span_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    for col in cols:
-        assert (a[col].to_numpy() == b[col].to_numpy()).all(), col
-
-
 def test_rank_mode_contract(spark):
     """Rank mode: every live non-root span gets exactly one parent; priority
     respected (a child with a redirect candidate is never claimed by a
@@ -197,29 +174,108 @@ def test_stack_walk_cross_engine_fuzz(spark):
         assert got[i] == pycascade._resolve_media(v), (v, got[i])
 
 
-def test_arrow_kernel_matches_pandas_kernel(spark):
-    """The r8 mapInArrow kernel entry must be row-identical to the
-    mapInPandas entry (same _run_doc core, independently converted
-    boundaries: nullable ints, list offsets, carry-over slicing). Runs
-    with a tiny Arrow batch size so docs straddle batch boundaries
-    constantly — the carry/slice path (Table concat, sliced ListArray
-    offsets) is the riskiest code and must be exercised, not dodged by
-    everything fitting in one 10k-row batch."""
-    from har2tree_spark.datagen import GenConfig, gen_documents_df
-    from har2tree_spark.operators.parse import parse_documents
-
-    docs = gen_documents_df(
-        spark, 400, seed=11,
-        cfg=GenConfig(max_spans=24, p_hot=0.5, p_orphan=0.2, p_dup_invalid=0.2),
-        include_scenarios=True,
+def test_arrow_kernel_straddling_docs_match_oracle(spark):
+    """The mapInArrow kernel's carry-over path (a doc held back across
+    Arrow batch boundaries: Table concat, sliced ListArray offsets) is the
+    riskiest code in the kernel, so it runs against the oracle with a tiny
+    batch size instead of everything fitting in one 10k-row batch. Eight
+    long docs make some doc span three or more batches, which the
+    in-process run asserts rather than assumes."""
+    cfg = GenConfig(max_spans=24, p_hot=0.5, p_orphan=0.2, p_dup_invalid=0.2)
+    docs = (
+        gen_docs(11, 400, cfg)
+        + gen_docs(11, 8, GenConfig(max_spans=160, p_hot=0.5, p_orphan=0.2), start=400)
+        + scenario_docs()
     )
-    feats = parse_documents(docs).localCheckpoint()
+    want = _oracle(docs)
+    feats = parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA)).localCheckpoint()
+    batch_rows = 37
+
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "37")
+    spark.conf.set(key, str(batch_rows))
     try:
-        a = sorted(tuple(r) for r in resolve_exact(feats, method="arrow").collect())
-        b = sorted(tuple(r) for r in resolve_exact(feats, method="batch").collect())
+        got = resolve_exact(feats).toPandas()
     finally:
         spark.conf.set(key, prev)
-    assert a == b
+    _assert_frames_equal(got, want)
+
+    batches = _kernel_table(feats).to_batches(max_chunksize=batch_rows)
+    spanned = pd.Series(
+        [d for b in batches for d in set(b.column("doc_id").to_pylist())]
+    ).value_counts()
+    assert spanned.max() >= 3, f"no doc spans 3+ batches: {spanned.max()}"
+    _assert_frames_equal(_run_kernel(batches), want)
+
+
+def _kernel_table(feats):
+    """Live kernel rows as one Arrow table in the (doc_id, offset, span_idx)
+    order ``resolve_exact`` feeds ``cascade_batch_arrow``."""
+    from har2tree_spark.operators.cascade import live_features
+    from har2tree_spark.operators.kernel import KERNEL_COLS
+
+    return (
+        live_features(feats)
+        .select(*KERNEL_COLS)
+        .orderBy("doc_id", "offset", "span_idx")
+        .toArrow()
+        .combine_chunks()
+    )
+
+
+def _run_kernel(batches):
+    """``cascade_batch_arrow`` in-process over ``batches``, as pandas."""
+    import pyarrow as pa
+
+    from har2tree_spark.operators.kernel import cascade_batch_arrow
+
+    return pa.Table.from_batches(list(cascade_batch_arrow(iter(batches)))).to_pandas()
+
+
+def test_batch_and_group_methods_agree(spark):
+    """The kernel's rows do not depend on where batch boundaries fall:
+    fixed 37-row batches (docs split across batches) and one batch per
+    doc group (no doc split) give the same rows, and both match the
+    oracle."""
+    docs = gen_docs(77, 100)
+    table = _kernel_table(parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA)))
+    batched = _run_kernel(table.to_batches(max_chunksize=37))
+
+    ids = table.column("doc_id").to_pylist()
+    starts = [0, *(i for i in range(1, len(ids)) if ids[i] != ids[i - 1]), len(ids)]
+    groups = [
+        table.slice(lo, hi - lo).combine_chunks().to_batches()[0]
+        for lo, hi in zip(starts, starts[1:])
+    ]
+    assert len(groups) == len(set(ids))
+    grouped = _run_kernel(groups)
+
+    want = _oracle(docs)
+    _assert_frames_equal(batched, want)
+    _assert_frames_equal(grouped, want)
+
+
+def test_ring_cache_keeps_newly_hot_cell():
+    """The fallback_knn ring memo is an LRU: once it is full, a cell that
+    turns hot later still gets cache hits."""
+    import numpy as np
+
+    from har2tree_spark.geo import grid
+    from har2tree_spark.operators.kernel import _ring_cells
+
+    cap = _ring_cells.cache_info().maxsize
+    cells = grid.np_cell(np.arange(cap + 1, dtype=np.int64), grid.FINE_RES).tolist()
+    _ring_cells.cache_clear()
+    try:
+        for c in cells[:cap]:
+            _ring_cells(c, 1)
+        assert _ring_cells.cache_info().currsize == cap
+        hot = cells[cap]
+        want = grid.np_ring(hot, 1).tolist()
+        assert _ring_cells(hot, 1) == want
+        hits = _ring_cells.cache_info().hits
+        for _ in range(5):
+            assert _ring_cells(hot, 1) == want
+        assert _ring_cells.cache_info().hits == hits + 5
+    finally:
+        _ring_cells.cache_clear()

@@ -1,4 +1,4 @@
-"""Spatial fallback chain, PIP R-tree join, ring-kNN, zonal join, skew."""
+"""Spatial fallback chain, PIP R-tree join, ring-kNN, zonal join."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from har2tree_spark.datagen import GenConfig, gen_docs
 from har2tree_spark.geo import grid
 from har2tree_spark.geo.geometry import hex_polygon
-from har2tree_spark.operators import skew, zonal
+from har2tree_spark.operators import zonal
 from har2tree_spark.operators.cascade import resolve_rank
 from har2tree_spark.operators.fallback import knn_join, pip_join, resolve_with_fallbacks
 from har2tree_spark.operators.parse import parse_documents
@@ -113,26 +113,6 @@ def test_zonal_stats_polygons(spark):
     pix = zonal.rasterize_spans(feats)
     zs = zonal.zonal_stats(pix, [("z1", hex_polygon(lon1, lat1, 0.5))]).toPandas()
     assert len(zs) == 1 and zs.n_pixels.iloc[0] == 2  # both k1 pixels
-
-
-def test_salted_cell_counts_match_plain(spark):
-    docs = gen_docs(41, 60, GenConfig(p_hot=0.6))
-    feats = parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))
-    plain = (
-        feats.filter("cell is not null")
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_spans"))
-        .toPandas()
-        .set_index("cell")["n_spans"]
-        .sort_index()
-    )
-    salted = (
-        skew.salted_cell_counts(feats, buckets=8)
-        .toPandas()
-        .set_index("cell")["n_spans"]
-        .sort_index()
-    )
-    assert (plain == salted).all()
 
 
 def test_knn_two_phase_identical(spark):

@@ -64,9 +64,13 @@ def test_cascade_exact_single_shuffle(spark, tmp_path):
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     jr = resolve_exact(parse_documents(spark.read.parquet(p)))
     plan = _plan(jr)
-    # one Exchange (hash by doc_id), then sort + python map — nothing else
+    # one Exchange (hash by doc_id, one task per core), then sort + ONE
+    # Arrow map — the only kernel path, no pandas entry anywhere
     assert _n_exchanges(plan) == 1, plan
-    assert "MapInArrow" in plan or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
+    n_parts = spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(doc_id#\d+, {n_parts}\)", plan), plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
+    assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_filter_pushdown_to_scan(spark):
@@ -124,12 +128,9 @@ def test_marker_rollup_single_shuffle(spark, tmp_path):
     assert _n_exchanges(_plan(roll)) <= 2
 
 
-def test_rank_cascade_plan_shape(spark, tmp_path, monkeypatch):
-    import re
-
+def test_rank_cascade_plan_shape(spark, tmp_path):
     from har2tree_spark.operators.cascade import resolve_rank
 
-    monkeypatch.delenv("SPARK_GRAFT_CASCADE_JOIN", raising=False)
     p = str(tmp_path / "docs9")
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     feats = parse_documents(spark.read.parquet(p))
@@ -149,9 +150,8 @@ def test_rank_cascade_plan_shape(spark, tmp_path, monkeypatch):
     assert joins == 1, f"rank cascade must plan exactly 1 join, got {joins}"
     assert "LeftAnti" not in plan
     # the join must be SHUFFLED-HASH reusing the window's (doc_id, key)
-    # partitioning on the target side (default SPARK_GRAFT_CASCADE_JOIN):
-    # no driver broadcast build, and the probe/window input exchanges
-    # materialize concurrently
+    # partitioning on the target side: no driver broadcast build, and the
+    # probe/window input exchanges materialize concurrently
     assert re.search(r"\(\d+\) ShuffledHashJoin", plan), plan
     assert "BroadcastExchange" not in plan
     # one exchange for the target-side redirect-prefix window (reused by
@@ -326,3 +326,19 @@ def test_cookie_surface_single_scan(spark, tmp_path):
     rplan = rep._jdf.queryExecution().executedPlan().toString()
     assert rplan.count("Scan binaryFile") == 0, rplan
     assert rplan.count("FlatMapGroupsInPandas") == 0, rplan
+
+
+def test_only_session_reads_environment():
+    """Every SPARK_GRAFT_* knob lives in session.py: no other package
+    module reads the process environment."""
+    from pathlib import Path
+
+    import har2tree_spark
+
+    root = Path(har2tree_spark.__file__).parent
+    readers = sorted(
+        str(f.relative_to(root))
+        for f in root.rglob("*.py")
+        if f != root / "session.py" and re.search(r"os\.environ|getenv", f.read_text())
+    )
+    assert readers == [], readers

@@ -205,18 +205,6 @@ def test_compact_cells_law(spark):
     assert got == sorted([parent, lone])
 
 
-def test_hot_cells_detects_skew(spark):
-    hot = [{"kind": "img", "text": "k1", "media_ref": "", "offset": i} for i in range(50)]
-    cold = [{"kind": "img", "text": f"k{1000+i}", "media_ref": "", "offset": 100 + i} for i in range(5)]
-    df = spark.createDataFrame(
-        [{"doc_id": "d", "spans": hot + cold}], DOCUMENTS_SCHEMA
-    )
-    tiles = tiling.tile_assignment(parse_documents(df))
-    hc = tiling.hot_cells(tiles, grid.TILE_LEVELS[-1], threshold_ratio=0.3).toPandas()
-    assert len(hc) == 1
-    assert int(hc.cell.iloc[0]) == int(grid.np_cell(np.asarray([1]), grid.FINE_RES)[0])
-
-
 def test_cell_rollup_mixed_content(spark):
     docs = [
         {
@@ -231,35 +219,3 @@ def test_cell_rollup_mixed_content(spark):
     r = stats.cell_rollup(parse_documents(df)).toPandas()
     assert len(r) == 1 and bool(r.mixed_content.iloc[0])
     assert r.n_spans.iloc[0] == 2 and r.n_keys.iloc[0] == 1
-
-
-def test_tile_rollup_hierarchical_matches(spark):
-    """Hierarchical rollup: n_spans exact-matches the direct rollup at
-    every level; HLL doc estimates stay within the sketch accuracy class."""
-    docs = spark.createDataFrame(gen_docs(31, 150), DOCUMENTS_SCHEMA)
-    feats = parse_documents(docs)
-    direct = (
-        tiling.tile_rollup(tiling.tile_assignment(feats))
-        .selectExpr("level", "cell", "n_spans")
-        .toPandas()
-        .sort_values(["level", "cell"])
-        .reset_index(drop=True)
-    )
-    hier = tiling.tile_rollup_hierarchical(feats).toPandas()
-    h_spans = (
-        hier[["level", "cell", "n_spans"]]
-        .sort_values(["level", "cell"])
-        .reset_index(drop=True)
-    )
-    assert direct.equals(h_spans)
-    # exact distinct-doc counts bound the sketch estimates (within 10%)
-    tiles = tiling.tile_assignment(feats)
-    exact = (
-        tiles.groupBy("level", "cell")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .toPandas()
-        .set_index(["level", "cell"])["nd"]
-    )
-    for _, r in hier.iterrows():
-        e = exact[(r.level, r.cell)]
-        assert abs(r.n_docs - e) <= max(1, 0.1 * e), (r.level, r.cell, r.n_docs, e)
