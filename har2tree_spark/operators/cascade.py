@@ -250,7 +250,9 @@ def resolve_rank(features: DataFrame) -> DataFrame:
     projections/filters): re-checkpointing such an input costs one full
     eager pass and buys nothing, since each branch re-scan is exactly as
     cheap as scanning the new checkpoint (r8 measured: ~0.3 s of the
-    bench's q2 was this double materialization)."""
+    bench's q2 was this double materialization). ``pipeline.run_pipeline``
+    always hands it the features checkpoint, so there it is skipped;
+    callers that pass lazy parse output get it."""
     if not _is_cheap_rescan(features):
         # EAGER localCheckpoint, not persist(): (a) a lazy persist lets the
         # candidate branches of one cold job race to compute the uncached

@@ -46,11 +46,19 @@ def partition_lineage(
         if "doc_id" in df.columns
         else F.lit(None).cast("long")
     )
+    # parse output marks a quarantined doc with n_live == 0 on its
+    # placeholder row; frames without n_live quarantine nothing
+    quarantined = (
+        F.count_distinct(F.when(F.col("n_live") == 0, F.col("doc_id")))
+        if {"doc_id", "n_live"} <= set(df.columns)
+        else F.lit(0)
+    )
     return (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(
             doc_count.alias("doc_count"),
             F.count("*").alias("span_count"),
+            quarantined.alias("quarantined"),
         )
         .select(
             F.lit(run_id).alias("run_id"),
@@ -58,7 +66,7 @@ def partition_lineage(
             F.col("partition_id").cast("int"),
             F.col("doc_count").cast("long"),
             F.col("span_count").cast("long"),
-            F.lit(0).cast("long").alias("quarantined"),
+            F.col("quarantined").cast("long"),
             F.lit(snapshot_id).cast("long").alias("snapshot_id"),
             F.lit(0).cast("long").alias("wall_ms"),
         )

@@ -1,7 +1,14 @@
 """End-to-end pipeline: documents -> features -> cascade -> tiles -> stats.
 
-The flagship flow (reference CrawledTree lifecycle, SURVEY.md §3) with
-per-stage lineage. Shuffle budget at scale:
+The flagship flow (reference CrawledTree lifecycle, SURVEY.md §3): the
+tree is built once and every output reads that one tree. Two eager
+materialization points per run, both ``localCheckpoint``:
+
+  features       parse output, every column (the public ``features``)
+  join_result    the cascade over the features checkpoint
+
+Every other output is a lazy frame over those two, so writing the outputs
+re-runs neither parse nor the cascade. Shuffle budget at scale:
 
   parse          narrow (array-level ops)            0 shuffles
   cascade exact  repartition(doc_id) + mapInArrow    1 shuffle
@@ -25,11 +32,16 @@ from har2tree_spark.operators import cascade, parse, stats, tiling
 def run_pipeline(docs: DataFrame, mode: str = "exact") -> dict[str, DataFrame]:
     """Returns the engine's output tables. ``mode``: 'exact' (reference
     parity, Arrow kernel) or 'rank' (relational: one equi-join + min_by). Only the
-    exact kernel fills ``depth``, so rank-mode doc_stats re-derives it."""
-    features = parse.parse_documents(docs)
-    join_result = (
-        cascade.resolve_exact(features) if mode == "exact" else cascade.resolve_rank(features)
-    )
+    exact kernel fills ``depth``, so rank-mode doc_stats re-derives it.
+
+    Building the dict runs parse and the cascade eagerly, once each: the
+    features and the join result are local checkpoints (not ``persist()``,
+    for the reason in ``cascade.resolve_rank``), and the other outputs are
+    lazy frames that read them. A checkpoint is a cheap re-scan leaf, so
+    ``resolve_rank`` skips its own slim checkpoint of the features."""
+    features = parse.parse_documents(docs).localCheckpoint()
+    resolve = cascade.resolve_exact if mode == "exact" else cascade.resolve_rank
+    join_result = resolve(features).localCheckpoint()
     tiles = tiling.tile_assignment(features)
     out: dict[str, DataFrame] = {
         "features": features,

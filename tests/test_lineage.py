@@ -2,10 +2,11 @@
 
 import tempfile
 
-from har2tree_spark.datagen import gen_docs
+from har2tree_spark.datagen import gen_docs, scenario_docs
 from har2tree_spark.operators.cascade import resolve_exact
 from har2tree_spark.operators.lineage import CheckpointedRun, partition_lineage
 from har2tree_spark.operators.parse import parse_documents
+from har2tree_spark.pipeline import run_pipeline
 from har2tree_spark.schema import DOCUMENTS_SCHEMA
 
 
@@ -17,6 +18,17 @@ def test_partition_lineage_counts(spark):
     lin = partition_lineage(feats, "run1", "parse").toPandas()
     assert lin.span_count.sum() == feats.count()
     assert (lin.run_id == "run1").all() and (lin.stage == "parse").all()
+
+
+def test_partition_lineage_quarantined(spark):
+    df = spark.createDataFrame(scenario_docs() + gen_docs(53, 40), DOCUMENTS_SCHEMA)
+    feats = parse_documents(df)
+    lin = partition_lineage(feats, "run1", "parse").toPandas()
+    q = run_pipeline(df, mode="rank")["quarantine"].toPandas()
+    assert "scn-empty" in set(q.doc_id)
+    assert lin.quarantined.sum() == len(q)
+    # a frame without n_live quarantines nothing
+    assert (partition_lineage(df, "run1", "docs").toPandas().quarantined == 0).all()
 
 
 def test_checkpoint_resume(spark):

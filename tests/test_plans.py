@@ -7,6 +7,7 @@ aggregation exchange)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from har2tree_spark.datagen import gen_documents_df
@@ -180,21 +181,57 @@ def _jobs_started(spark, group: str, build):
 
 
 def test_rank_pipeline_build_jobs(spark, tmp_path):
-    """Building the rank-mode output frames runs only the rank cascade's
-    features checkpoint; depths need no job of their own (no probe, no
-    max-size count, no checkpointed doubling loop)."""
+    """Building the rank-mode output frames runs exactly the two
+    materializations -- the features checkpoint and the rank cascade over
+    it -- and nothing else; the rank cascade takes the checkpoint as a
+    cheap re-scan leaf (no slim checkpoint of its own), and depths need no
+    job of their own (no probe, no max-size count, no checkpointed
+    doubling loop)."""
     from har2tree_spark.operators import stats
+    from har2tree_spark.operators.cascade import _is_cheap_rescan, resolve_rank
     from har2tree_spark.pipeline import run_pipeline
 
     p = str(tmp_path / "docs_jobs")
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     docs = spark.read.parquet(p)
     out, n_build = _jobs_started(spark, "rank-build", lambda: run_pipeline(docs, mode="rank"))
-    assert n_build <= 1, f"building rank-mode outputs started {n_build} jobs"
+    feats, n_feats = _jobs_started(
+        spark, "rank-feats", lambda: parse_documents(docs).localCheckpoint()
+    )
+    assert _is_cheap_rescan(feats)
+    _, n_cascade = _jobs_started(
+        spark, "rank-cascade", lambda: resolve_rank(feats).localCheckpoint()
+    )
+    assert n_feats == 1, f"the features checkpoint started {n_feats} jobs"
+    assert n_build == n_feats + n_cascade, (
+        f"building rank-mode outputs started {n_build} jobs, "
+        f"want {n_feats} (features) + {n_cascade} (rank cascade)"
+    )
     _, n_depths = _jobs_started(
         spark, "rank-depths", lambda: stats.compute_depths(out["join_result"])
     )
     assert n_depths == 0, f"compute_depths started {n_depths} jobs"
+
+
+@pytest.mark.parametrize("mode", ["exact", "rank"])
+def test_pipeline_outputs_read_checkpoints(spark, tmp_path, mode):
+    """Parse once, cascade once: the written outputs read the features and
+    join-result checkpoints, so their plans re-run neither parse (its
+    posexplode; tile_assignment's own inline Generate is expected) nor the
+    cascade (doc_stats has no kernel and only its base/per-doc join)."""
+    from har2tree_spark.pipeline import run_pipeline
+
+    p = str(tmp_path / f"docs_once_{mode}")
+    gen_documents_df(spark, 50, seed=3).write.parquet(p)
+    out = run_pipeline(spark.read.parquet(p), mode=mode)
+    plans = {
+        name: out[name]._jdf.queryExecution().optimizedPlan().toString()
+        for name in ("join_result", "tile_rollup", "doc_stats")
+    }
+    for name, plan in plans.items():
+        assert "posexplode" not in plan, f"{name} re-runs parse:\n{plan}"
+    assert "MapInArrow" not in plans["doc_stats"], plans["doc_stats"]
+    assert len(re.findall(r"\bJoin\b", plans["doc_stats"])) == 1, plans["doc_stats"]
 
 
 def test_lsh_fused_signatures_match_per_table(spark):

@@ -8,7 +8,7 @@ input. This script:
   1. generates the seeded bench corpus once (deterministic, distributed);
   2. runs tools/scaling_job.py in a fresh process per level (own JVM each,
      shuffle partitions scaled with cores);
-  3. writes BENCH/BASELINE.md with both throughputs + efficiency.
+  3. writes BENCH/SCALING_RUN.md with both throughputs + efficiency.
 
 Usage: python tools/bench_scaling.py [n_docs] [N] [xN]
 """
@@ -40,20 +40,25 @@ def run_level(corpus: str, cpus: int) -> dict:
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
-    # Default N=4 vs 4N=16: a local[k] python-stage job runs ~2k hot
-    # threads (k JVM task threads + k python workers). With 32 host cores,
-    # local[32] oversubscribes 2x and measures contention, not scaling —
-    # a real 4N-executor cluster adds machines, not threads on one box.
-    # local[4] vs local[16] keeps both levels un-oversubscribed.
-    n_small = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    n_big = int(sys.argv[3]) if len(sys.argv) > 3 else 16
+    # Default 4N = the cores this process may run on, N = a quarter of
+    # them: a local[k] python-stage job runs ~2k hot threads (k JVM task
+    # threads + k python workers), so a level above the core count
+    # oversubscribes the host and measures contention, not scaling — a
+    # real 4N-executor cluster adds machines, not threads on one box.
+    cores = len(os.sched_getaffinity(0))
+    n_small = int(sys.argv[2]) if len(sys.argv) > 2 else max(1, cores // 4)
+    n_big = int(sys.argv[3]) if len(sys.argv) > 3 else cores
     corpus = f"{REPO}/data/bench_corpus_{n_docs}"
 
     if not os.path.exists(corpus):
         from har2tree_spark.datagen import GenConfig, write_corpus  # noqa: PLC0415
         from har2tree_spark.session import get_spark  # noqa: PLC0415
 
-        spark = get_spark("gen_corpus", parallelism=32, driver_memory="16g")
+        # generation is distributed and streams rows per task: a quarter
+        # of physical memory (1-16 GB) is plenty and leaves the host room
+        phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+        heap_gb = min(16, max(1, phys_gb // 4))
+        spark = get_spark("gen_corpus", parallelism=cores, driver_memory=f"{heap_gb}g")
         write_corpus(
             spark, corpus, n_docs, seed=42,
             cfg=GenConfig(max_spans=32, p_hot=0.2, zipf_s=1.2),
