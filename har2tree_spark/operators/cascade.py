@@ -25,8 +25,13 @@ Two resolution modes:
     run as a vectorized kernel behind ``mapInArrow`` (operators/kernel.py)
     — docs are independent and small, the natural unit of parallelism at
     10^12-doc scale; there is no cross-doc dataflow, so this parallelizes
-    linearly. Matches the pure-Python oracle (oracle/pycascade.py)
-    bit-for-bit.
+    linearly. The kernel reads one row per document
+    (``resolve_doc_rows``): from the flat feature table that takes one
+    ``groupBy(doc_id)`` (one exchange, no sort); a streaming micro-batch
+    builds the rows from parse's array stage with no doc_id exchange
+    (only a round-robin spread when it has fewer input splits than
+    cores).
+    Matches the pure-Python oracle (oracle/pycascade.py) bit-for-bit.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from har2tree_spark.operators.parse import KERNEL_FIELDS
 from har2tree_spark.schema import JOIN_RESULT_SCHEMA, PRIORITY
 
 _BIG = 1 << 31
@@ -323,34 +329,41 @@ def resolve_rank(features: DataFrame) -> DataFrame:
 
 
 def resolve_exact(features: DataFrame) -> DataFrame:
-    """Reference-parity sequential cascade per doc (operators/kernel.py):
-    hash-repartition by doc_id + sortWithinPartitions (docs contiguous in
-    the Arrow stream) + ``mapInArrow`` — numpy views straight off the
-    Arrow buffers, no pandas block-manager round trip (guide §4.2; the
-    conversion was most of the kernel stage's Python-side cost)."""
-    from har2tree_spark.operators.kernel import (  # noqa: PLC0415
-        KERNEL_COLS,
-        cascade_batch_arrow,
-    )
-
-    f = live_features(features).select(*KERNEL_COLS)
-    # full ordering done JVM-side (we shuffle anyway, and Tungsten sort is
-    # far cheaper than a per-batch sort in Python); the kernel trusts the
-    # (doc_id, offset, span_idx) stream order.
+    """Reference-parity sequential cascade per doc (operators/kernel.py)
+    over the flat feature table: the live spans are hash-repartitioned by
+    doc_id and collected into one doc row each (``groupBy`` on the same
+    partitioning: no second exchange, no sort), then run through
+    ``resolve_doc_rows`` -- the kernel orders each doc itself."""
+    f = live_features(features).select("doc_id", *KERNEL_FIELDS)
     # EXPLICIT partition count (1 task/core): repartition("doc_id") without
-    # a count lets AQE coalesce by shuffle BYTES — but this stage's cost is
-    # Python-kernel CPU per row, not bytes, so AQE under-partitions it
-    # (measured: 9 tasks on 8 cores = a 2-wave schedule with a one-task
-    # second wave, ~40% idle; the whole N-vs-4N scaling gap lived there).
-    # One task per core, not more: each kernel task pays a fixed Arrow-
-    # stream + Python-worker round-trip cost, so extra waves multiply
+    # a count lets AQE coalesce by shuffle BYTES -- but the groupBy's
+    # consumer is the Python kernel, whose cost is CPU per span, not
+    # bytes, so AQE under-partitions it (measured: 9 tasks on 8 cores = a
+    # 2-wave schedule with a one-task second wave, ~40% idle; the whole
+    # N-vs-4N scaling gap lived there). The groupBy reuses this
+    # hashpartitioning(doc_id, n) as its distribution, so it is the one
+    # exchange. One task per core, not more: each kernel task pays a fixed
+    # Arrow-stream + Python-worker round-trip cost, so extra waves multiply
     # overhead without adding parallelism (r8 measured on 32 cores, q4
-    # kernel: 32 tasks 0.85 s, 64 tasks 1.10 s, 128 tasks 1.48 s — and the
+    # kernel: 32 tasks 0.85 s, 64 tasks 1.10 s, 128 tasks 1.48 s -- and the
     # gap persists at 10x rows because docs hash-spread evenly, so one
     # wave has no straggler tail).
     n_parts = f.sparkSession.sparkContext.defaultParallelism
-    return (
+    docs = (
         f.repartition(n_parts, "doc_id")
-        .sortWithinPartitions("doc_id", "offset", "span_idx")
-        .mapInArrow(cascade_batch_arrow, JOIN_RESULT_SCHEMA)
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.struct(*KERNEL_FIELDS)).alias("live"))
     )
+    return resolve_doc_rows(docs)
+
+
+def resolve_doc_rows(doc_rows: DataFrame) -> DataFrame:
+    """The exact kernel over doc rows ``(doc_id, live:
+    array<struct<KERNEL_FIELDS>>)`` (``parse.kernel_docs`` or
+    ``resolve_exact``'s groupBy): one ``mapInArrow``, numpy views straight
+    off the Arrow buffers, no pandas block-manager round trip. Adds no
+    exchange: each input row is a whole document. Returns
+    JOIN_RESULT_SCHEMA rows."""
+    from har2tree_spark.operators.kernel import cascade_doc_rows  # noqa: PLC0415
+
+    return doc_rows.mapInArrow(cascade_doc_rows, JOIN_RESULT_SCHEMA)

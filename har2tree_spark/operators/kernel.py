@@ -6,12 +6,19 @@ feature rows. The DFS is an explicit traversal — inherently sequential per
 doc, exactly like the reference — but embarrassingly parallel across docs,
 which is where the 10^12-doc parallelism lives.
 
-One Spark entry point, ``cascade_batch_arrow``, runs behind ``mapInArrow``
-over doc_id-clustered, (doc_id, offset, span_idx)-sorted partitions: one
-RecordBatch holds thousands of docs, each doc is a numpy slice of the
-batch's column views, and the trailing doc of a batch is carried over to
-the next so a doc that straddles batch boundaries runs once, whole. The
-independent check is the pure-Python oracle (oracle/pycascade.py).
+One Spark entry point, ``cascade_doc_rows``, runs behind ``mapInArrow``
+over doc rows ``(doc_id, live: list<struct<parse.KERNEL_FIELDS>>)``: one
+Arrow row is one whole document, so a batch never splits a doc and no
+exchange or sort has to bring a doc's spans together. A streaming
+micro-batch builds the rows straight from parse's array stage
+(``parse.kernel_docs``); ``cascade.resolve_exact`` collects them from the
+flat feature table with one ``groupBy(doc_id)``. Each batch is cut to
+about MAX_BATCH_SPANS spans, the lists are flattened, one lexsort orders
+every doc by (offset, span_idx), and each doc is a numpy slice of the
+sorted column views. ``cascade_batch_arrow`` is an in-process adapter
+that regroups flat, sorted batches into doc rows for the same entry (the
+benchmark's µs/row probe and the straddle tests); no Spark plan calls
+it. The independent check is the pure-Python oracle (oracle/pycascade.py).
 
 Float-sensitive geometry (point-in-region ray casting) calls the shared
 kernels in geo/geometry.py with the same operand order as the oracle, so
@@ -28,6 +35,7 @@ import numpy as np
 
 from har2tree_spark.geo import grid
 from har2tree_spark.geo.geometry import REGION_RADIUS_DEG, hex_polygon, points_in_polygon
+from har2tree_spark.operators.parse import KERNEL_FIELDS
 from har2tree_spark.schema import PRIORITY
 
 MAX_RING = 4
@@ -35,13 +43,13 @@ DANGLING_CAP = 1000
 
 _STAGES = ("redirect", "frame", "initiator", "referer", "resource")
 
-# fixed-width columns only: object/string columns dominate the Arrow
-# conversion cost, so keys/kinds/refs cross as int codes and the geometry is
-# recomputed in-kernel from key_num (vectorized integer hashes, geo/grid.py)
-KERNEL_COLS = [
-    "doc_id", "span_idx", "kind_code", "has_media", "media_num",
-    "offset", "key_num", "valid", "ref_nums",
-]
+# the flat layout of the kernel's input (parse.KERNEL_FIELDS per span)
+KERNEL_COLS = ["doc_id", *KERNEL_FIELDS]
+
+# spans per kernel block: Spark's maxRecordsPerBatch counts doc rows, so
+# the kernel cuts each doc-row batch back to the span bound the flat
+# layout had (the session's 10,000 rows); a larger doc runs as one block
+MAX_BATCH_SPANS = 10_000
 
 KC_TEXT, KC_HTML, KC_CSS, KC_JS = 0, 1, 2, 3
 KC_IFRAME, KC_REDIRECT = 7, 8
@@ -219,9 +227,9 @@ def _run_doc(a: dict, lo: int, hi: int) -> tuple[list[int], list[int], list[str]
 # dominated the kernel stage (r8, guide §4.2; measured: identity
 # mapInPandas 0.66s vs identity mapInArrow 0.50s vs kernel compute +0.05s
 # on the 20k-doc corpus). Columns become numpy views straight from the
-# Arrow buffers; doc_id stays an Arrow string array end-to-end (boundaries
-# via dictionary codes, output via take), so no Python string object is
-# ever materialized per row.
+# Arrow buffers; doc_id stays an Arrow string array end-to-end (doc
+# boundaries from list parent indices or dictionary codes, output via
+# take), so no Python string object is ever materialized per row.
 
 _STAGE_NAMES = (
     "root", "redirect", "frame", "initiator", "referer", "resource",
@@ -242,8 +250,9 @@ def _np_nullable(col, dtype=np.float64):
 
 def _prep_arrow(batch) -> dict:
     """Prepared-array dict (the ``_run_doc`` contract) from a RecordBatch
-    of KERNEL_COLS rows sorted by (doc_id, offset, span_idx). Nullable ints
-    arrive as NaN; -1 is the null sentinel (key space is non-negative)."""
+    of KERNEL_COLS rows, each doc contiguous and sorted by (offset,
+    span_idx). Nullable ints arrive as NaN; -1 is the null sentinel (key
+    space is non-negative)."""
     key = _np_nullable(batch.column("key_num"))
     media = _np_nullable(batch.column("media_num"))
     has_key = ~np.isnan(key)
@@ -312,7 +321,8 @@ def _emit_arrow(a: dict, chunks):
 
 
 def _process_block(did_codes: np.ndarray, a: dict):
-    """Run every doc in a prepared block; boundaries from doc-id codes."""
+    """Run every doc in a prepared block; ``did_codes`` are contiguous
+    per-doc group codes (doc boundaries are where they change)."""
     bounds = np.flatnonzero(
         np.concatenate(([True], did_codes[1:] != did_codes[:-1]))
     )
@@ -324,33 +334,80 @@ def _process_block(did_codes: np.ndarray, a: dict):
     return _emit_arrow(a, chunks)
 
 
-def cascade_batch_arrow(batches) -> Iterator:
-    """mapInArrow entry over doc_id-clustered, (doc_id, offset, span_idx)-
-    sorted partitions. A document may straddle Arrow batches: hold back the
-    trailing doc of each batch and prepend it to the next."""
+def _span_slices(live, cap: int):
+    """(lo, hi) doc-row ranges of at most ``cap`` spans plus one document:
+    doc i goes to slice ``spans_before_i // cap``. Spark cuts Arrow
+    batches by rows, and a row here is a whole document, so this restores
+    the per-batch span bound of the flat layout."""
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    n = pc.fill_null(pc.list_value_length(live), 0).to_numpy(zero_copy_only=False)
+    chunk = (np.cumsum(n) - n) // cap
+    cuts = (np.flatnonzero(np.diff(chunk)) + 1).tolist()
+    return zip([0, *cuts], [*cuts, len(n)])
+
+
+def cascade_doc_rows(batches) -> Iterator:
+    """mapInArrow entry over doc rows ``(doc_id, live:
+    list<struct<KERNEL_FIELDS>>)`` -- every Spark route to the kernel.
+    Each row is one whole document, so a batch never splits one; batches
+    are cut to at most MAX_BATCH_SPANS spans plus one doc. The list order
+    is not trusted (``collect_list`` order is undefined): one lexsort per
+    batch orders each doc by (offset, span_idx). Rows with an empty
+    ``live`` list emit nothing."""
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
 
-    carry = None  # trailing-doc RecordBatch slice
-    for batch in batches:
-        if carry is not None and carry.num_rows:
-            tbl = pa.Table.from_batches([carry, batch]).combine_chunks()
-            batch = tbl.to_batches()[0] if tbl.num_rows else batch
-            carry = None
-        n = batch.num_rows
-        if n == 0:
-            continue
-        did = batch.column("doc_id")
-        codes = pc.dictionary_encode(did).indices.to_numpy(zero_copy_only=False)
-        first_of_last = int(np.searchsorted(codes, codes[-1], side="left"))
-        carry = batch.slice(first_of_last)
-        head = batch.slice(0, first_of_last)
-        if head.num_rows:
-            yield _process_block(codes[:first_of_last], _prep_arrow(head))
-    if carry is not None and carry.num_rows:
-        did = carry.column("doc_id")
-        codes = pc.dictionary_encode(did).indices.to_numpy(zero_copy_only=False)
-        yield _process_block(codes, _prep_arrow(carry))
+    for whole in batches:
+        for lo, hi in _span_slices(whole.column("live"), MAX_BATCH_SPANS):
+            batch = whole.slice(lo, hi - lo)
+            live = batch.column("live")
+            doc = pc.list_parent_indices(live).to_numpy(zero_copy_only=False)
+            if len(doc) == 0:
+                continue
+            spans = pc.list_flatten(live)
+            cols = dict(zip([f.name for f in spans.type], spans.flatten()))
+            order = np.lexsort((
+                cols["span_idx"].to_numpy(zero_copy_only=False),
+                cols["offset"].to_numpy(zero_copy_only=False),
+                doc,
+            ))
+            doc = doc[order]
+            perm = pa.array(order)
+            flat = pa.RecordBatch.from_arrays(
+                [batch.column("doc_id").take(pa.array(doc)),
+                 *(cols[c].take(perm) for c in KERNEL_FIELDS)],
+                names=KERNEL_COLS,
+            )
+            yield _process_block(doc, _prep_arrow(flat))
+
+
+def cascade_batch_arrow(batches) -> Iterator:
+    """In-process adapter: flat KERNEL_COLS batches sorted by (doc_id,
+    offset, span_idx), where a document may straddle batches, regrouped
+    into one doc-row batch and run through ``cascade_doc_rows``. No Spark
+    plan calls it."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    batches = list(batches)
+    if not sum(b.num_rows for b in batches):
+        return
+    flat = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+    did = flat.column("doc_id")
+    starts = np.flatnonzero(np.concatenate((
+        [True], pc.not_equal(did[1:], did[:-1]).to_numpy(zero_copy_only=False)
+    )))
+    live = pa.ListArray.from_arrays(
+        pa.array(np.append(starts, flat.num_rows), pa.int32()),
+        pa.StructArray.from_arrays(
+            [flat.column(c) for c in KERNEL_FIELDS], names=KERNEL_FIELDS
+        ),
+    )
+    doc_rows = pa.RecordBatch.from_arrays(
+        [did.take(pa.array(starts)), live], names=["doc_id", "live"]
+    )
+    yield from cascade_doc_rows([doc_rows])
 
 
 # (cell, radius) -> ring cells as a plain Python list (r8 micro-opt,

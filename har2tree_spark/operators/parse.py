@@ -19,6 +19,10 @@ At 100 TB this matters: parse touches every byte once and produces the
 (doc_id-clustered) feature table every later join consumes; keeping it
 narrow means the only shuffles in the whole pipeline are the ones the
 joins/aggregations genuinely need.
+
+``kernel_docs`` stops the same array stage before the explode and emits
+the exact kernel's doc rows (one row per document, KERNEL_FIELDS per live
+span); the flat table's kernel columns come from the same definitions.
 """
 
 from __future__ import annotations
@@ -78,9 +82,48 @@ def _resolve_media(m: Column) -> Column:
     return F.when(m.startswith(_STACK_PREFIX), resolved).otherwise(m)
 
 
-def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
-    """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
-    root_idx, n_live). One output row per surviving span."""
+def _ref_tokens(text: Column, key: Column) -> Column:
+    """Tokens of ``text`` addressing OTHER spans (frame/resource join keys)."""
+    return F.filter(
+        F.split(text, " "), lambda t: t.rlike(KEY_TOKEN_RE) & ~(t.eqNullSafe(key))
+    )
+
+
+def _ref_nums(ref_tokens: Column) -> Column:
+    return F.transform(ref_tokens, grid.col_key_num)
+
+
+# The exact kernel's per-span columns, in doc-row struct order. Fixed-width
+# only: object/string columns dominate the Arrow conversion cost, so keys/
+# kinds/refs cross as int codes and the geometry is recomputed in-kernel
+# from key_num (vectorized integer hashes, geo/grid.py).
+KERNEL_FIELDS = (
+    "span_idx", "kind_code", "has_media", "media_num",
+    "offset", "key_num", "valid", "ref_nums",
+)
+
+
+def _kernel_fields(p: Column, key_num: Column, ref_nums: Column) -> dict[str, Column]:
+    """KERNEL_FIELDS of one parsed span struct ``p`` -- the single
+    definition behind both the flat ``parse_documents`` columns and the
+    ``kernel_docs`` doc rows."""
+    return {
+        "span_idx": p["span_idx"],
+        "kind_code": _kind_code(p["kind"]),
+        "has_media": p["media_ref"] != "",
+        "media_num": F.when(
+            p["media_ref"].rlike(KEY_TOKEN_RE), grid.col_key_num(p["media_ref"])
+        ),
+        "offset": p["offset"],
+        "key_num": key_num,
+        "valid": p["valid"],
+        "ref_nums": ref_nums,
+    }
+
+
+def _live_spans(docs: DataFrame) -> DataFrame:
+    """documents -> (doc_id, _parsed, _live): every span parsed and the
+    surviving ones, as per-document arrays (no explode yet)."""
     spans = F.coalesce(F.col("spans"), F.array())
 
     parsed = F.transform(
@@ -128,11 +171,34 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
     # into root_idx/n_live and re-evaluate it per EXPLODED ROW — O(n^2)
     # array scans per doc, observed as the dominant pipeline cost.)
     step1 = docs.select(F.col("doc_id"), parsed.alias("_parsed"))
-    step2 = step1.select(
+    return step1.select(
         "doc_id",
         "_parsed",
         F.filter(F.col("_parsed"), lambda p: ~p["dropped"]).alias("_live"),
     )
+
+
+def kernel_docs(docs: DataFrame) -> DataFrame:
+    """documents -> exact-kernel doc rows ``(doc_id, live:
+    array<struct<KERNEL_FIELDS>>)``: one row per input document, its live
+    spans in span order (empty for a quarantined doc). A narrow map -- the
+    same array stage as ``parse_documents``, stopped before the explode."""
+    def fields(p: Column) -> Column:
+        key_num = grid.col_key_num(p["key"])
+        ref_nums = _ref_nums(_ref_tokens(p["text"], p["key"]))
+        return F.struct(
+            *(c.alias(n) for n, c in _kernel_fields(p, key_num, ref_nums).items())
+        )
+
+    return _live_spans(docs).select(
+        "doc_id", F.transform(F.col("_live"), fields).alias("live")
+    )
+
+
+def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
+    """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
+    root_idx, n_live). One output row per surviving span."""
+    step2 = _live_spans(docs)
     # doc root = first live span by (offset, span_idx) — har2tree.py:428
     root = F.array_min(
         F.transform(F.col("_live"), lambda p: F.struct(p["offset"], p["span_idx"]))
@@ -157,41 +223,31 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
     key_num = grid.col_key_num(key)
     lon, lat = grid.col_point(key_num)
     text = F.col("p.text")
+    # ref_nums derives from the ref_tokens column (referenced twice ->
+    # CollapseProject keeps the token filter evaluated once)
+    kc = _kernel_fields(F.col("p"), key_num, _ref_nums(F.col("ref_tokens")))
     return out.select(
         "doc_id",
         "root_idx",
         "n_live",
-        F.col("p.span_idx").alias("span_idx"),
+        kc["span_idx"].alias("span_idx"),
         F.col("p.kind").alias("kind"),
         text.alias("text"),
         F.col("p.media_ref").alias("media_ref"),
-        F.col("p.offset").alias("offset"),
+        kc["offset"].alias("offset"),
         key.alias("key"),
-        key_num.alias("key_num"),
+        kc["key_num"].alias("key_num"),
         lon.alias("lon"),
         lat.alias("lat"),
         grid.col_cell(key_num, grid.FINE_RES).alias("cell"),
         grid.col_cell(key_num, grid.COARSE_RES).alias("coarse_cell"),
-        F.col("p.valid").alias("valid"),
+        kc["valid"].alias("valid"),
         F.coalesce(F.col("p.suppressed"), F.lit(False)).alias("suppressed"),
         F.coalesce(F.col("p.dropped"), F.lit(False)).alias("dropped"),
         F.octet_length(text).cast("long").alias("nbytes"),
-        # tokens addressing OTHER spans (frame/resource join keys)
-        F.filter(
-            F.split(text, " "),
-            lambda t: t.rlike(KEY_TOKEN_RE) & ~(t.eqNullSafe(key)),
-        ).alias("ref_tokens"),
+        _ref_tokens(text, key).alias("ref_tokens"),
         # fixed-width kernel columns (no object dtype across Arrow):
-        _kind_code(F.col("p.kind")).alias("kind_code"),
-        (F.col("p.media_ref") != "").alias("has_media"),
-        F.when(
-            F.col("p.media_ref").rlike(KEY_TOKEN_RE),
-            grid.col_key_num(F.col("p.media_ref")),
-        ).alias("media_num"),
-    ).withColumn(
-        # derived from ref_tokens (referenced twice -> CollapseProject keeps
-        # the token filter evaluated once)
-        "ref_nums",
-        F.transform(F.col("ref_tokens"), grid.col_key_num),
-    )
-
+        kc["kind_code"].alias("kind_code"),
+        kc["has_media"].alias("has_media"),
+        kc["media_num"].alias("media_num"),
+    ).withColumn("ref_nums", kc["ref_nums"])

@@ -11,7 +11,11 @@ Every other output is a lazy frame over those two, so writing the outputs
 re-runs neither parse nor the cascade. Shuffle budget at scale:
 
   parse          narrow (array-level ops)            0 shuffles
-  cascade exact  repartition(doc_id) + mapInArrow    1 shuffle
+  cascade exact  groupBy(doc_id) doc rows            1 shuffle (a streaming
+                 + mapInArrow                        micro-batch: 0, or
+                                                     1 round-robin when
+                                                     it has fewer input
+                                                     splits than cores)
   tiles          narrow projection                   0 shuffles
   tile_rollup    groupBy(level, cell)                1 shuffle (AQE-skew
                                                      aware)

@@ -77,6 +77,14 @@ def get_spark(
     return spark
 
 
+def host_heap() -> str:
+    """Driver heap for the tools' local jobs: a quarter of physical memory,
+    clamped to 1-16 GB (3g on a 15 GB host), which leaves the host room
+    for the Python workers."""
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{min(16, max(1, phys_gb // 4))}g"
+
+
 def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -4,10 +4,15 @@ The reference is strictly batch (SURVEY.md §1.3) — streaming here is the
 engine's *extension* for continuous document arrival:
 
   * ``incremental_pipeline`` — foreachBatch: each micro-batch of new
-    documents runs the SAME batch operators (parse -> exact cascade) and
-    appends to the output tables; exactly-once via the streaming
-    checkpoint + idempotent append per batch id. This is the streaming
-    face of the lineage/resume story (operators/lineage.py).
+    documents runs parse's array stage and the exact kernel (the same
+    operators and kernel entry as the batch path) and appends to the
+    output tables; exactly-once via the streaming checkpoint + idempotent
+    append per batch id. Each input row must be one whole document: its
+    doc row goes to the kernel as it is, with no doc_id exchange, so a
+    document split over two rows would be cascaded as two (a batch with
+    fewer input splits than cores is only dealt round-robin, row by
+    row, over the cores). This is the
+    streaming face of the lineage/resume story (operators/lineage.py).
   * ``streaming_tile_counts`` — continuous per-cell feature counts
     (update mode); the array-level parse expressions run unchanged on a
     streaming DataFrame (no shuffle before the agg).
@@ -33,18 +38,31 @@ def stream_documents(spark: SparkSession, path: str, max_files: int = 8) -> Data
     )
 
 
+def micro_batch_join_result(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+    """One micro-batch's join_result: parse's array stage straight into
+    the exact kernel (``parse.kernel_docs`` -> ``cascade.resolve_doc_rows``).
+    Each input row is one whole document, so no doc_id exchange and no
+    sort: with at least one input split per core this is one narrow
+    stage. A batch of fewer splits (one file is one split) is first dealt
+    round-robin over the cores, so parse and the CPU-bound kernel do not
+    run on one core (measured on 4 cores, one file of 12,000 docs: 6.7 s
+    unspread, 3.0 s spread; 250 docs: 0.67 vs 0.80 s)."""
+    n = batch_df.sparkSession.sparkContext.defaultParallelism
+    if batch_df.rdd.getNumPartitions() < n:
+        batch_df = batch_df.repartition(n)
+    jr = cascade.resolve_doc_rows(parse.kernel_docs(batch_df))
+    return jr.withColumn("epoch", F.lit(int(epoch_id)))
+
+
 def incremental_pipeline(
     docs_stream: DataFrame, output_base: str, checkpoint: str
 ):
-    """Streaming query: per micro-batch, run parse + exact cascade and
-    append join_result parquet partitioned by batch (idempotent per
+    """Streaming query: per micro-batch, run ``micro_batch_join_result``
+    and append join_result parquet partitioned by batch (idempotent per
     epoch_id — reruns of a failed batch overwrite their own partition)."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        feats = parse.parse_documents(batch_df)
-        jr = cascade.resolve_exact(feats).withColumn(
-            "epoch", F.lit(int(epoch_id))
-        )
+        jr = micro_batch_join_result(batch_df, epoch_id)
         (
             jr.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -175,12 +175,13 @@ def test_stack_walk_cross_engine_fuzz(spark):
 
 
 def test_arrow_kernel_straddling_docs_match_oracle(spark):
-    """The mapInArrow kernel's carry-over path (a doc held back across
-    Arrow batch boundaries: Table concat, sliced ListArray offsets) is the
-    riskiest code in the kernel, so it runs against the oracle with a tiny
-    batch size instead of everything fitting in one 10k-row batch. Eight
-    long docs make some doc span three or more batches, which the
-    in-process run asserts rather than assumes."""
+    """Tiny Arrow batches against the oracle, instead of everything
+    fitting in one 10k-row batch: through Spark, ``resolve_exact`` cuts
+    its doc rows into 37-doc batches (sliced list offsets); in process,
+    ``cascade_batch_arrow``'s carry-over path (a doc held back across flat
+    batch boundaries: Table concat, sliced ListArray offsets) gets 37-span
+    batches. Eight long docs make some doc span three or more batches,
+    which the in-process run asserts rather than assumes."""
     cfg = GenConfig(max_spans=24, p_hot=0.5, p_orphan=0.2, p_dup_invalid=0.2)
     docs = (
         gen_docs(11, 400, cfg)
@@ -279,3 +280,129 @@ def test_ring_cache_keeps_newly_hot_cell():
         assert _ring_cells.cache_info().hits == hits + 5
     finally:
         _ring_cells.cache_clear()
+
+
+def _doc_rows(spark, docs):
+    """``parse.kernel_docs`` doc rows of ``docs`` as one Arrow table."""
+    from har2tree_spark.operators.parse import kernel_docs
+
+    return kernel_docs(spark.createDataFrame(docs, DOCUMENTS_SCHEMA)).toArrow()
+
+
+def _run_doc_rows(table, max_rows=None):
+    """``cascade_doc_rows`` in-process over ``table``'s doc rows, cut into
+    batches of ``max_rows`` docs (sliced list offsets), as pandas."""
+    import pyarrow as pa
+
+    from har2tree_spark.operators.kernel import cascade_doc_rows
+
+    out = list(cascade_doc_rows(iter(table.to_batches(max_chunksize=max_rows))))
+    return pa.Table.from_batches(out).to_pandas()
+
+
+_HOT = GenConfig(max_spans=32, p_hot=0.9, zipf_s=2.0, n_hot_keys=8)
+_ORPHANS = GenConfig(max_spans=48, p_orphan=0.5, p_dup_invalid=0.2)
+
+
+@pytest.mark.parametrize(
+    "corpus",
+    [
+        pytest.param(lambda: scenario_docs(), id="scenarios"),
+        pytest.param(lambda: gen_docs(31, 300, _HOT), id="hot-key"),
+        pytest.param(lambda: gen_docs(32, 200, _ORPHANS), id="orphans"),
+    ],
+)
+def test_doc_row_kernel_matches_oracle(spark, corpus):
+    """The doc-row entry every Spark route uses, in process: whole
+    batches and 7-doc batches (sliced list offsets) both equal the
+    oracle."""
+    docs = corpus()
+    table = _doc_rows(spark, docs)
+    want = _oracle(docs)
+    _assert_frames_equal(_run_doc_rows(table), want)
+    _assert_frames_equal(_run_doc_rows(table, 7), want)
+
+
+def test_doc_row_kernel_mega_doc(spark):
+    """One document of 4,574 spans, 4,118 of them on one hot key: the
+    doc row holds it whole, and the kernel equals the (recursive) oracle."""
+    import sys
+
+    cfg = GenConfig(max_spans=4600, p_hot=0.9, zipf_s=2.0, n_hot_keys=1, p_empty_doc=0.0)
+    docs = gen_docs(3, 1, cfg, start=6)
+    keys = pd.Series([s["text"].split(" ")[0] for s in docs[0]["spans"]])
+    assert len(keys) >= 4096 and keys.value_counts().iloc[0] >= 4000
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(max(limit, 20_000))
+    try:
+        want = _oracle(docs)
+    finally:
+        sys.setrecursionlimit(limit)
+    _assert_frames_equal(_run_doc_rows(_doc_rows(spark, docs)), want)
+
+
+def test_doc_row_kernel_cuts_batches_by_spans(spark, monkeypatch):
+    """Spark cuts Arrow batches by doc rows; the kernel cuts each back to
+    MAX_BATCH_SPANS spans plus at most one doc (contiguous slices that
+    cover the batch), and the cut changes no output row."""
+    import pyarrow.compute as pc
+
+    from har2tree_spark.operators import kernel
+
+    docs = gen_docs(34, 150, _HOT)
+    table = _doc_rows(spark, docs)
+    live = table.column("live").combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(live), 0).to_numpy()
+    slices = list(kernel._span_slices(live, 100))
+    assert len(slices) >= lens.sum() // 200
+    assert slices[0][0] == 0 and slices[-1][1] == len(lens)
+    assert all(a[1] == b[0] for a, b in zip(slices, slices[1:]))
+    assert all(lo < hi and lens[lo:hi - 1].sum() < 100 for lo, hi in slices)
+    monkeypatch.setattr(kernel, "MAX_BATCH_SPANS", 100)
+    _assert_frames_equal(_run_doc_rows(table), _oracle(docs))
+
+
+def test_doc_row_kernel_ignores_list_order(spark):
+    """``collect_list`` order is undefined, so the kernel orders each doc
+    itself: shuffling every doc's ``live`` list changes no output row."""
+    import random
+
+    import pyarrow as pa
+
+    docs = gen_docs(33, 120, _HOT) + scenario_docs()
+    table = _doc_rows(spark, docs)
+    rows = table.to_pylist()
+    rng = random.Random(5)
+    for r in rows:
+        rng.shuffle(r["live"])
+    shuffled = pa.Table.from_pylist(rows, schema=table.schema)
+    assert shuffled.column("live").to_pylist() != table.column("live").to_pylist()
+    want = _oracle(docs)
+    _assert_frames_equal(_run_doc_rows(shuffled), want)
+    _assert_frames_equal(_run_doc_rows(shuffled, 7), want)
+
+
+def test_doc_row_kernel_skips_empty_docs(spark):
+    """Quarantined docs (``scn-empty``) and null ``spans`` arrive as doc
+    rows with an empty ``live`` list and emit nothing, also when a whole
+    batch is empty."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from har2tree_spark.operators.kernel import cascade_doc_rows
+
+    docs = scenario_docs() + [{"doc_id": "scn-null-spans", "spans": None}]
+    table = _doc_rows(spark, docs)
+    n_live = dict(zip(
+        table.column("doc_id").to_pylist(),
+        (len(v) for v in table.column("live").to_pylist()),
+    ))
+    assert n_live["scn-empty"] == 0 and n_live["scn-null-spans"] == 0
+    got = _run_doc_rows(table, 1)
+    assert not set(got.doc_id) & {"scn-empty", "scn-null-spans"}
+    _assert_frames_equal(got, _oracle(docs))
+    empty = table.filter(
+        pc.is_in(table.column("doc_id"), value_set=pa.array(["scn-empty", "scn-null-spans"]))
+    )
+    assert empty.num_rows == 2
+    assert list(cascade_doc_rows(iter(empty.to_batches()))) == []

@@ -65,13 +65,42 @@ def test_cascade_exact_single_shuffle(spark, tmp_path):
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     jr = resolve_exact(parse_documents(spark.read.parquet(p)))
     plan = _plan(jr)
-    # one Exchange (hash by doc_id, one task per core), then sort + ONE
-    # Arrow map — the only kernel path, no pandas entry anywhere
+    # one Exchange (hash by doc_id, one task per core) that the doc-row
+    # groupBy reuses, then ONE Arrow map -- no sort (the kernel orders
+    # each doc itself), no pandas entry anywhere
     assert _n_exchanges(plan) == 1, plan
     n_parts = spark.sparkContext.defaultParallelism
     assert re.search(rf"hashpartitioning\(doc_id#\d+, {n_parts}\)", plan), plan
     assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
+    assert not re.search(r"\(\d+\) Sort\b", plan), plan
     assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_micro_batch_is_one_narrow_stage(spark, tmp_path):
+    """A streaming micro-batch feeds parse's doc rows straight to the
+    kernel: with one input split per core, no exchange at all and one
+    Arrow map. A single-split batch is only dealt round-robin over the
+    cores (one exchange, no doc_id hash, no sort)."""
+    from har2tree_spark.streaming import ingest
+
+    n = spark.sparkContext.defaultParallelism
+    wide, one = str(tmp_path / "docs_micro"), str(tmp_path / "docs_one")
+    gen_documents_df(spark, 50, seed=3, partitions=n).write.parquet(wide)
+    gen_documents_df(spark, 50, seed=3, partitions=1).write.parquet(one)
+    batch = spark.read.parquet(wide)
+    assert batch.rdd.getNumPartitions() >= n
+    plan = _plan(ingest.micro_batch_join_result(batch, 0))
+    assert _n_exchanges(plan) == 0, plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
+
+    batch = spark.read.parquet(one)
+    assert batch.rdd.getNumPartitions() == 1
+    plan = _plan(ingest.micro_batch_join_result(batch, 0))
+    assert _n_exchanges(plan) == 1, plan
+    assert f"RoundRobinPartitioning({n})" in plan, plan
+    assert "hashpartitioning" not in plan, plan
+    assert not re.search(r"\(\d+\) Sort\b", plan), plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
 
 
 def test_filter_pushdown_to_scan(spark):

@@ -9,12 +9,15 @@ from pyspark.sql import types as T
 from har2tree_spark.datagen import gen_documents_df
 from har2tree_spark.operators.cascade import resolve_exact
 from har2tree_spark.operators.parse import parse_documents
+from har2tree_spark.schema import JOIN_RESULT_SCHEMA
 from har2tree_spark.streaming import ingest
 
 
 def test_incremental_pipeline_matches_batch(spark):
+    """The streaming doc-row path equals the batch ``resolve_exact`` on
+    every join_result column, quarantined scenario docs included."""
     with tempfile.TemporaryDirectory() as tmp:
-        docs = gen_documents_df(spark, 200, seed=9)
+        docs = gen_documents_df(spark, 200, seed=9, include_scenarios=True)
         docs.repartition(4).write.parquet(f"{tmp}/in")
         stream = ingest.stream_documents(spark, f"{tmp}/in", max_files=2)
         q = ingest.incremental_pipeline(stream, f"{tmp}/out", f"{tmp}/ckpt").start()
@@ -24,9 +27,12 @@ def test_incremental_pipeline_matches_batch(spark):
         assert got.count() == want.count()
         # multiple micro-batches actually happened
         assert got.select("epoch").distinct().count() >= 2
-        # per-row parity (batch and streaming run the same operators)
-        key = ["doc_id", "span_idx", "parent_idx", "join_kind"]
-        assert got.select(*key).exceptAll(want.select(*key)).count() == 0
+        # per-row parity in both directions, depth and priority included
+        cols = JOIN_RESULT_SCHEMA.fieldNames()
+        got, want = got.select(*cols), want.select(*cols)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        assert got.filter(F.col("doc_id").startswith("scn-")).count() > 0
 
 
 def test_streaming_tile_counts(spark):

@@ -52,13 +52,11 @@ def main() -> None:
 
     if not os.path.exists(corpus):
         from har2tree_spark.datagen import GenConfig, write_corpus  # noqa: PLC0415
-        from har2tree_spark.session import get_spark  # noqa: PLC0415
+        from har2tree_spark.session import get_spark, host_heap  # noqa: PLC0415
 
-        # generation is distributed and streams rows per task: a quarter
-        # of physical memory (1-16 GB) is plenty and leaves the host room
-        phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
-        heap_gb = min(16, max(1, phys_gb // 4))
-        spark = get_spark("gen_corpus", parallelism=cores, driver_memory=f"{heap_gb}g")
+        # generation is distributed and streams rows per task: the
+        # host_heap() quarter of physical memory is plenty
+        spark = get_spark("gen_corpus", parallelism=cores, driver_memory=host_heap())
         write_corpus(
             spark, corpus, n_docs, seed=42,
             cfg=GenConfig(max_spans=32, p_hot=0.2, zipf_s=1.2),

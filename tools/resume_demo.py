@@ -31,7 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from har2tree_spark.operators import cascade, lineage, parse, stats, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import get_spark, host_heap  # noqa: E402
 
 
 def main() -> None:
@@ -41,7 +41,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     spark = get_spark(
         "resume_demo", parallelism=cpus, shuffle_partitions=4 * cpus,
-        driver_memory="24g",
+        driver_memory=host_heap(),
     )
     run = lineage.CheckpointedRun(spark, base, run_id="resume-demo")
     pre_done = sorted(run.manifest["stages"])

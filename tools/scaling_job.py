@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from har2tree_spark.operators import cascade, parse, stats, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import get_spark, host_heap  # noqa: E402
 
 
 def main() -> None:
@@ -30,7 +30,7 @@ def main() -> None:
     # gating the stage
     spark = get_spark(
         f"scaling_{cpus}", parallelism=cpus, shuffle_partitions=4 * cpus,
-        driver_memory="24g",
+        driver_memory=host_heap(),
     )
     docs = spark.read.parquet(corpus)
     # warm-up (excluded from timing): JVM task-thread + python-worker spawn
