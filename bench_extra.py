@@ -38,12 +38,10 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "bench_extra", parallelism=cpus, shuffle_partitions=4 * cpus,
-        driver_memory="24g",
-    )
+    spark = get_spark("bench_extra", driver_memory="24g")
     sc = spark.sparkContext
+    cpus = sc.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cpus))
 
     # same warmup as bench.py
     spark.range(0, 1 << 14, numPartitions=cpus).mapInPandas(

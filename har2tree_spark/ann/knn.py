@@ -82,24 +82,11 @@ def _planes(dim: int, bits: int, table: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((dim, bits)).astype(np.float64)
 
 
-def hyperplane_signature(dim: int, bits: int = 12, table: int = 0, seed: int = 42):
-    """Pandas UDF: embedding -> integer LSH bucket (one matmul per batch)."""
-    planes = _planes(dim, bits, table, seed)
-    weights = (1 << np.arange(bits)).astype(np.int64)
-
-    @F.pandas_udf(T.LongType())
-    def sig(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy())
-        return pd.Series(((m @ planes > 0).astype(np.int64) @ weights))
-
-    return sig
-
-
 def hyperplane_signatures(dim: int, bits: int, tables: int, seed: int = 42):
     """Pandas UDF: embedding -> array of per-table LSH buckets. All
     ``tables`` signatures in ONE matmul over the horizontally stacked
     planes — one corpus scan and one Python stage instead of one per
-    table. Bucket values are identical to hyperplane_signature's (same
+    table. Bucket values are identical to one matmul per table's (same
     planes, column-independent dot products)."""
     planes = np.concatenate(
         [_planes(dim, bits, t, seed) for t in range(tables)], axis=1

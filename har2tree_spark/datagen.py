@@ -6,13 +6,14 @@ test corpus (reference tests/simple_test.py:16-27 capture_samples — redirect
 chains, referer links, iframes, orphans, duplicate/invalid entries, hot-key
 skew) re-expressed in span form (FIXTURES.md §1).
 
-Two paths:
-  * ``gen_docs(seed, n_docs, ...)`` — in-process (numpy RNG), for tests.
+One generator, two drivers:
+  * ``gen_docs(seed, n_docs, ...)`` — in-process (numpy RNG), for the
+    oracle tests.
   * ``gen_documents_df(spark, ...)`` — distributed via ``mapInPandas`` over
     ``spark.range`` so a bench corpus of millions of docs is generated in
-    parallel with no driver materialization (scales to any size; each task
-    seeds its RNG from the doc-id range it owns, so output is independent of
-    partitioning).
+    parallel with no driver materialization (scales to any size). Each task
+    calls ``gen_docs`` per doc id, which seeds its RNG from the id, so the
+    output equals ``gen_docs``' and is independent of partitioning.
 """
 
 from __future__ import annotations
@@ -270,12 +271,7 @@ def gen_documents_df(spark, n_docs: int, seed: int = 42, cfg: GenConfig | None =
 
     def gen_part(batches):
         for pdf in batches:
-            rows = []
-            for d in pdf["id"].tolist():
-                rng = np.random.default_rng(np.random.SeedSequence([seed, int(d)]))
-                rows.append(
-                    {"doc_id": f"doc-{int(d):08d}", "spans": _make_doc(rng, int(d), cfg)}
-                )
+            rows = [gen_docs(seed, 1, cfg, start=int(d))[0] for d in pdf["id"].tolist()]
             yield pd.DataFrame(rows)
 
     df = (

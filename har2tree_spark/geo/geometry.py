@@ -26,15 +26,6 @@ def hex_polygon(lon: float, lat: float, radius: float = REGION_RADIUS_DEG) -> np
     )
 
 
-def polygon_bbox(poly: np.ndarray) -> tuple[float, float, float, float]:
-    return (
-        float(poly[:, 0].min()),
-        float(poly[:, 1].min()),
-        float(poly[:, 0].max()),
-        float(poly[:, 1].max()),
-    )
-
-
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.ndarray:
     """Vectorized even-odd ray casting: bool mask of points inside ``poly``.
 

@@ -62,10 +62,6 @@ def np_cell(key_num: np.ndarray, res: int = FINE_RES) -> np.ndarray:
     return (ix * _IY + iy) * _RB + res
 
 
-def cell_res(cell: int) -> int:
-    return int(cell) % _RB
-
-
 def np_cell_xy(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     cell = np.asarray(cell, dtype=np.int64)
     res = cell % _RB
@@ -114,20 +110,6 @@ def np_ring(cell: int, radius: int) -> np.ndarray:
     n = 1 << res
     dx, dy = _ring_offsets(radius)
     return (((ix + dx) % n) * _IY + ((iy + dy) % n)) * _RB + res
-
-
-def np_disk(cell: np.ndarray, radius: int) -> np.ndarray:
-    """(len(cell), (2r+1)^2) matrix of all cells within Chebyshev distance
-    radius — vectorized gridDisk for batch kNN probes."""
-    res, ix, iy = np_cell_xy(np.asarray(cell, dtype=np.int64))
-    n = (np.int64(1) << res).astype(np.int64)
-    offs = np.arange(-radius, radius + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(offs, offs, indexing="ij")
-    dx = dx.ravel()[None, :]
-    dy = dy.ravel()[None, :]
-    nix = (ix[:, None] + dx) % n[:, None]
-    niy = (iy[:, None] + dy) % n[:, None]
-    return (nix * _IY + niy) * _RB + res[:, None]
 
 
 def np_cover_bbox(

@@ -1,16 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing — schema, partitioning, Arrow batch shapes, UDF
-signatures — is real and tested. Since r6 ``decode_image`` is a REAL
-pure-numpy decoder for the uncompressed formats (binary PPM "P6" and
-uncompressed 24/32-bit BMP — header parse + ``np.frombuffer``, no codec
-library involved), and ``extract_features(stub=False)`` computes features
-over the decoded pixels end-to-end. Compressed formats (JPEG/PNG/...)
-still need PIL/ffmpeg, which this container does not ship — those raise
-``ValueError`` from the same function, and swapping in a full codec
-keeps every plan unchanged. ``stub=True`` (the gate path) remains the
-deterministic byte-histogram fake over the raw payload so the DuckDB
-oracle can replay it.
+signatures — is real and tested. ``extract_features`` histograms the raw
+payload bytes, a deterministic stand-in for an image decoder that the
+DuckDB oracle can replay; a real codec would swap in inside the same
+``mapInPandas`` function and keep every plan unchanged.
 
 Layout follows the reference's embedded-resource model (binary bodies keyed
 by digest, reference nodes.py:100, helper.py:85-127): blobs are hashed
@@ -101,89 +95,10 @@ def synthesize_media(spark, n: int, seed: int = 42, partitions: int | None = Non
     return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """Pure-numpy image decode for uncompressed formats; returns an
-    (H, W, 3) uint8 RGB array.
-
-      * binary PPM ("P6", maxval <= 255): token header (whitespace +
-        '#'-comment grammar) then raw RGB samples.
-      * BMP ("BM", BITMAPINFOHEADER-family, biCompression == BI_RGB,
-        24/32 bpp): bottom-up row order flipped to top-down, BGR(A)
-        reordered to RGB, 4-byte row padding stripped.
-
-    Anything else — compressed formats included — raises ``ValueError``
-    (the reference's codec-failure analogue; a PIL-backed build would
-    extend exactly this function)."""
-    if payload[:2] == b"P6":
-        toks: list[bytes] = []
-        pos = 2
-        n = len(payload)
-        while len(toks) < 3:
-            while pos < n and payload[pos : pos + 1].isspace():
-                pos += 1
-            if pos < n and payload[pos : pos + 1] == b"#":
-                while pos < n and payload[pos : pos + 1] != b"\n":
-                    pos += 1
-                continue
-            start = pos
-            while pos < n and not payload[pos : pos + 1].isspace():
-                pos += 1
-            if start == pos:
-                raise ValueError("ppm: truncated header")
-            toks.append(payload[start:pos])
-        pos += 1  # single whitespace after maxval, then raster
-        try:
-            w, h, maxval = (int(t) for t in toks)
-        except ValueError as e:
-            raise ValueError("ppm: non-integer header token") from e
-        if w <= 0 or h <= 0 or not 0 < maxval <= 255:
-            raise ValueError("ppm: unsupported dimensions/maxval")
-        need = w * h * 3
-        raster = payload[pos : pos + need]
-        if len(raster) < need:
-            raise ValueError("ppm: truncated raster")
-        return np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3).copy()
-    if payload[:2] == b"BM":
-        if len(payload) < 54:
-            raise ValueError("bmp: truncated header")
-        pix_off = int.from_bytes(payload[10:14], "little")
-        w = int.from_bytes(payload[18:22], "little", signed=True)
-        h = int.from_bytes(payload[22:26], "little", signed=True)
-        bpp = int.from_bytes(payload[28:30], "little")
-        compression = int.from_bytes(payload[30:34], "little")
-        if compression != 0 or bpp not in (24, 32):
-            raise ValueError("bmp: only uncompressed 24/32-bit supported")
-        if w <= 0 or h == 0:
-            raise ValueError("bmp: unsupported dimensions")
-        top_down = h < 0
-        h = abs(h)
-        nchan = bpp // 8
-        stride = (w * nchan + 3) & ~3
-        need = stride * h
-        if len(payload) < pix_off + need:
-            raise ValueError("bmp: truncated pixel data")
-        rows = np.frombuffer(
-            payload[pix_off : pix_off + need], dtype=np.uint8
-        ).reshape(h, stride)[:, : w * nchan].reshape(h, w, nchan)
-        if not top_down:
-            rows = rows[::-1]
-        return rows[:, :, 2::-1].copy()  # BGR(A) -> RGB
-    raise ValueError("unsupported image format (only P6 PPM / BI_RGB BMP)")
-
-
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Inverse helper for tests/synthesis: (H, W, 3) uint8 -> binary P6."""
-    h, w, _ = pixels.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.astype(np.uint8).tobytes()
-
-
-def extract_features(media: DataFrame, stub: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Per-blob feature vector via mapInPandas (Arrow-batched binary in,
-    array<float> out). With ``stub=True`` (the oracle-replayable gate
-    path) the 'decoder' is a deterministic byte-histogram fake over the
-    raw payload; ``stub=False`` really decodes (pure-numpy PPM/BMP,
-    ``decode_image``) and histograms the PIXELS — undecodable payloads
-    then raise ValueError, matching a codec failure."""
+    array<float> out). The 'decoder' is a deterministic byte-histogram
+    over the raw payload, which the DuckDB oracle replays."""
 
     out_schema = T.StructType(
         [
@@ -199,10 +114,7 @@ def extract_features(media: DataFrame, stub: bool = True) -> DataFrame:
             feats = []
             hists = []
             for payload in pdf["payload"]:
-                if stub:
-                    arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                else:
-                    arr = decode_image(bytes(payload)).reshape(-1)
+                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
                 # bin width 256/FEATURE_DIM=16 == the high hex nibble of
                 # each byte, which is what lets a SQL oracle replay the
                 # histogram from the payload's hex representation

@@ -22,19 +22,13 @@ empty form value). Arms, in dispatch priority:
                     text version marker '$ion_' prefix, or a data-URI whose
                     declared mimetype starts with application/x-amzn-ion —
                     the in-band analogue of the reference's mimetype
-                    dispatch (nodes.py:361-375). The second-tier
-                    ``decode_structural`` pass upgrades this arm via an
-                    import-gated amazon.ion decode (absent in this
-                    container -> stays blackbox)
+                    dispatch (nodes.py:361-375)
   dns_wire       -> blackbox tag (data-URI declared application/dns-message,
                     nodes.py:428-433); transport ;base64 layer decoded,
-                    wire payload kept raw, ok=false. ``decode_structural``
-                    upgrades it with a pure-stdlib RFC 1035 wire parse
+                    wire payload kept raw, ok=false
   protobuf       -> blackbox tag (data-URI declared grpc-web+proto /
                     x-protobuf / proto / x-protobuffer, nodes.py:400-413);
-                    transport layer decoded, bytes kept raw, ok=false.
-                    ``decode_structural`` upgrades it with a schema-less
-                    varint/wire-type field walk (the blackboxprotobuf idea)
+                    transport layer decoded, bytes kept raw, ok=false
   data-URI b64   -> unbase64 of the payload part       (F14 + F10)
   data-URI raw   -> payload part as-is
   multipart      -> part bodies joined by newline      (nodes.py:377-398;
@@ -72,11 +66,9 @@ empty form value). Arms, in dispatch priority:
                     before any mimetype dispatch)
   form-urlencoded-> full percent-decode (F.try_url_decode: %XX unescape
                     + '+' -> space — the reference's parse_qs value
-                    semantics, nodes.py:307-323; DEFAULT since r6, with
-                    ``full_percent_decode=False`` keeping the legacy
-                    '+'-only normalization; the DuckDB oracle mirrors the
-                    gate corpus's closed escape set with a replace
-                    chain). NOTE: a single trailing-'='
+                    semantics, nodes.py:307-323; the DuckDB oracle
+                    mirrors the gate corpus's closed escape set with a
+                    replace chain). NOTE: a single trailing-'='
                     base64 fragment like 'QQ=' parses as a form pair with an
                     empty value under shape dispatch; with a declared
                     mimetype the reference would base64-retry it instead —
@@ -132,27 +124,21 @@ def _unb64(c: Column) -> Column:
     return F.unbase64(c).cast("string")
 
 
-def decode_dispatch(
-    df: DataFrame,
-    payload_col: str = "payload",
-    full_percent_decode: bool = True,
-) -> DataFrame:
+def decode_dispatch(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Adds (decode_kind, decode_ok, decoded, decoded_size).
 
-    ``full_percent_decode`` (default ON since r6) gives the form arm full
-    application/x-www-form-urlencoded decoding (``F.try_url_decode``: %XX
-    unescape + '+' -> space — the reference's ``parse_qs`` value
-    semantics, nodes.py:307-323); False falls back to the legacy
-    '+'-to-space-only normalization. The oracle dialect (DuckDB 1.0) has
-    no url_decode, so the driver gate mirrors the decode with a closed
+    The form arm does full application/x-www-form-urlencoded decoding
+    (``F.try_url_decode``: %XX unescape + '+' -> space — the reference's
+    ``parse_qs`` value semantics, nodes.py:307-323). The oracle dialect
+    (DuckDB 1.0) has no url_decode, so the driver gate mirrors the decode
+    with a closed
     replace chain over the escape set its corpus generates (%6B/%20) —
     exact there because decoded text re-introduces no '%' (see
     q_decode_dispatch); arbitrary escapes are pinned against
     urllib.parse.unquote_plus in pytest instead. The dispatch gate
     ensures every '%' opens a valid %XX escape either way, so the try_
     variant's null branch never fires on dispatched rows (coalesce kept
-    as belt-and-braces). Only the form arm's ``decoded``/``decoded_size``
-    change with the flag."""
+    as belt-and-braces)."""
     p = F.col(payload_col)
     is_gzip_garbled = p.startswith(GZIP_GARBLED_PREFIX)
     is_data = p.startswith("data:")
@@ -259,12 +245,7 @@ def decode_dispatch(
         .when(u_padded, _unb64(std))
         .when(u_fixable, _unb64(u_repadded))
         .when(u_trailpad, _unb64(u_stripped))
-        .when(
-            formish,
-            F.coalesce(F.try_url_decode(p), F.translate(p, "+", " "))
-            if full_percent_decode
-            else F.translate(p, "+", " "),
-        )
+        .when(formish, F.coalesce(F.try_url_decode(p), F.translate(p, "+", " ")))
         .when(
             json_streamish,
             F.concat(F.lit("["), F.regexp_replace(p, "\\}\\{", "},{"), F.lit("]")),
@@ -288,270 +269,3 @@ def decode_dispatch(
         .withColumn("decoded_size", size.cast("long"))
     )
 
-
-# --------------------------------------------------------------------------
-# Structural second tier for the blackbox arms (r5 VERDICT #3)
-# --------------------------------------------------------------------------
-# The JVM CASE cascade above tags ion / dns_wire / protobuf payloads and
-# keeps them raw — the reference's *no-lib* failure path. Its lib path
-# actually decodes (reference nodes.py:361-375 simpleion, 400-413
-# blackboxprotobuf, 428-433 dns.message.from_wire). This tier upgrades
-# those rows:
-#
-#   * dns_wire  — pure-stdlib RFC 1035 wire parse (header + question
-#                 section label walk). No third-party lib needed; the
-#                 output is a canonical JSON rendering (documented
-#                 divergence: dnspython's to_text() layout differs, the
-#                 parsed structure is the same).
-#   * protobuf  — pure-stdlib schema-less field walk (varint tags, wire
-#                 types 0/1/2/5), the same idea blackboxprotobuf
-#                 implements: fields keyed by number, length-delimited
-#                 values as UTF-8 when cleanly decodable else hex.
-#   * ion       — import-gated amazon.ion mirroring the reference's
-#                 simpleion.loads -> dumps(binary=False, indent="\t");
-#                 stays blackbox when the lib is absent (it is absent in
-#                 this container — the pytest is skip-marked, and unlike
-#                 the soup-lxml case there is no behavioral parity claim:
-#                 the arm only ever *upgrades* ok=False rows).
-#
-# Scale shape: this is a second PASS, not part of the hot CASE cascade —
-# apply it after decode_dispatch and only blackbox-tagged rows enter the
-# Python batch (a vectorized pandas_udf short-circuits on kind), so the
-# Arrow cost is proportional to the rare blackbox fraction, exactly like
-# the soup operator's event-parser engine.
-
-
-def dns_wire_structural(wire: bytes) -> str | None:
-    """RFC 1035 wire-format parse: 12-byte header + question section.
-    Returns canonical JSON, or None when the payload is not a well-formed
-    message (caller keeps the blackbox row unchanged)."""
-    import json as _json  # noqa: PLC0415
-    import struct as _struct  # noqa: PLC0415
-
-    try:
-        if len(wire) < 12:
-            return None
-        msg_id, flags, qd, an, ns, ar = _struct.unpack(">HHHHHH", wire[:12])
-        off = 12
-        questions = []
-        for _ in range(qd):
-            labels = []
-            while True:
-                if off >= len(wire):
-                    return None
-                ln = wire[off]
-                if ln == 0:
-                    off += 1
-                    break
-                if ln >= 0xC0:  # compression pointer: invalid in a question
-                    return None
-                off += 1
-                if off + ln > len(wire):
-                    return None
-                label = wire[off : off + ln]
-                if not label.isascii():
-                    return None
-                labels.append(label.decode("ascii"))
-                off += ln
-            if off + 4 > len(wire):
-                return None
-            qtype, qclass = _struct.unpack(">HH", wire[off : off + 4])
-            off += 4
-            questions.append(
-                {"name": ".".join(labels), "type": qtype, "class": qclass}
-            )
-        return _json.dumps(
-            {
-                "id": msg_id,
-                "flags": flags,
-                "questions": questions,
-                "ancount": an,
-                "nscount": ns,
-                "arcount": ar,
-            },
-            separators=(",", ":"),
-        )
-    except Exception:  # noqa: BLE001 — malformed wire keeps blackbox
-        return None
-
-
-def protobuf_structural(data: bytes) -> str | None:
-    """Schema-less protobuf field walk (the blackboxprotobuf idea): parse
-    <tag varint, value> pairs for wire types 0 (varint), 1 (fixed64),
-    2 (length-delimited), 5 (fixed32). Length-delimited values render as
-    UTF-8 when cleanly decodable, else lowercase hex. Repeated fields
-    collect into lists. Returns canonical JSON or None."""
-    import json as _json  # noqa: PLC0415
-    import struct as _struct  # noqa: PLC0415
-
-    def varint(buf: bytes, off: int) -> tuple[int, int] | None:
-        val = 0
-        shift = 0
-        while True:
-            if off >= len(buf) or shift > 63:
-                return None
-            b = buf[off]
-            val |= (b & 0x7F) << shift
-            off += 1
-            if not b & 0x80:
-                return (val, off)
-            shift += 7
-
-    try:
-        if not data:
-            return None
-        fields: dict[str, list] = {}
-        off = 0
-        while off < len(data):
-            r = varint(data, off)
-            if r is None:
-                return None
-            tag, off = r
-            field_no, wt = tag >> 3, tag & 7
-            if field_no == 0:
-                return None
-            if wt == 0:
-                r = varint(data, off)
-                if r is None:
-                    return None
-                val, off = r
-            elif wt == 1:
-                if off + 8 > len(data):
-                    return None
-                val = _struct.unpack("<q", data[off : off + 8])[0]
-                off += 8
-            elif wt == 2:
-                r = varint(data, off)
-                if r is None:
-                    return None
-                ln, off = r
-                if off + ln > len(data):
-                    return None
-                raw = data[off : off + ln]
-                off += ln
-                try:
-                    val = raw.decode("utf-8")
-                    if not val.isprintable() and val != "":
-                        val = raw.hex()
-                except UnicodeDecodeError:
-                    val = raw.hex()
-            elif wt == 5:
-                if off + 4 > len(data):
-                    return None
-                val = _struct.unpack("<i", data[off : off + 4])[0]
-                off += 4
-            else:  # wire types 3/4 (groups, deprecated) and 6/7: reject
-                return None
-            fields.setdefault(str(field_no), []).append(val)
-        if not fields:
-            return None
-        flat = {k: (v[0] if len(v) == 1 else v) for k, v in fields.items()}
-        return _json.dumps(flat, separators=(",", ":"), sort_keys=True)
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def ion_structural(text: str) -> str | None:
-    """Import-gated Ion decode mirroring reference nodes.py:364-371:
-    simpleion.loads -> dumps(binary=False, indent='\\t'). Returns None
-    when amazon.ion is not importable (this container) or the payload
-    does not parse — the row stays blackbox either way."""
-    try:
-        from amazon.ion import simpleion  # noqa: PLC0415
-    except ImportError:
-        return None
-    try:
-        return simpleion.dumps(simpleion.loads(text), binary=False, indent="\t")
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _blackbox_bytes(payload: str) -> bytes | None:
-    """Raw wire bytes for a blackbox payload, recovered from the ORIGINAL
-    payload string (not tier-1 ``decoded``): the transport is ASCII — a
-    data-URI with an optional ;base64 envelope — so decoding it here is
-    byte-exact, where the JVM's binary->string cast of the same bytes is
-    lossy for non-UTF-8 wire data (and Arrow refuses to ship such strings
-    to the Python worker at all)."""
-    import base64  # noqa: PLC0415
-
-    if not payload.startswith("data:"):
-        return payload.encode("utf-8", "replace")
-    hdr, _, body = payload.partition(",")
-    if ";base64" in hdr:
-        try:
-            pad = (-len(body)) % 4
-            return base64.b64decode(body + "=" * pad, validate=True)
-        except Exception:  # noqa: BLE001 — invalid transport: stay blackbox
-            return None
-    return body.encode("utf-8", "replace")
-
-
-def decode_structural(
-    df: DataFrame,
-    payload_col: str = "payload",
-    kind_col: str = "decode_kind",
-    decoded_col: str = "decoded",
-    ok_col: str = "decode_ok",
-) -> DataFrame:
-    """Upgrade blackbox-tagged rows in place: where a structural parse
-    succeeds, ``decoded`` becomes the canonical JSON/Ion text,
-    ``decode_ok`` flips to true and ``structurally_decoded`` marks the
-    row; every other row passes through bit-unchanged. The pandas_udf
-    short-circuits per batch when no blackbox rows are present, so the
-    common case pays one vectorized isin() and no Python parsing. It
-    reads the ORIGINAL payload column (ASCII transport — Arrow-safe),
-    never tier-1 ``decoded`` (whose binary->string cast can carry
-    non-UTF-8 sequences Arrow cannot transfer)."""
-    import pandas as pd  # noqa: PLC0415
-
-    def _upgrade(kind: pd.Series, payload: pd.Series) -> pd.Series:
-        mask = kind.isin(("ion", "dns_wire", "protobuf"))
-        if not mask.any():
-            return pd.Series([None] * len(kind), dtype=object)
-        out = []
-        for k, p in zip(kind.tolist(), payload.tolist()):
-            if p is None or k not in ("ion", "dns_wire", "protobuf"):
-                out.append(None)
-            elif k == "ion":
-                if p.startswith(ION_MARKER):
-                    out.append(ion_structural(p))
-                else:
-                    raw = _blackbox_bytes(p)
-                    out.append(
-                        None
-                        if raw is None
-                        else ion_structural(raw.decode("utf-8", "replace"))
-                    )
-            else:
-                raw = _blackbox_bytes(p)
-                if raw is None:
-                    out.append(None)
-                elif k == "dns_wire":
-                    out.append(dns_wire_structural(raw))
-                else:
-                    out.append(protobuf_structural(raw))
-        return pd.Series(out, dtype=object)
-
-    # local-scope definition: the pd.Series hints resolve against the
-    # enclosing function's locals (postponed-annotation eval is off for
-    # this nested def), so pandas can stay a function-local import
-    _upgrade.__annotations__ = {"kind": pd.Series, "payload": pd.Series,
-                                "return": pd.Series}
-    upgrade = F.pandas_udf(_upgrade, "string")
-
-    up = F.when(
-        F.col(kind_col).isin("ion", "dns_wire", "protobuf"),
-        upgrade(F.col(kind_col), F.col(payload_col)),
-    )
-    return (
-        df.withColumn("_structural", up)
-        .withColumn(
-            decoded_col, F.coalesce(F.col("_structural"), F.col(decoded_col))
-        )
-        .withColumn(
-            ok_col, F.when(F.col("_structural").isNotNull(), True).otherwise(F.col(ok_col))
-        )
-        .withColumn("structurally_decoded", F.col("_structural").isNotNull())
-        .drop("_structural")
-    )

@@ -37,6 +37,8 @@ from har2tree_spark.schema import PRIORITY
 
 _IY = 1 << 16
 _RB = 32
+# grid resolution of pip_join's polygon covering prune
+PIP_PRUNE_RES = 4
 
 
 def _cell_parts(cell):
@@ -110,17 +112,17 @@ def knn_join(
     k: int = 1,
     max_ring: int = 4,
     res: int = grid.FINE_RES,
-    doc_local: bool = True,
     exclude_self: bool = False,
     two_phase: bool = False,
 ) -> DataFrame:
     """k nearest candidate rows per probe by grid distance, searching the
-    ring expansion up to ``max_ring``. probes needs (doc_id?, probe_id,
-    cell); candidates needs (doc_id?, cand_id, cell). Returns one row per
-    (probe, rank<=k) that found a neighbor.
+    ring expansion up to ``max_ring``, within the probe's document.
+    probes needs (doc_id, probe_id, cell); candidates needs (doc_id,
+    cand_id, cell). Returns one row per (probe, rank<=k) that found a
+    neighbor.
 
     two_phase=False (default): one shuffle total — the disk explode is
-    narrow; the equi-join on (doc_id?, cell) hashes both sides once. The
+    narrow; the equi-join on (doc_id, cell) hashes both sides once. The
     (2R+1)^2 replication lands on the probe side only, which wins when
     probes << candidates (the fallback-cascade case).
 
@@ -131,7 +133,7 @@ def knn_join(
     farther candidate has a larger ring). Only the unmatched remainder
     re-runs at the full radius, so the expected shuffle amplification is
     ~9x + 81x * (unmatched fraction). Result-identical to single-pass."""
-    keys = ["doc_id"] if doc_local else []
+    keys = ["doc_id"]
     if not two_phase or max_ring <= 1:
         return _disk_knn(probes, candidates, k, max_ring, res, keys, exclude_self)
     r1 = _disk_knn(probes, candidates, k, 1, res, keys, exclude_self)
@@ -151,35 +153,34 @@ def pip_join(
     points: DataFrame,
     polygons: list[tuple],
     keep_cols: tuple[str, ...] = ("doc_id", "span_idx"),
-    prune_res: int | None = 4,
 ) -> DataFrame:
     """Broadcast R-tree point-in-polygon join. ``polygons`` is a driver-side
     list of (poly_id, vertices) with vertices an (m, 2) array-like — the
     small/broadcastable side (tile boundaries, page regions). Returns one
     row per (point, containing polygon).
 
-    Plan shape: (1) optional S2-style covering prune — the union of the
-    polygons' bbox coverings at ``prune_res`` becomes a JVM-side `isin`
+    Plan shape: (1) S2-style covering prune — the union of the polygons'
+    bbox coverings at resolution ``PIP_PRUNE_RES`` becomes a JVM-side `isin`
     filter on the point's cell, so points nowhere near any polygon never
     reach Python; (2) R-tree built once on the driver, broadcast; (3) probe
     in a mapInPandas stage (numpy ray casting per Arrow batch) — no
     shuffle, no per-row Python."""
     spark = points.sparkSession
     polys = [(pid, np.asarray(v, dtype=np.float64)) for pid, v in polygons]
-    if prune_res is not None and polys:
+    if polys:
         cover: set[int] = set()
         for _, v in polys:
             cover.update(
                 grid.np_cover_bbox(
                     float(v[:, 0].min()), float(v[:, 1].min()),
                     float(v[:, 0].max()), float(v[:, 1].max()),
-                    max_cells=64, max_res=prune_res,
+                    max_cells=64, max_res=PIP_PRUNE_RES,
                 ).tolist()
             )
         # the cover is mixed-resolution (compacted): a point survives if its
         # cell at ANY cover resolution is in the cover's cells of that res
         conds = []
-        for r in range(0, prune_res + 1):
+        for r in range(0, PIP_PRUNE_RES + 1):
             cells_r = [c for c in cover if c % 32 == r]
             if cells_r:
                 conds.append(

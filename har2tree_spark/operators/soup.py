@@ -13,19 +13,17 @@ pure JVM codegen, no Python soup in the hot path (the reference's own
 profiling notes name soup parsing as its dominant cost; at 100 TB a
 per-row Python HTML parser is exactly what this engine must not do).
 
-For real-world non-regular HTML, ``soup_features(df, engine="lxml")``
-swaps in an Arrow-batched ``mapInPandas`` event parser behind the SAME
-column contract: lxml's SAX-style ``etree.HTMLParser(target=...)`` when
-lxml is importable, the stdlib ``html.parser`` event stream otherwise —
-the analogue of the reference's BeautifulSoup parser fallback chain
-(helper.py:283-294, lxml -> html.parser). The parser path handles what
-the regex cannot (unclosed tags, single-quoted/unquoted attributes,
-case-mixed markup, comments) and is parity-pinned against the regexp
-path on the regular corpus; the CSS url()/@import arms stay on the JVM
-regexes in both engines so those segments are bit-identical.
+The real-HAR adapter (``sources/har_source._resource_tokens``) parses
+real-world non-regular HTML with ``_parse_markup_events`` instead: lxml's
+SAX-style ``etree.HTMLParser(target=...)`` when lxml is importable, the
+stdlib ``html.parser`` event stream otherwise — the analogue of the
+reference's BeautifulSoup parser fallback chain (helper.py:283-294,
+lxml -> html.parser). The parser handles what the regex cannot (unclosed
+tags, single-quoted/unquoted attributes, case-mixed markup, comments) and
+is parity-pinned against ``soup_features`` on the regular corpus.
 
 VERIFICATION CAVEAT (r5 ADVICE): lxml is not installed in this
-container, so every in-repo run of engine="lxml" — parity pins
+container, so every in-repo run of the event parser — parity pins
 included — exercises the stdlib html.parser fallback, and the
 lxml-specific code path is unverified here. Its one known divergence
 source, libxml2's implied html/head/body start events, is neutralized
@@ -105,7 +103,7 @@ def _parse_markup_events(body: str) -> tuple[list[str], list[str]]:
     is not installed in this container, so in-repo tests exercise the
     stdlib fallback; the lxml-specific implied-element filter
     (``_implied_tag_skip``) is unit-tested as a pure function, and the
-    cross-engine expectations in test_soup.py assume it."""
+    parity expectations in test_soup.py assume it."""
     tags: list[str] = []
     refs: list[str] = []
     try:
@@ -154,12 +152,23 @@ def _parse_markup_events(body: str) -> tuple[list[str], list[str]]:
     return tags, refs
 
 
-def _finalize(df: DataFrame, orig_cols: list[str]) -> DataFrame:
-    """Shared (domhash, n_tags, n_res) derivation + the contract's column
-    order — both engines go through this, so the derived columns are the
-    same JVM expressions either way."""
+def soup_features(df: DataFrame, body_col: str = "body") -> DataFrame:
+    """Adds (tags, domhash, res_refs, n_tags, n_res) for a markup column.
+    ``res_refs`` = attribute refs ++ CSS url() refs ++ @import refs, in
+    that deterministic order (the reference appends per category too).
+    Pure-JVM regexp extraction — the 100-TB hot path for the regular
+    markup grammar."""
+    orig_cols = df.columns
+    body = F.col(body_col)
+    css = (
+        _extract_all(body, CSS_URL_RE),
+        _extract_all(body, CSS_IMPORT_RE),
+    )
+    tags = F.transform(_extract_all(body, TAG_RE), F.lower)
     out = (
-        df.withColumn(
+        df.withColumn("tags", tags)
+        .withColumn("res_refs", F.concat(_extract_all(body, ATTR_RE), *css))
+        .withColumn(
             "domhash",
             F.when(
                 F.size("tags") > 0,
@@ -170,64 +179,6 @@ def _finalize(df: DataFrame, orig_cols: list[str]) -> DataFrame:
         .withColumn("n_res", F.size("res_refs"))
     )
     return out.select(*orig_cols, "tags", "domhash", "res_refs", "n_tags", "n_res")
-
-
-def soup_features(
-    df: DataFrame, body_col: str = "body", engine: str = "regexp"
-) -> DataFrame:
-    """Adds (tags, domhash, res_refs, n_tags, n_res) for a markup column.
-    ``res_refs`` = attribute refs ++ CSS url() refs ++ @import refs, in
-    that deterministic order (the reference appends per category too).
-
-    ``engine="regexp"`` (default): pure-JVM regexp extraction — the 100-TB
-    hot path for the regular markup grammar. ``engine="lxml"``: real HTML
-    event parsing in Arrow-batched ``mapInPandas`` (lxml when importable,
-    stdlib html.parser fallback — the reference's helper.py:283-294
-    chain); same column contract, parity-pinned on regular markup."""
-    orig_cols = df.columns
-    body = F.col(body_col)
-    css = (
-        _extract_all(body, CSS_URL_RE),
-        _extract_all(body, CSS_IMPORT_RE),
-    )
-    if engine == "regexp":
-        tags = F.transform(_extract_all(body, TAG_RE), F.lower)
-        out = df.withColumn("tags", tags).withColumn(
-            "res_refs", F.concat(_extract_all(body, ATTR_RE), *css)
-        )
-        return _finalize(out, orig_cols)
-    if engine != "lxml":
-        raise ValueError(f"unknown soup engine: {engine!r} (regexp|lxml)")
-
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    parsed_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("tags", T.ArrayType(T.StringType()), True),
-            T.StructField("_attr_refs", T.ArrayType(T.StringType()), True),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            parsed = [
-                _parse_markup_events(b if isinstance(b, str) else "")
-                for b in pdf[body_col].tolist()
-            ]
-            pdf = pdf.copy()
-            pdf["tags"] = [t for t, _ in parsed]
-            pdf["_attr_refs"] = [r for _, r in parsed]
-            yield pdf
-
-    out = (
-        df.mapInPandas(run, schema=parsed_schema)
-        # CSS arms stay on the exact JVM regexes of the regexp engine, so
-        # those res_refs segments are bit-identical across engines
-        .withColumn("res_refs", F.concat(F.col("_attr_refs"), *css))
-        .drop("_attr_refs")
-    )
-    return _finalize(out, orig_cols)
 
 
 def js_redirects(

@@ -3,8 +3,9 @@
 Re-grounds the reference's embedded/external-resource extraction + tagging
 (helper.py:356-466 + the J7 resource-type tagging join, har2tree.py:389-426):
 a document's span *content* (text tokens = "pixels") is rasterized into
-point features, assigned to vector zones (polygons) by containment, and
-aggregated per zone — explode -> PIP -> groupBy(zone).
+point features and aggregated per zone — explode -> groupBy(zone). The
+zones are coarse grid cells; polygon zones assign the same pixels with
+``operators/fallback.pip_join``.
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
-from har2tree_spark.operators.fallback import pip_join
 from har2tree_spark.operators.parse import KEY_TOKEN_RE
 
 
@@ -38,18 +38,6 @@ def rasterize_spans(features: DataFrame) -> DataFrame:
         lon.alias("lon"),
         lat.alias("lat"),
         grid.col_cell(key_num, grid.FINE_RES).alias("cell"),
-    )
-
-
-def zonal_stats(pixels: DataFrame, polygons: list[tuple]) -> DataFrame:
-    """Per-zone aggregate over rasterized pixels: pixel count, distinct
-    docs, distinct cells. ``polygons`` = [(poly_id, (m,2) vertices)],
-    broadcast via the R-tree PIP probe."""
-    hits = pip_join(pixels, polygons, keep_cols=("doc_id", "span_idx", "cell"))
-    return hits.groupBy("poly_id").agg(
-        F.count("*").cast("long").alias("n_pixels"),
-        F.count_distinct("doc_id").cast("long").alias("n_docs"),
-        F.count_distinct("cell").cast("long").alias("n_cells"),
     )
 
 

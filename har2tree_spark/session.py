@@ -21,13 +21,35 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    parallelism: local[N] core count. Defaults to $SPARK_GRAFT_CPUS or 32.
+    parallelism: local[N] core count. Defaults to $SPARK_GRAFT_CPUS, else
+    the number of CPUs this process may run on (``os.sched_getaffinity``).
+    This is the only reader of $SPARK_GRAFT_CPUS; other callers read the
+    count back from ``sparkContext.defaultParallelism``.
     shuffle_partitions: defaults to parallelism (local rule: ~= cores; on a
     real cluster this scales with executor count — the N vs 4N scaling
     protocol in BENCH/BASELINE.md sets it proportionally per run).
+
+    Both environment knobs are checked before any session is built: a
+    $SPARK_GRAFT_CPUS that is not a positive integer (read only when
+    ``parallelism`` is None), or a $SPARK_GRAFT_PYTHON_UDS other than
+    true/false (any case), raises ``ValueError``.
     """
+    uds = os.environ.get("SPARK_GRAFT_PYTHON_UDS", "true").lower()
+    if uds not in ("true", "false"):
+        raise ValueError(
+            "SPARK_GRAFT_PYTHON_UDS must be true or false, got "
+            f"{os.environ['SPARK_GRAFT_PYTHON_UDS']!r}"
+        )
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        raw = os.environ.get("SPARK_GRAFT_CPUS")
+        if raw is None:
+            parallelism = len(os.sched_getaffinity(0))
+        else:
+            parallelism = int(raw) if raw.strip().isdigit() else 0
+            if parallelism < 1:
+                raise ValueError(
+                    f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+                )
     if shuffle_partitions is None:
         shuffle_partitions = parallelism
 
@@ -64,10 +86,7 @@ def get_spark(
         # trick. Measured (r8): identity 32-task Arrow stage 0.295 s ->
         # 0.252 s best-of-6, every sample better; ~40-50 ms saved per
         # Python-stage job. Env override for hosts without UDS support.
-        .config(
-            "spark.python.unix.domain.socket.enabled",
-            os.environ.get("SPARK_GRAFT_PYTHON_UDS", "true"),
-        )
+        .config("spark.python.unix.domain.socket.enabled", uds)
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -84,8 +103,3 @@ def host_heap() -> str:
     phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
     return f"{min(16, max(1, phys_gb // 4))}g"
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -108,26 +108,6 @@ def cookies_from_captures(captures: DataFrame) -> DataFrame:
     )
 
 
-def read_har_cookies(spark, path: str, pattern: str = "*.har") -> DataFrame:
-    """Directory of HAR files -> one row per cookie event:
-    (doc_id, span_idx, hostname, direction, cookie, domain, is_3rd_party,
-    empty_response).
-
-    span_idx aligns with the documents reader's span order (same pre-sort),
-    so this table joins 1:1 against the parse/cascade output.
-
-    r8: delegates to the captures reader's single-pass ``cookie_events``
-    column (r7 VERDICT #4) instead of running its own binaryFile scan +
-    JSON re-parse.  ``pattern`` is kept for signature compatibility but
-    the capture listing's brace glob governs — which also means a
-    ``foo.har.gz``-only capture now produces cookie rows (deduped
-    .har-over-.har.gz exactly like the documents reader) where the old
-    ``*.har`` default silently skipped it."""
-    from har2tree_spark.sources.har_source import read_har_captures  # noqa: PLC0415
-
-    return cookies_from_captures(read_har_captures(spark, path))
-
-
 def initial_cookies(cookies: DataFrame, features: DataFrame) -> DataFrame:
     """(doc_id, cookie): the ROOT entry's sent cookies — the reference's
     initial_cookies (har2tree.py:343-346, keyed 'name=value' like

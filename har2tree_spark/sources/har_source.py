@@ -227,12 +227,6 @@ def _redirect_target(entry: dict, url: str, universe: set[str]) -> str:
     return rebuild_url(url, target, universe)
 
 
-def _redirect_media(entry: dict, url: str, universe: set[str]) -> str:
-    """Redirect target as a span key; a target outside the universe keeps
-    its hash key and will take the spatial-fallback path."""
-    return url_key(_redirect_target(entry, url, universe))
-
-
 # the reference's JS-redirect scan (nodes.py:577-586): location.href /
 # window.location / location.replace / location.assign assignments or
 # calls with a quoted literal target, trailing ';' required
@@ -606,8 +600,8 @@ def har_to_doc(doc_id: str, har: dict, sidecars: dict | None = None) -> dict:
         if _dict(e.get("request")).get("url")
     }
     # cookie events ride the SAME walk (r7 VERDICT #4: one binaryFile scan
-    # + one JSON parse per capture — read_har_cookies used to re-list and
-    # re-parse the whole corpus for them). Captures path only: the plain
+    # + one JSON parse per capture — a separate cookie reader used to
+    # re-list and re-parse the whole corpus for them). Captures path only: the plain
     # read_har_dir row stays two-column and skips the extra _body_text
     # decode for non-html/css/js entries.
     want_cookies = sidecars is not None
@@ -1178,61 +1172,3 @@ def read_har_captures(spark, path: str):
 
     return tagged.groupBy("capture").applyInPandas(build, schema=schema)
 
-
-def read_har_bodies(spark, path: str, pattern: str = "*.har"):
-    """Auxiliary flat scan: (doc_id, span_idx, url, mimetype, body, post)
-    per entry with a non-empty decoded body or POST payload -- the feed for
-    exercising the soup (F17/F18) and decode (F9/F10/F14) operators on real
-    capture payloads."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("span_idx", T.IntegerType(), False),
-            T.StructField("url", T.StringType(), True),
-            T.StructField("mimetype", T.StringType(), True),
-            T.StructField("body", T.StringType(), True),
-            T.StructField("post", T.StringType(), True),
-        ]
-    )
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for p, c in zip(pdf["path"].tolist(), pdf["content"].tolist()):
-                doc_id = _doc_id_of(p, path)
-                for i, e in enumerate(_sorted_entries(_load_har_bytes_safe(c))):
-                    body = _body_text(e)
-                    post = str(
-                        _dict(_dict(e.get("request")).get("postData")).get("text", "")
-                        or ""
-                    )
-                    if body or post:
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "span_idx": i,
-                                "url": str(_dict(e.get("request")).get("url", "") or ""),
-                                "mimetype": str(
-                                    _dict(_dict(e.get("response")).get("content"))
-                                    .get("mimeType", "")
-                                    or ""
-                                ),
-                                "body": body,
-                                "post": post,
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "span_idx", "url", "mimetype", "body", "post"]
-            )
-
-    return raw.mapInPandas(run, schema=schema)

@@ -1,4 +1,4 @@
-"""Pure URL/data-URI helpers for the real-HAR ingest boundary.
+"""Pure URL helpers for the real-HAR ingest boundary.
 
 ``rebuild_url`` is the reference's join-dependent URL repair ladder
 (reference helper.py:130-201; behavior pinned by the reference's own
@@ -12,20 +12,15 @@ being built, where the whole universe is already in hand per capture —
 the exact position the reference calls it from (nodes.py:626-631
 redirects, helper.py:222 resource cleanup).
 
-``parse_data_uri`` is the reference's tolerant data-URI split
-(helper.py:85-127): returns ``(mime, mimeparams, data)`` or None, with
-the blind base64 repair arms (append 'A' when len%4==1 after stripping
-'=', then over-pad with '===').
+``canonicalize_rendered_url`` is the F28 rendered-URL canonicalizer.
 
-Both are per-row scalars that only ever run inside Arrow-batched ingest
+All are per-row scalars that only ever run inside Arrow-batched ingest
 closures (mapInPandas / applyInPandas) — never as row-at-a-time Spark
 UDFs.
 """
 
 from __future__ import annotations
 
-import base64
-import binascii
 import os
 import re
 from collections.abc import Collection
@@ -41,8 +36,6 @@ from urllib.parse import (
 )
 
 _HTTP_SCHEME_RE = re.compile(r"^https?://")
-_DATA_RE = re.compile("data:", re.I)
-_B64_BODY_RE = re.compile("[A-Za-z0-9+/]*={0,2}")
 
 
 def rebuild_url(base_url: str, partial: str, known_urls: Collection[str]) -> str:
@@ -184,43 +177,3 @@ def canonicalize_rendered_url(maybe_url: str, base_url: str) -> str | None:
     fragment = quote(parts.fragment, safe=_PATH_SAFE)
     return urlunsplit((scheme, netloc, path, query, fragment))
 
-
-def parse_data_uri(uri: str) -> tuple[str, str, bytes] | None:
-    """Tolerant data-URI split -> (mime, mimeparams, data) or None
-    (reference helper.py:85-127, golden tests/simple_test.py:108-110)."""
-    if not _DATA_RE.match(uri):
-        return None
-    uri = uri[5:]
-    if ";base64" in uri:
-        mime, b64data = uri.split(";base64", 1)
-        if not b64data or b64data[0] != ",":
-            return None
-        b64data = b64data[1:].strip().replace("\n", "")
-        if not _B64_BODY_RE.fullmatch(b64data):
-            return None
-        # blind repair: a stripped body of len%4==1 cannot be valid — tack
-        # one alphabet char on; then over-pad (extra '=' is harmless)
-        b64data = b64data.strip("=")
-        if len(b64data) % 4 == 1:
-            b64data += "A"
-        if len(b64data) % 4:
-            b64data += "==="
-        try:
-            data = base64.b64decode(b64data)
-        except binascii.Error:
-            return None
-    else:
-        if "," not in uri:
-            return None
-        mime, d = uri.split(",", 1)
-        data = unquote_plus(d).encode()
-
-    if mime:
-        if ";" in mime:
-            mime, mimeparams = mime.split(";", 1)
-        else:
-            mimeparams = ""
-    else:
-        mime = "[No mimetype given]"
-        mimeparams = ""
-    return mime, mimeparams, data

@@ -13,11 +13,8 @@ engine's *extension* for continuous document arrival:
     fewer input splits than cores is only dealt round-robin, row by
     row, over the cores). This is the
     streaming face of the lineage/resume story (operators/lineage.py).
-  * ``streaming_tile_counts`` — continuous per-cell feature counts
-    (update mode); the array-level parse expressions run unchanged on a
-    streaming DataFrame (no shuffle before the agg).
-  * ``windowed_event_rates`` — watermarked tumbling-window aggregation
-    over an event-time stream (the late-data pattern).
+  * ``stream_documents`` — the parquet file source that feeds it,
+    ``maxFilesPerTrigger`` files per micro-batch.
 """
 
 from __future__ import annotations
@@ -25,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from har2tree_spark.geo import grid
 from har2tree_spark.operators import cascade, parse
 from har2tree_spark.schema import DOCUMENTS_SCHEMA
 
@@ -76,25 +72,3 @@ def incremental_pipeline(
         .trigger(availableNow=True)
     )
 
-
-def streaming_tile_counts(docs_stream: DataFrame, level: int = grid.COARSE_RES) -> DataFrame:
-    """Continuous per-cell span counts: the parse expressions are narrow,
-    so the only stateful operator is the final aggregation."""
-    feats = parse.parse_documents(docs_stream)
-    zone = grid.col_cell_parent(F.col("cell"), grid.FINE_RES, level)
-    return (
-        feats.filter(F.col("cell").isNotNull())
-        .groupBy(zone.alias("cell"))
-        .agg(F.count("*").alias("n_spans"))
-    )
-
-
-def windowed_event_rates(events_stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-window counts per event type (late rows beyond
-    the watermark are dropped — the bounded-state guarantee)."""
-    return (
-        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )

@@ -31,57 +31,38 @@ def exact_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     members_cap: int = 100,
-    bounded_buffer: bool = True,
 ) -> DataFrame:
     """Groups by content digest; keeper = min id per group.
 
     ``members`` holds only the ``members_cap`` smallest ids per group
     (sorted); ``n_docs`` stays exact. At 100 TB a degenerate group (10^7
     identical boilerplate docs) must not materialize one row holding every
-    member id — the slice bounds the emitted row width (and the shuffled
+    member id — the cap bounds the emitted row width (and the shuffled
     bytes) to O(members_cap).
 
-    DEFAULT path (``bounded_buffer=True``, the r4-VERDICT flip): a
-    row_number-window pre-cap whose per-operator state is O(members_cap)
-    everywhere — row_number streams over the sorted partition, the filter
-    drops everything past the cap before the collect_list, and the exact
-    ``n_docs``/``keeper`` come from a constant-state count/min aggregate.
-    Cost: the 2-column (hash, id) projection is scanned by two branches
-    (prunable-cheap from parquet) plus one extra sort-shuffle.
-    ``bounded_buffer=False`` restores the single-shuffle collect_list
-    + slice plan, whose aggregation buffer is O(group) transiently on one
-    reducer (~80 MB at 10^7 longs — spill-safe, not row-width-unsafe);
-    result-identical (pinned by pytest), the right opt-out when duplicate
-    groups are known small. Pass ``members_cap=None`` for the exact
-    unbounded list (small corpora only)."""
+    Plan: a row_number-window pre-cap whose per-operator state is
+    O(members_cap) everywhere — row_number streams over the sorted
+    partition, the filter drops everything past the cap before the
+    collect_list, and the exact ``n_docs``/``keeper`` come from a
+    constant-state count/min aggregate. Cost: the 2-column (hash, id)
+    projection is scanned by two branches (prunable-cheap from parquet)
+    plus one extra sort-shuffle."""
     digest = F.md5(F.col(text_col))
-    if bounded_buffer and members_cap is not None:
-        h = df.select(
-            digest.alias("content_hash"), F.col(id_col).alias("_mid")
-        )
-        counts = h.groupBy("content_hash").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min("_mid").alias("keeper"),
-        )
-        w = Window.partitionBy("content_hash").orderBy("_mid")
-        capped = (
-            h.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= members_cap)
-            .groupBy("content_hash")
-            .agg(F.sort_array(F.collect_list("_mid")).alias("members"))
-        )
-        return counts.join(capped, "content_hash")
-    members = F.sort_array(F.collect_list(id_col))
-    if members_cap is not None:
-        members = F.slice(members, 1, members_cap)
-    return (
-        df.groupBy(digest.alias("content_hash"))
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min(id_col).alias("keeper"),
-            members.alias("members"),
-        )
+    h = df.select(
+        digest.alias("content_hash"), F.col(id_col).alias("_mid")
     )
+    counts = h.groupBy("content_hash").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.min("_mid").alias("keeper"),
+    )
+    w = Window.partitionBy("content_hash").orderBy("_mid")
+    capped = (
+        h.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= members_cap)
+        .groupBy("content_hash")
+        .agg(F.sort_array(F.collect_list("_mid")).alias("members"))
+    )
+    return counts.join(capped, "content_hash")
 
 
 def word_shingles(text_col: Column, n: int = 3) -> Column:

@@ -24,10 +24,6 @@ def token_count(text_col: Column) -> Column:
     return F.regexp_count(text_col, F.lit(TOKEN_RE)).cast("long")
 
 
-def word_count(text_col: Column) -> Column:
-    return F.size(F.split(F.trim(text_col), "\\s+")).cast("long")
-
-
 def _stopword_hits(words: Column, lang: str) -> Column:
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.filter(words, lambda w: F.array_contains(sw, F.lower(w))))

@@ -1,7 +1,6 @@
 """attrs family (W5/A7/F23-25/F6-7), decode dispatch (F9/F10/F14),
 sidecar scan (S2), header lookup + ref cleanup (F8/F16/P4)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from har2tree_spark import functions as HF
@@ -223,21 +222,18 @@ def test_decode_dispatch_never_throws_fuzz(spark):
     df = spark.createDataFrame(
         [(i, p) for i, p in enumerate(payloads)], "span_idx int, payload string"
     )
-    # both form-arm variants must satisfy totality (the flag swaps in
-    # try_url_decode, whose null branch the coalesce must absorb)
-    for flag in (False, True):
-        rows = decode.decode_dispatch(
-            df, full_percent_decode=flag
-        ).collect()  # must not raise
-        assert len(rows) == len(payloads)
-        for r in rows:
-            assert r.decode_kind in kinds, (r.payload, r.decode_kind)
-            assert r.decoded is not None and r.decode_ok is not None
-            assert r.decoded_size is not None
-            assert (r.decoded_size == 0) == (r.decoded == ""), (
-                r.payload,
-                r.decoded,
-            )
+    # the form arm's try_url_decode null branch must be absorbed by the
+    # coalesce
+    rows = decode.decode_dispatch(df).collect()  # must not raise
+    assert len(rows) == len(payloads)
+    for r in rows:
+        assert r.decode_kind in kinds, (r.payload, r.decode_kind)
+        assert r.decoded is not None and r.decode_ok is not None
+        assert r.decoded_size is not None
+        assert (r.decoded_size == 0) == (r.decoded == ""), (
+            r.payload,
+            r.decoded,
+        )
 
 
 def test_decode_urlsafe_base64(spark):
@@ -293,12 +289,11 @@ def test_decode_blackbox_and_trailpad_arms(spark):
             assert r.decoded == wdec, (p, r.decoded, wdec)
 
 
-def test_decode_form_full_percent_decode_flag(spark):
-    """``full_percent_decode=True`` gives the form arm the reference's
-    parse_qs value semantics (nodes.py:307-323): %XX unescape + '+' ->
-    space, i.e. urllib.parse.unquote_plus. Pinned against the stdlib on
-    every payload, and the flag must change NOTHING outside the form arm
-    (kind/ok everywhere; decoded on non-form rows)."""
+def test_decode_form_percent_decode(spark):
+    """The form arm has the reference's parse_qs value semantics
+    (nodes.py:307-323): %XX unescape + '+' -> space, i.e.
+    urllib.parse.unquote_plus. Pinned against the stdlib on every form
+    payload; the non-form payloads must stay on their own arms."""
     from urllib.parse import unquote_plus
 
     payloads = [
@@ -308,7 +303,7 @@ def test_decode_form_full_percent_decode_flag(spark):
         "k=%E2%82%AC+sign",  # UTF-8 multibyte escape
         "a=%2B&plus=+",  # literal '+' escaped vs space
         "weird=%00",
-        # non-form rows: flag must be a no-op on these
+        # non-form rows
         "QUJD",
         "data:application/x-protobuf,xyz",
         '{"a": 1}',
@@ -317,29 +312,15 @@ def test_decode_form_full_percent_decode_flag(spark):
     df = spark.createDataFrame(
         [(i, p) for i, p in enumerate(payloads)], "span_idx int, payload string"
     )
-    off = {
-        r.span_idx: r
-        for r in decode.decode_dispatch(df, full_percent_decode=False).collect()
-    }
-    on = {
-        r.span_idx: r
-        for r in decode.decode_dispatch(df, full_percent_decode=True).collect()
-    }
+    got = {r.span_idx: r for r in decode.decode_dispatch(df).collect()}
     for i, p in enumerate(payloads):
-        assert on[i].decode_kind == off[i].decode_kind, p
-        assert on[i].decode_ok == off[i].decode_ok, p
-        if off[i].decode_kind == "form_urlencoded":
-            assert on[i].decoded == unquote_plus(p), (p, on[i].decoded)
-            assert on[i].decoded_size == len(on[i].decoded)
-        else:
-            assert on[i].decoded == off[i].decoded, p
-            assert on[i].decoded_size == off[i].decoded_size, p
-    # non-vacuous: at least one escaped payload actually differs flag-on
-    assert any(
-        on[i].decoded != off[i].decoded
-        for i, p in enumerate(payloads)
-        if off[i].decode_kind == "form_urlencoded"
-    )
+        assert (got[i].decode_kind == "form_urlencoded") == (i < 6), p
+        if i < 6:
+            assert got[i].decoded == unquote_plus(p), (p, got[i].decoded)
+            assert got[i].decoded_size == len(got[i].decoded)
+    # non-vacuous: at least one escaped payload differs from a '+'-only
+    # normalization
+    assert any(got[i].decoded != payloads[i].replace("+", " ") for i in range(6))
 
 
 def test_scalar_families_total_on_arbitrary_text(spark):
@@ -386,136 +367,6 @@ def test_scalar_families_total_on_arbitrary_text(spark):
     )
     sf = soup.soup_features(b).collect()
     assert all(r.n_tags is not None and r.n_res is not None for r in sf)
-
-
-# ---- structural second tier (r5 VERDICT #3) -------------------------------
-
-def _dns_query_wire(msg_id=0x1234, name="example.com", qtype=1, qclass=1):
-    import struct
-
-    out = struct.pack(">HHHHHH", msg_id, 0x0100, 1, 0, 0, 0)
-    for label in name.split("."):
-        out += bytes([len(label)]) + label.encode("ascii")
-    out += b"\x00" + struct.pack(">HH", qtype, qclass)
-    return out
-
-
-def test_dns_wire_structural_unit():
-    import json
-
-    wire = _dns_query_wire()
-    got = json.loads(decode.dns_wire_structural(wire))
-    assert got["id"] == 0x1234
-    assert got["questions"] == [{"name": "example.com", "type": 1, "class": 1}]
-    assert got["ancount"] == 0
-    # malformed: truncated header, truncated label, compression pointer,
-    # non-ascii label, trailing-garbage-free but short question
-    assert decode.dns_wire_structural(b"") is None
-    assert decode.dns_wire_structural(wire[:11]) is None
-    assert decode.dns_wire_structural(wire[:-3]) is None
-    import struct
-
-    ptr = struct.pack(">HHHHHH", 1, 0, 1, 0, 0, 0) + b"\xc0\x0c\x00\x01\x00\x01"
-    assert decode.dns_wire_structural(ptr) is None
-    bad = struct.pack(">HHHHHH", 1, 0, 1, 0, 0, 0) + b"\x02\xff\xfe\x00" + b"\x00\x01\x00\x01"
-    assert decode.dns_wire_structural(bad) is None
-
-
-def test_protobuf_structural_unit():
-    import json
-
-    # field 1 varint 42 (single-byte value keeps the wire ASCII-safe for
-    # the Spark string round trip), field 2 string "testing", repeated
-    # field 3 varints 1,2
-    wire = b"\x08\x2a" + b"\x12\x07testing" + b"\x18\x01\x18\x02"
-    got = json.loads(decode.protobuf_structural(wire))
-    assert got == {"1": 42, "2": "testing", "3": [1, 2]}
-    # non-UTF8 length-delimited value renders as hex
-    got2 = json.loads(decode.protobuf_structural(b"\x12\x02\xff\xfe"))
-    assert got2 == {"2": "fffe"}
-    # malformed: empty, truncated varint, truncated length-delimited,
-    # field number 0, unsupported wire type (3 = group start)
-    assert decode.protobuf_structural(b"") is None
-    assert decode.protobuf_structural(b"\x08") is None
-    assert decode.protobuf_structural(b"\x12\x05ab") is None
-    assert decode.protobuf_structural(b"\x00\x01") is None
-    assert decode.protobuf_structural(b"\x0b") is None
-
-
-def test_ion_structural_import_gated():
-    pytest.importorskip("amazon.ion")
-    # reference nodes.py:364-371 semantics: loads -> dumps(binary=False)
-    out = decode.ion_structural("$ion_1_0 {a:1}")
-    assert out is not None and "a" in out
-
-
-def test_decode_structural_spark_upgrade(spark):
-    import base64
-    import json
-
-    dns_b64 = base64.b64encode(_dns_query_wire()).decode()
-    pb_b64 = base64.b64encode(b"\x08\x2a\x12\x07testing").decode()
-    rows = [
-        (0, f"data:application/dns-message;base64,{dns_b64}"),
-        (1, f"data:application/x-protobuf;base64,{pb_b64}"),
-        (2, "data:application/dns-message;base64,QUJD"),  # not a DNS message
-        (3, "$ion_1_0 {a:1}"),  # stays blackbox without amazon.ion
-        (4, "k=v&x=y"),  # non-blackbox: must pass through bit-unchanged
-        (5, "QUJD"),
-    ]
-    df = spark.createDataFrame(rows, "span_idx int, payload string")
-    t1 = decode.decode_dispatch(df)
-    out = {r.span_idx: r for r in decode.decode_structural(t1).collect()}
-    base = {r.span_idx: r for r in t1.collect()}
-    assert out[0].structurally_decoded and out[0].decode_ok
-    assert json.loads(out[0].decoded)["questions"][0]["name"] == "example.com"
-    assert out[1].structurally_decoded and out[1].decode_ok
-    assert json.loads(out[1].decoded) == {"1": 42, "2": "testing"}
-    # malformed wire stays blackbox: decoded/ok unchanged from tier 1
-    assert not out[2].structurally_decoded
-    assert out[2].decoded == base[2].decoded and not out[2].decode_ok
-    try:
-        import amazon.ion  # noqa: F401
-
-        assert out[3].structurally_decoded
-    except ImportError:
-        assert not out[3].structurally_decoded and out[3].decoded == base[3].decoded
-    # non-blackbox rows: every tier-1 column bit-unchanged
-    for i in (4, 5):
-        assert not out[i].structurally_decoded
-        for c in ("decode_kind", "decode_ok", "decoded", "decoded_size"):
-            assert getattr(out[i], c) == getattr(base[i], c), (i, c)
-
-
-def test_decode_structural_never_throws_fuzz(spark):
-    """The structural tier inherits the dispatch totality contract: any
-    payload the cascade tags blackbox must flow through the stdlib
-    parsers without throwing — malformed input returns to blackbox."""
-    import random
-    import string
-
-    rng = random.Random(99)
-    alphabet = string.ascii_letters + string.digits + "+/=,;:$_- \x00\x01\x07"
-    payloads = [
-        "data:application/dns-message;base64,"
-        + "".join(rng.choices(string.ascii_letters + string.digits, k=4 * rng.randrange(1, 12)))
-        for _ in range(60)
-    ]
-    payloads += [
-        "data:application/x-protobuf;base64,"
-        + "".join(rng.choices(string.ascii_letters + string.digits, k=4 * rng.randrange(1, 12)))
-        for _ in range(60)
-    ]
-    payloads += ["$ion_" + "".join(rng.choices(alphabet, k=rng.randrange(0, 30))) for _ in range(30)]
-    df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(payloads)], "span_idx int, payload string"
-    )
-    rows = decode.decode_structural(decode.decode_dispatch(df)).collect()
-    assert len(rows) == len(payloads)
-    for r in rows:
-        assert r.decoded is not None
-        if r.structurally_decoded:
-            assert r.decode_ok
 
 
 def test_multipart_crlf_parity(spark):

@@ -13,7 +13,7 @@ the same SHAPE (same redirect/cookie/referer/sidecar structure the sample
 README-names promise), pushed through read_har_captures -> parse -> exact
 cascade, and pinned against HAND-COMPUTED literal expected values — the
 same property set the reference asserts, on inputs we fully control.
-The reference's pure-function goldens (rebuild_url, parse_data_uri) ARE
+The reference's pure-function goldens (rebuild_url) ARE
 runnable and live in tests/test_urlkit.py with the verbatim expected
 values.
 """
@@ -207,7 +207,7 @@ def test_http_redirect_chain_and_stats(built):
 
 def test_http_redirect_cookie_totals(spark, scenarios_dir):
     # test_stats total_cookies_sent/received analogue: exactly one of each
-    ck = har_cookies.read_har_cookies(spark, scenarios_dir)
+    ck = har_cookies.cookies_from_captures(har_source.read_har_captures(spark, scenarios_dir))
     totals = {r["doc_id"]: r for r in har_cookies.capture_cookie_totals(ck).collect()}
     t = totals["http_redirect"]
     assert t["total_cookies_sent"] == 1

@@ -165,18 +165,21 @@ def test_exact_dedup_members_bounded(spark):
     assert list(row.members) == list(range(100))
 
 
-def test_exact_dedup_bounded_buffer_identical(spark):
-    """bounded_buffer=True (O(cap) state everywhere) must be
-    result-identical to the slice path, including the members order."""
+def test_exact_dedup_bounded_plan_matches_python(spark):
+    """The row_number pre-cap plan gives, per content group, the exact
+    n_docs, the min keeper and the 10 smallest ids in sorted order —
+    checked against the same grouping computed in Python."""
+    import hashlib
+
     rows = [(i, f"text {i % 7}") for i in range(300)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {
+    got = {
         r.content_hash: (r.n_docs, r.keeper, list(r.members))
-        for r in dedup.exact_dedup(d, members_cap=10, bounded_buffer=False).collect()
+        for r in dedup.exact_dedup(d, members_cap=10).collect()
     }
-    b = {
-        r.content_hash: (r.n_docs, r.keeper, list(r.members))
-        for r in dedup.exact_dedup(d, members_cap=10, bounded_buffer=True).collect()
-    }
-    assert a == b
-    assert all(len(v[2]) == 10 for v in a.values())
+    groups: dict[str, list[int]] = {}
+    for i, text in rows:
+        groups.setdefault(hashlib.md5(text.encode()).hexdigest(), []).append(i)
+    want = {h: (len(ids), min(ids), sorted(ids)[:10]) for h, ids in groups.items()}
+    assert got == want
+    assert len(got) == 7

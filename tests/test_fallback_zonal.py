@@ -111,8 +111,8 @@ def test_zonal_stats_polygons(spark):
     ]
     feats = parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))
     pix = zonal.rasterize_spans(feats)
-    zs = zonal.zonal_stats(pix, [("z1", hex_polygon(lon1, lat1, 0.5))]).toPandas()
-    assert len(zs) == 1 and zs.n_pixels.iloc[0] == 2  # both k1 pixels
+    hits = pip_join(pix, [("z1", hex_polygon(lon1, lat1, 0.5))]).toPandas()
+    assert len(hits) == 2 and set(hits.poly_id) == {"z1"}  # both k1 pixels
 
 
 def test_knn_two_phase_identical(spark):

@@ -32,10 +32,6 @@ def test_ring_and_disk():
         ring = grid.np_ring(c, r)
         assert len(ring) == 8 * r
         assert len(set(ring.tolist())) == 8 * r
-    disk = grid.np_disk(np.asarray([c]), 2)
-    assert disk.shape == (1, 25)
-    expect = set(grid.np_ring(c, 0)) | set(grid.np_ring(c, 1)) | set(grid.np_ring(c, 2))
-    assert set(disk[0].tolist()) == expect
 
 
 def test_spark_column_matches_numpy(spark):

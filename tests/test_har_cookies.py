@@ -17,7 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from har2tree_spark.sources import har_cookies
+from har2tree_spark.sources import har_cookies, har_source
 from har2tree_spark.sources.har_cookies import entry_cookies
 
 REF_DATA = "/root/reference/tests/data"
@@ -25,6 +25,10 @@ REF_DATA = "/root/reference/tests/data"
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(REF_DATA), reason="reference HAR corpora not present"
 )
+
+
+def _read_cookies(spark, path):
+    return har_cookies.cookies_from_captures(har_source.read_har_captures(spark, path))
 
 
 def test_entry_cookies_arms():
@@ -107,7 +111,7 @@ def cookie_capture_dir(tmp_path_factory):
 
 
 def test_cookie_scenario_rollups(spark, cookie_capture_dir):
-    ck = har_cookies.read_har_cookies(spark, cookie_capture_dir).cache()
+    ck = _read_cookies(spark, cookie_capture_dir).cache()
     rows = ck.toPandas()
 
     # the no_cookie capture produces zero events (reference golden:
@@ -161,18 +165,17 @@ def test_cookie_provenance_respects_order_and_domain(spark, cookie_capture_dir):
     import pathlib
 
     (pathlib.Path(root) / "late.har").write_text(_json.dumps(late))
-    ck = har_cookies.read_har_cookies(spark, root)
+    ck = _read_cookies(spark, root)
     prov = har_cookies.cookie_provenance(ck.filter(F.col("doc_id") == "late"))
     assert prov.count() == 0
 
 
 def test_initial_cookies_from_root_span(spark, cookie_capture_dir):
     from har2tree_spark.operators.parse import parse_documents
-    from har2tree_spark.sources import har_source
 
     docs = har_source.read_har_dir(spark, cookie_capture_dir)
     feats = parse_documents(docs)
-    ck = har_cookies.read_har_cookies(spark, cookie_capture_dir)
+    ck = _read_cookies(spark, cookie_capture_dir)
     init = {
         (r["doc_id"], r["cookie"])
         for r in har_cookies.initial_cookies(ck, feats).collect()
@@ -185,7 +188,7 @@ def test_initial_cookies_from_root_span(spark, cookie_capture_dir):
 def test_lalibre_cookie_literals(spark):
     """Real-corpus pin: the lalibre captures' cookie surface, counted once
     and asserted literally so adapter regressions surface immediately."""
-    ck = har_cookies.read_har_cookies(spark, f"{REF_DATA}/lalibre").cache()
+    ck = _read_cookies(spark, f"{REF_DATA}/lalibre").cache()
     by_dir = {r["direction"]: r["n"] for r in
               ck.groupBy("direction").agg(F.count("*").alias("n")).collect()}
     assert by_dir == {"sent": 3301, "received": 1513}
@@ -213,7 +216,7 @@ def test_cookie_ops_duckdb_cross_check(spark, tmp_path):
     in DuckDB SQL and compared row-for-row."""
     import duckdb
 
-    ck = har_cookies.read_har_cookies(spark, f"{REF_DATA}/lalibre")
+    ck = _read_cookies(spark, f"{REF_DATA}/lalibre")
     pq = str(tmp_path / "cookies.parquet")
     ck.coalesce(1).write.mode("overwrite").parquet(pq)
     con = duckdb.connect()

@@ -192,22 +192,6 @@ def test_simple_capture_initiators_and_resources(spark):
     assert len(attached) >= 4
 
 
-def test_simple_bodies_feed_soup_engines(spark):
-    # real non-regular HTML through BOTH soup engines: the event-parser
-    # engine must see at least the regexp engine's double-quoted attribute
-    # surface, plus what only a real parser can find.
-    from har2tree_spark.operators import soup
-
-    bodies = har_source.read_har_bodies(spark, f"{REF_DATA}/simple").localCheckpoint()
-    assert bodies.count() >= 1
-    rx = soup.soup_features(bodies, engine="regexp").toPandas().set_index("span_idx")
-    ev = soup.soup_features(bodies, engine="lxml").toPandas().set_index("span_idx")
-    root_rx, root_ev = rx.loc[0], ev.loc[0]
-    assert root_ev["n_tags"] >= root_rx["n_tags"] > 0
-    assert set(root_rx["res_refs"]) <= set(root_ev["res_refs"])
-    assert root_ev["domhash"] is not None
-
-
 # --- capture sidecars (read_har_captures) ---
 
 

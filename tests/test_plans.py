@@ -274,12 +274,13 @@ def test_lsh_fused_signatures_match_per_table(spark):
     fused = df.select(
         "vec_id", knn.hyperplane_signatures(16, 8, 3)("embedding").alias("sigs")
     ).toPandas()
+    vecs = np.asarray([v for _, v in rows])
+    weights = (1 << np.arange(8)).astype(np.int64)
+    got = dict(zip(fused.vec_id, fused.sigs))
     for t in range(3):
-        single = df.select(
-            "vec_id", knn.hyperplane_signature(16, 8, t)("embedding").alias("b")
-        ).toPandas()
-        merged = fused.merge(single, on="vec_id")
-        assert all(s[t] == b for s, b in zip(merged.sigs, merged.b)), f"table {t}"
+        # one table's buckets from its own planes, computed in numpy
+        single = (vecs @ knn._planes(16, 8, t) > 0).astype(np.int64) @ weights
+        assert [got[i][t] for i, _ in rows] == single.tolist(), f"table {t}"
 
 
 def test_tree_json_single_shuffle(spark, tmp_path):
@@ -348,7 +349,7 @@ def test_minhash_single_pair_exchange(spark):
 
 def test_cookie_surface_single_scan(spark, tmp_path):
     """r7 VERDICT #4: the cookie table comes from the captures reader's
-    single pass.  read_har_cookies' plan must contain exactly ONE
+    single pass.  The cookie table's plan must contain exactly ONE
     binaryFile scan and ONE per-capture build (the captures reader's
     FlatMapGroupsInPandas) — no second listing, no cookie-specific
     re-parse; capture_report's executed plan must contain NO binaryFile
@@ -356,7 +357,7 @@ def test_cookie_surface_single_scan(spark, tmp_path):
     import json
 
     from har2tree_spark.pipeline import capture_report
-    from har2tree_spark.sources import har_cookies
+    from har2tree_spark.sources import har_cookies, har_source
 
     root = tmp_path / "caps"
     root.mkdir()
@@ -376,7 +377,7 @@ def test_cookie_surface_single_scan(spark, tmp_path):
     }
     (root / "cap.har").write_text(json.dumps(har))
 
-    ck = har_cookies.read_har_cookies(spark, str(root))
+    ck = har_cookies.cookies_from_captures(har_source.read_har_captures(spark, str(root)))
     plan = ck._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan binaryFile") == 1, plan
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
@@ -408,3 +409,54 @@ def test_only_session_reads_environment():
         if f != root / "session.py" and re.search(r"os\.environ|getenv", f.read_text())
     )
     assert readers == [], readers
+
+
+def test_session_knobs_validated_before_any_session(monkeypatch):
+    """``get_spark`` rejects a mistyped SPARK_GRAFT_CPUS or
+    SPARK_GRAFT_PYTHON_UDS before it touches the session builder, and an
+    unset SPARK_GRAFT_CPUS means the CPUs this process may run on. The
+    builder is stubbed, so no session is started or stopped here."""
+    import os
+    from types import SimpleNamespace
+
+    from har2tree_spark import session
+
+    class Reached(Exception):
+        pass
+
+    class Builder:
+        def master(self, master):
+            raise Reached(master)
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    for var, bad in (
+        ("SPARK_GRAFT_CPUS", "abc"),
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("SPARK_GRAFT_PYTHON_UDS", "maybe"),
+    ):
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_CPUS", "2")
+            m.setenv(var, bad)
+            with pytest.raises(ValueError, match=var):
+                session.get_spark()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_PYTHON_UDS", "False")
+    with pytest.raises(Reached, match=rf"local\[{len(os.sched_getaffinity(0))}\]"):
+        session.get_spark()
+
+
+def test_only_session_reads_cpus():
+    """Tools and ad-hoc benches take the core count from the session
+    (``defaultParallelism``); only ``session.py`` reads SPARK_GRAFT_CPUS.
+    ``bench.py`` is frozen and keeps its own read; ``perfbench`` passes
+    ``parallelism`` explicitly."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = [*(root / "har2tree_spark").rglob("*.py"), *(root / "tools").rglob("*.py")]
+    files.append(root / "bench_extra.py")
+    read = re.compile(r"""environ(?:\.get\(|\[)\s*["']SPARK_GRAFT_CPUS""")
+    readers = sorted(
+        str(f.relative_to(root)) for f in files if read.search(f.read_text())
+    )
+    assert readers == ["har2tree_spark/session.py"], readers

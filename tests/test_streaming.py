@@ -1,10 +1,8 @@
-"""Structured Streaming: incremental cascade, continuous tile counts,
-watermarked windows."""
+"""Structured Streaming: the incremental cascade and its restart law."""
 
 import tempfile
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from har2tree_spark.datagen import gen_documents_df
 from har2tree_spark.operators.cascade import resolve_exact
@@ -33,104 +31,6 @@ def test_incremental_pipeline_matches_batch(spark):
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
         assert got.filter(F.col("doc_id").startswith("scn-")).count() > 0
-
-
-def test_streaming_tile_counts(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        docs = gen_documents_df(spark, 100, seed=11)
-        docs.write.parquet(f"{tmp}/in")
-        stream = ingest.stream_documents(spark, f"{tmp}/in")
-        agg = ingest.streaming_tile_counts(stream)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("tiles_stream")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT sum(n_spans) AS n FROM tiles_stream").collect()[0].n
-        want = (
-            parse_documents(spark.read.parquet(f"{tmp}/in"))
-            .filter("cell is not null")
-            .count()
-        )
-        assert got == want
-
-
-def test_windowed_event_rates(spark):
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        rows = [
-            ("2024-01-01 00:01:00", "view", 1.0),
-            ("2024-01-01 00:02:00", "view", 2.0),
-            ("2024-01-01 00:07:00", "click", 3.0),
-        ]
-        df = spark.createDataFrame(
-            [(r[0], r[1], r[2]) for r in rows], "ts string, event_type string, value double"
-        ).select(F.col("ts").cast("timestamp").alias("ts"), "event_type", "value")
-        df.write.parquet(f"{tmp}/ev")
-        stream = spark.readStream.schema(schema).parquet(f"{tmp}/ev")
-        agg = ingest.windowed_event_rates(stream)
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("rates")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT event_type, n FROM rates").collect()
-        by_type = {r.event_type: r.n for r in got}
-        # append mode emits only windows closed by the watermark
-        assert by_type.get("view", 0) in (0, 2)
-
-
-def test_stateful_doc_progress(spark):
-    """applyInPandasWithState: per-doc cumulative counters across
-    micro-batches converge to the batch-mode totals."""
-    from har2tree_spark.streaming import stateful
-
-    with tempfile.TemporaryDirectory() as tmp:
-        docs = gen_documents_df(spark, 60, seed=21)
-        flat = parse_documents(docs).select("doc_id", "span_idx", "offset", "nbytes")
-        flat.repartition(4).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(flat.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/in")
-        )
-        q = (
-            stateful.doc_progress(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("prog")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r.doc_id: (r.n, r.b)
-            for r in spark.sql(
-                "SELECT doc_id, max(n_spans) AS n, max(total_bytes) AS b "
-                "FROM prog GROUP BY doc_id"
-            ).collect()
-        }
-        want = {
-            r.doc_id: (r.n, r.b)
-            for r in spark.read.parquet(f"{tmp}/in")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"), F.sum("nbytes").alias("b"))
-            .collect()
-        }
-        assert got == want
 
 
 def test_incremental_pipeline_restart_exactly_once(spark):

@@ -8,7 +8,7 @@ empty in this environment; see tests/test_capture_goldens.py for the
 scenario-level substitute).
 """
 
-from har2tree_spark.sources.urlkit import parse_data_uri, rebuild_url
+from har2tree_spark.sources.urlkit import rebuild_url
 
 BASE = "https://lookyloo-testing.herokuapp.com"
 
@@ -53,15 +53,6 @@ def test_rebuild_url_partial_double_slash():
             [target],
         )
         == target
-    )
-
-
-def test_parse_data_uri_golden():
-    # simple_test.py:108-110
-    assert parse_data_uri("data:text/plain;charset=US-ASCII;base64,SGVsbG8sIFdvcmxkIQ==") == (
-        "text/plain",
-        "charset=US-ASCII",
-        b"Hello, World!",
     )
 
 
@@ -118,20 +109,6 @@ def test_rebuild_url_dot_segment_collapse():
 
 def test_rebuild_url_no_path_becomes_slash():
     assert rebuild_url("http://a/", "http://b", ["http://b/"]) == "http://b/"
-
-
-def test_parse_data_uri_arms():
-    # plain (non-base64) arm: percent-decoded
-    assert parse_data_uri("data:text/plain,hi%20there") == ("text/plain", "", b"hi there")
-    # no mimetype
-    assert parse_data_uri("data:,x") == ("[No mimetype given]", "", b"x")
-    # len%4==1 blind repair ('AAAAA' -> 'AAAAAA' + pad)
-    mime, params, data = parse_data_uri("data:application/octet-stream;base64,AAAAA")
-    assert mime == "application/octet-stream" and len(data) >= 3
-    # invalid alphabet -> None; missing comma -> None; not data: -> None
-    assert parse_data_uri("data:text/plain;base64,@@@") is None
-    assert parse_data_uri("data:text/plain;base64") is None
-    assert parse_data_uri("http://x") is None
 
 
 # --- F28 canonicalizer (reference nodes.py:663-674 _sanitize pipeline) ---

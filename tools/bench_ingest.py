@@ -2,7 +2,8 @@
 corpus, replicated to amortize fixed cost (BENCH/BASELINE.md 'ingest'
 section).
 
-Measures three legs at local[$SPARK_GRAFT_CPUS] (default 32):
+Measures three legs at local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on):
 
   1. listing+bytes floor — binaryFile scan + byte count, no parsing
      (the Spark-side cost with a no-op parse closure);
@@ -38,7 +39,6 @@ LALIBRE = "/root/reference/tests/data/lalibre"
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     src = sorted(os.listdir(LALIBRE))
     work = tempfile.mkdtemp(prefix="ingest_bench_")
     n_files = 0
@@ -50,7 +50,8 @@ def main() -> None:
                 shutil.copy(os.path.join(LALIBRE, f), os.path.join(d, f))
                 n_files += 1
 
-    spark = get_spark("bench_ingest", parallelism=cpus, driver_memory="8g")
+    spark = get_spark("bench_ingest", driver_memory="8g")
+    cpus = spark.sparkContext.defaultParallelism
     # warmup: python workers + codegen
     spark.range(0, 1 << 12, numPartitions=cpus).mapInPandas(
         lambda it: it, "id long"

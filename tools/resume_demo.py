@@ -38,10 +38,9 @@ def main() -> None:
     corpus = sys.argv[1]
     base = sys.argv[2]
     kill_after = os.environ.get("SPARK_GRAFT_KILL_AFTER")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    spark = get_spark(
-        "resume_demo", parallelism=cpus, shuffle_partitions=4 * cpus,
-        driver_memory=host_heap(),
+    spark = get_spark("resume_demo", driver_memory=host_heap())
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(4 * spark.sparkContext.defaultParallelism)
     )
     run = lineage.CheckpointedRun(spark, base, run_id="resume-demo")
     pre_done = sorted(run.manifest["stages"])

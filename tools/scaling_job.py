@@ -23,15 +23,13 @@ from har2tree_spark.session import get_spark, host_heap  # noqa: E402
 
 def main() -> None:
     corpus = sys.argv[1]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("scaling_job", driver_memory=host_heap())
+    cpus = spark.sparkContext.defaultParallelism
     # shuffle partitions scale with the core count, as they would with
     # executor count on a cluster (BASELINE.md protocol); 4 tasks per core
     # so the scheduler absorbs stragglers instead of the slowest partition
     # gating the stage
-    spark = get_spark(
-        f"scaling_{cpus}", parallelism=cpus, shuffle_partitions=4 * cpus,
-        driver_memory=host_heap(),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cpus))
     docs = spark.read.parquet(corpus)
     # warm-up (excluded from timing): JVM task-thread + python-worker spawn
     # and codegen compilation are cold-start costs a long-lived cluster
