@@ -138,7 +138,11 @@ def identifiers_extract(features: DataFrame) -> DataFrame:
     )
 
 
-def span_timings(features: DataFrame, base_epoch: int = 1_600_000_000) -> DataFrame:
+# the epoch a span at offset 0 starts at
+_BASE_EPOCH = 1_600_000_000
+
+
+def span_timings(features: DataFrame) -> DataFrame:
     """F4/F5 timestamp parse + duration math (reference URLNode start/stop
     time fields, nodes.py:172-210): each span's start = base epoch +
     offset seconds; duration = gap to the next span in the document (the
@@ -147,7 +151,7 @@ def span_timings(features: DataFrame, base_epoch: int = 1_600_000_000) -> DataFr
     exactly."""
     f = _live(features).select("doc_id", "span_idx", "offset")
     w = Window.partitionBy("doc_id").orderBy("offset", "span_idx")
-    epoch = (F.lit(base_epoch) + F.col("offset")).cast("long")
+    epoch = (F.lit(_BASE_EPOCH) + F.col("offset")).cast("long")
     dur = F.coalesce(
         F.lead("offset").over(w) - F.col("offset"), F.lit(0)
     ).cast("long")

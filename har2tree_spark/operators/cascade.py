@@ -220,57 +220,17 @@ def candidate_edges(features: DataFrame, dedup: bool = True) -> DataFrame:
     return edges.withColumn("priority", prio_expr.cast("int"))
 
 
-_EXPENSIVE_PLAN_NODES = (
-    "Join", "Aggregate", "Window", "Generate", "Expand", "Sort",
-    "MapInPandas", "FlatMapGroupsInPandas", "MapInArrow", "PythonUDF",
-    "Union", "Repartition", "CollectMetrics",
-)
-
-
-def _is_cheap_rescan(df: DataFrame) -> bool:
-    """True when the frame's optimized plan is only projections/filters
-    over leaf scans (checkpoint RDD, file source, local relation) — i.e.
-    re-scanning it per branch costs no recomputation of expensive lineage,
-    so an extra materialization pass would be pure overhead. Conservative:
-    any doubt (or introspection failure) returns False and keeps the
-    materialization."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 - introspection is best-effort
-        return False
-    return not any(node in plan for node in _EXPENSIVE_PLAN_NODES)
-
-
 def resolve_rank(features: DataFrame) -> DataFrame:
     """Consume-once resolution (rank mode): one candidate equi-join plus
     one ``min_by`` winner aggregate. Children with no candidate edge fall
     to 'fallback_root' (the spatial fallback stages are applied by
     operators.fallback on top of this). Returns JOIN_RESULT_SCHEMA columns.
 
-    Materializes one slim projection of the live features (no text/
-    geometry columns) that the candidate probe/target branches AND the
-    roots/unmatched branches all fan out from — a single upstream
-    evaluation. At cluster scale this is the table the features stage
-    writes to storage. Skipped when the input plan is already a cheap
-    re-scannable leaf (a checkpoint or file scan under only
-    projections/filters): re-checkpointing such an input costs one full
-    eager pass and buys nothing, since each branch re-scan is exactly as
-    cheap as scanning the new checkpoint (r8 measured: ~0.3 s of the
-    bench's q2 was this double materialization). ``pipeline.run_pipeline``
-    always hands it the features checkpoint, so there it is skipped;
-    callers that pass lazy parse output get it."""
-    if not _is_cheap_rescan(features):
-        # EAGER localCheckpoint, not persist(): (a) a lazy persist lets the
-        # candidate branches of one cold job race to compute the uncached
-        # upstream concurrently (measured ~5x the upstream cost); (b) a
-        # persist() entry lives in the CacheManager until someone calls
-        # unpersist, so repeated invocations on a long-lived driver (bench,
-        # streaming foreachBatch) accumulate cached tables — checkpoint
-        # blocks are freed by the ContextCleaner when the frame is GC'd.
-        features = live_features(features).select(
-            "doc_id", "span_idx", "kind", "media_ref", "offset",
-            "key", "valid", "root_idx", "ref_tokens", "n_live",
-        ).localCheckpoint()
+    Lazy, like ``resolve_exact``: building the frame starts no job. The
+    candidate probe/target branches and the roots/unmatched branches all
+    read ``features``, so hand it a materialized table (a checkpoint or a
+    file scan), as ``pipeline.run_pipeline`` does; over lazy parse output
+    each branch re-runs parse."""
     f = live_features(features).select("doc_id", "span_idx", "root_idx")
     edges = candidate_edges(features, dedup=False)
     # spans with no candidate edge fall to the doc root: modeled as a

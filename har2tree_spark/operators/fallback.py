@@ -33,12 +33,15 @@ from pyspark.sql import functions as F
 from har2tree_spark.geo import grid
 from har2tree_spark.geo.geometry import points_in_polygon
 from har2tree_spark.geo.rtree import STRtree
+from har2tree_spark.operators.kernel import MAX_RING
 from har2tree_spark.schema import PRIORITY
 
 _IY = 1 << 16
 _RB = 32
 # grid resolution of pip_join's polygon covering prune
 PIP_PRUNE_RES = 4
+# the point columns pip_join passes through
+_PIP_KEEP_COLS = ("doc_id", "span_idx")
 
 
 def _cell_parts(cell):
@@ -46,11 +49,12 @@ def _cell_parts(cell):
     return F.floor(rest / F.lit(_IY)), F.pmod(rest, F.lit(_IY))
 
 
-def neighbor_cells(df: DataFrame, cell_col: str, radius: int, res: int = grid.FINE_RES) -> DataFrame:
-    """Explode each row into its (2r+1)^2 neighbor cells (toroidal wrap),
-    adding ``nbr_cell`` and ``ring`` (Chebyshev distance) and ``d2``
-    columns — all integer column arithmetic, whole-stage-codegen'd."""
-    n = 1 << res
+def neighbor_cells(df: DataFrame, cell_col: str, radius: int) -> DataFrame:
+    """Explode each row into its (2r+1)^2 neighbor cells on the
+    ``grid.FINE_RES`` grid (toroidal wrap), adding ``nbr_cell`` and
+    ``ring`` (Chebyshev distance) and ``d2`` columns — all integer column
+    arithmetic, whole-stage-codegen'd."""
+    n = 1 << grid.FINE_RES
     offs = [
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
         for dx in range(-radius, radius + 1)
@@ -63,7 +67,7 @@ def neighbor_cells(df: DataFrame, cell_col: str, radius: int, res: int = grid.FI
     nbr = (
         (F.pmod(ix + dx, F.lit(n)) * F.lit(_IY) + F.pmod(iy + dy, F.lit(n)))
         * F.lit(_RB)
-        + F.lit(res)
+        + F.lit(grid.FINE_RES)
     ).cast("long")
     return (
         out.withColumn("nbr_cell", nbr)
@@ -78,7 +82,6 @@ def _disk_knn(
     candidates: DataFrame,
     k: int,
     radius: int,
-    res: int,
     keys: list[str],
     exclude_self: bool,
 ) -> DataFrame:
@@ -88,7 +91,6 @@ def _disk_knn(
         probes.select(*keys, "probe_id", F.col("cell").alias("_pc")),
         "_pc",
         radius,
-        res,
     )
     c = candidates.select(*keys, "cand_id", F.col("cell").alias("nbr_cell"), "cand_offset")
     j = p.join(c, [*keys, "nbr_cell"])
@@ -111,7 +113,6 @@ def knn_join(
     candidates: DataFrame,
     k: int = 1,
     max_ring: int = 4,
-    res: int = grid.FINE_RES,
     exclude_self: bool = False,
     two_phase: bool = False,
 ) -> DataFrame:
@@ -135,8 +136,8 @@ def knn_join(
     ~9x + 81x * (unmatched fraction). Result-identical to single-pass."""
     keys = ["doc_id"]
     if not two_phase or max_ring <= 1:
-        return _disk_knn(probes, candidates, k, max_ring, res, keys, exclude_self)
-    r1 = _disk_knn(probes, candidates, k, 1, res, keys, exclude_self)
+        return _disk_knn(probes, candidates, k, max_ring, keys, exclude_self)
+    r1 = _disk_knn(probes, candidates, k, 1, keys, exclude_self)
     done = (
         r1.groupBy(*keys, "probe_id")
         .agg(F.count("*").alias("_nm"))
@@ -145,19 +146,15 @@ def knn_join(
     )
     r1_done = r1.join(done, [*keys, "probe_id"], "left_semi")
     rest = probes.join(done, [*keys, "probe_id"], "left_anti")
-    r2 = _disk_knn(rest, candidates, k, max_ring, res, keys, exclude_self)
+    r2 = _disk_knn(rest, candidates, k, max_ring, keys, exclude_self)
     return r1_done.unionByName(r2)
 
 
-def pip_join(
-    points: DataFrame,
-    polygons: list[tuple],
-    keep_cols: tuple[str, ...] = ("doc_id", "span_idx"),
-) -> DataFrame:
+def pip_join(points: DataFrame, polygons: list[tuple]) -> DataFrame:
     """Broadcast R-tree point-in-polygon join. ``polygons`` is a driver-side
     list of (poly_id, vertices) with vertices an (m, 2) array-like — the
     small/broadcastable side (tile boundaries, page regions). Returns one
-    row per (point, containing polygon).
+    row per (point, containing polygon): (doc_id, span_idx, poly_id).
 
     Plan shape: (1) S2-style covering prune — the union of the polygons'
     bbox coverings at resolution ``PIP_PRUNE_RES`` becomes a JVM-side `isin`
@@ -200,13 +197,13 @@ def pip_join(
     bc = spark.sparkContext.broadcast((polys, boxes))
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in points.select(*keep_cols).schema.fields
+        for f in points.select(*_PIP_KEEP_COLS).schema.fields
     ) + ", poly_id string"
 
     def probe(batches):
         polys_l, boxes_l = bc.value
         tree = STRtree(boxes_l)
-        cols = list(keep_cols)
+        cols = list(_PIP_KEEP_COLS)
         for pdf in batches:
             lon = pdf["lon"].to_numpy(dtype=np.float64)
             lat = pdf["lat"].to_numpy(dtype=np.float64)
@@ -231,15 +228,14 @@ def pip_join(
                 out["poly_id"] = pd.Series(dtype="object")
             yield out
 
-    return points.select(*keep_cols, "lon", "lat").mapInPandas(probe, out_schema)
+    return points.select(*_PIP_KEEP_COLS, "lon", "lat").mapInPandas(probe, out_schema)
 
 
-def resolve_with_fallbacks(
-    features: DataFrame, base: DataFrame, max_ring: int = 4
-) -> DataFrame:
+def resolve_with_fallbacks(features: DataFrame, base: DataFrame) -> DataFrame:
     """Upgrade rank-mode 'fallback_root' assignments with the spatial
     fallback cascade: coarse-cell host match first, then ring-kNN over
-    attached spans, then root (the relational J10->J13 chain)."""
+    attached spans out to the exact kernel's ``MAX_RING``, then root (the
+    relational J10->J13 chain)."""
     f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
     unmatched = base.filter(F.col("join_kind") == "fallback_root").select(
         "doc_id", "span_idx"
@@ -296,7 +292,7 @@ def resolve_with_fallbacks(
             F.col("a_offset").alias("cand_offset"),
         ),
         k=1,
-        max_ring=max_ring,
+        max_ring=MAX_RING,
     ).select(
         "doc_id",
         F.col("probe_id").alias("span_idx"),

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# doubling rounds: resolves forest chains up to 2^10 docs deep; a cycle
+# stops here with each doc on its current ancestor
+_MAX_DOUBLING = 10
+
 
 def doc_summaries(features: DataFrame, join_result: DataFrame) -> DataFrame:
     """One row per doc: root span's key + media_ref, and the landing key
@@ -92,7 +96,7 @@ def forest_edges(features: DataFrame, join_result: DataFrame) -> DataFrame:
     )
 
 
-def forest_roots(edges: DataFrame, all_docs: DataFrame, max_doubling: int = 10) -> DataFrame:
+def forest_roots(edges: DataFrame, all_docs: DataFrame) -> DataFrame:
     """(doc_id, forest_root): follow doc-level parent pointers to the top
     by pointer doubling. Docs with no parent are their own root."""
     cur = (
@@ -103,7 +107,7 @@ def forest_roots(edges: DataFrame, all_docs: DataFrame, max_doubling: int = 10) 
         )
         .localCheckpoint()
     )
-    for _ in range(max_doubling):
+    for _ in range(_MAX_DOUBLING):
         nxt = (
             cur.alias("a")
             .join(
@@ -135,8 +139,10 @@ def forest_roots(edges: DataFrame, all_docs: DataFrame, max_doubling: int = 10) 
 
 def forest_join(features: DataFrame, join_result: DataFrame) -> DataFrame:
     """Full forest assembly: cross-doc edges + root resolution.
-    Returns (doc_id, parent_doc nullable, forest_root)."""
-    edges = forest_edges(features, join_result).persist()
+    Returns (doc_id, parent_doc nullable, forest_root). The edges are a
+    local checkpoint, not ``persist()``: the ContextCleaner frees it, so a
+    long-lived driver keeps no cache entry per call."""
+    edges = forest_edges(features, join_result).localCheckpoint()
     docs = features.filter(F.col("n_live") > 0).select("doc_id").distinct()
     roots = forest_roots(edges, docs)
     return (

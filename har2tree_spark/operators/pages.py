@@ -19,10 +19,14 @@ page roots, prior-page anchors) is precomputed at ingest into aligned
 array columns on the captures row (sources/har_source._pages_layout), so
 this operator is PURE JVM column logic: one doc_id-keyed join of the tree
 against the (tiny) captures dimension plus element_at/array_position
-lookups -- no Python, no extra shuffle beyond the doc_id hash join that
-every per-doc stage shares.  Only ``fallback_root`` rows are touched:
+lookups -- no Python.  Only ``fallback_root`` rows are touched:
 redirect/frame/initiator/referer/resource wins and the hostname/spatial
 fallbacks (the ladder's earlier arms) stay exactly as resolved.
+
+A re-parent that would close a parent cycle is rejected. The cycle
+members come from the pointer doubling in ``stats`` (the engine's one
+parent-pointer walker, exact for any cycle length): one groupBy(doc_id)
+over the post-ladder pointers, joined back on (doc_id, span_idx).
 """
 
 from __future__ import annotations
@@ -30,14 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from har2tree_spark.operators.stats import _cycle_members
+
 # ladder-arm priorities: after every relational + spatial stage, before
 # the terminal root fallback (the rows they refine carried fallback_root)
 PAGE_PRIORITY = {"page": 10, "page_rendered": 11, "page_before": 12}
-
-# ancestor hops the cycle guard walks before declaring an anchor path
-# unresolvable (and rejecting the re-parent); far above real tree depths
-# (the deepest real capture measured is 50)
-_CYCLE_WALK_CAP = 256
 
 _CAP_COLS = (
     "rendered_span_idx",
@@ -125,56 +126,29 @@ def attach_pages(tree: DataFrame, captures: DataFrame) -> DataFrame:
     # node / prior-page root) can itself sit UNDER the orphan — e.g. the
     # page root was claimed as the orphan's resource child by the cascade —
     # and re-parenting would then close a cycle the reference's sequential
-    # build cannot produce, leaving cycle members unreachable to the
-    # pointer-doubling depth pass. Reject any re-parent whose anchor's
-    # root path (walked over the POST-ladder parent map, so mutually
-    # dependent re-parents are also caught) passes through the span
-    # itself; a rejected row keeps its original fallback_root edge, which
-    # can never create a cycle (its path ends at the tree root). The walk
-    # is a bounded JVM fold (_CYCLE_WALK_CAP ancestor hops, far above any
-    # real capture depth — lalibre max is 50; a cycle longer than the cap
-    # would go undetected, accepted residual risk). Every member of a
-    # cycle sees its own walk return to itself and is rejected, so the
-    # result is a forest. No Python, one doc-keyed aggregate + join
-    # beyond the r7 plan.
-    pmap = cand.groupBy("doc_id").agg(
-        F.map_from_arrays(
-            F.collect_list("span_idx"),
-            F.collect_list(
-                F.when(F.col("hit"), F.col("new_parent")).otherwise(
-                    F.col("old_parent")
-                )
-            ),
-        ).alias("_pmap")
+    # build cannot produce, leaving cycle members unreachable to the depth
+    # pass. A re-parent is rejected iff its span is on a cycle of the
+    # POST-ladder parent pointers (so mutually dependent re-parents are
+    # caught too): stats' pointer doubling finds the cycle members, one
+    # aggregate per doc, joined back on (doc_id, span_idx). A rejected row
+    # keeps its original fallback_root edge, which can never create a cycle
+    # (its path ends at the tree root). A re-parent whose anchor path only
+    # runs into ANOTHER orphan's cycle is not itself on it and lands: once
+    # that cycle's members are rejected its path ends at the root again.
+    on_cycle = (
+        cand.select(
+            "doc_id",
+            "span_idx",
+            F.when(F.col("hit"), F.col("new_parent"))
+            .otherwise(F.col("old_parent"))
+            .alias("parent_idx"),
+        )
+        .groupBy("doc_id")
+        .agg(_cycle_members().alias("members"))
+        .select("doc_id", F.explode("members").alias("span_idx"), F.lit(True).alias("cyc"))
     )
-    cand = cand.join(pmap, "doc_id", "left")
-    walk = F.aggregate(
-        F.sequence(F.lit(1), F.lit(_CYCLE_WALK_CAP)),
-        F.struct(
-            F.col("new_parent").alias("cur"),
-            F.lit(False).alias("cyc"),
-            F.lit(False).alias("done"),
-        ),
-        lambda acc, _: F.when(acc["done"], acc).otherwise(
-            F.struct(
-                F.element_at(F.col("_pmap"), acc["cur"]).alias("cur"),
-                acc["cur"].eqNullSafe(F.col("span_idx")).alias("cyc"),
-                (
-                    acc["cur"].eqNullSafe(F.col("span_idx"))
-                    | F.element_at(F.col("_pmap"), acc["cur"]).isNull()
-                    | (F.element_at(F.col("_pmap"), acc["cur"]) == -1)
-                ).alias("done"),
-            )
-        ),
-        # reject only a walk that reached the span ITSELF: a walk that
-        # merely runs into ANOTHER orphan's cycle (or past the cap) keeps
-        # its re-parent — once the actual cycle members are rejected (each
-        # of their walks reaches itself around the loop), such paths
-        # terminate at the root again, so rejecting them too would be
-        # needless over-rejection
-        lambda acc: acc["cyc"],
-    )
-    ok = F.col("hit") & ~F.when(F.col("hit"), walk).otherwise(F.lit(False))
+    cand = cand.join(on_cycle, ["doc_id", "span_idx"], "left")
+    ok = F.col("hit") & F.col("cyc").isNull()
     return cand.select(
         "doc_id",
         "span_idx",

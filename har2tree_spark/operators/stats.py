@@ -3,13 +3,17 @@
 Re-grounds the reference's ``stats`` property (reference har2tree.py:505-528;
 golden values asserted at tests/simple_test.py:63-75), the HostNode rollups
 (nodes.py:802-835, :735-760) and ``build_all_hashes`` (har2tree.py:550-569)
-as single groupBy aggregates, plus a pointer-doubling depth operator for the
-tree-depth / redirect-chain figures (Spark has no recursion; depth over
-parent pointers converges in bit_length(n) doubling steps, run inside one
-groupBy(doc_id) row per doc with higher-order array functions).
+as single groupBy aggregates, plus the engine's one parent-pointer walker
+(Spark has no recursion): pointer doubling over one doc's parent pointers,
+bit_length(n) steps inside one groupBy(doc_id) row per doc with
+higher-order array functions. Its readers give the tree-depth /
+redirect-chain depths and the parent cycles that ``pages.attach_pages``'
+cycle guard rejects.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -17,19 +21,19 @@ from pyspark.sql import functions as F
 from har2tree_spark.geo import grid
 
 
-def _rooted_depths() -> Column:
-    """Aggregate over one doc's (span_idx, parent_idx) rows:
-    array<struct<span_idx, depth>>, one entry per row.
+def _doubled(finish: Callable[[Column], Column]) -> Column:
+    """Aggregate over one doc's (span_idx, parent_idx) rows: the one
+    parent-pointer walk in the engine. ``finish`` reads its result, the
+    struct ``anc`` / ``hops`` of arrays indexed by span_idx.
 
     The parent pointers go into an array indexed by span_idx (positions of
     dropped spans filled with null parents), then pointer doubling runs
-    inside the row: each step sets every node's ancestor to its ancestor's
-    ancestor and adds up the hops, so bit_length(n_rows) steps reach past
-    the root (-1) from any rooted span. Every span, the root too, counts
-    the hop to -1, so depth is hops - 1. ``F.get`` returns null out of
-    range (-1 included), which keeps -1 and dangling pointers where they
-    are. A span that never reaches -1 (in or behind a parent cycle, or
-    under a dangling pointer) gets a null depth."""
+    inside the row: each of k = bit_length(n_rows) steps sets every node's
+    ancestor to its ancestor's ancestor and adds up the hops, so ``anc``
+    ends at each span's 2^k-th ancestor, 2^k > n_rows. ``F.get`` returns
+    null out of range (-1 included), which keeps -1 and dangling pointers
+    where they are: a walk that ends there stops on them, with ``hops``
+    counting the steps to -1 from a rooted span."""
     nodes = F.collect_list(F.struct("span_idx", "parent_idx"))
     max_idx = F.max("span_idx")
     idx = nodes["span_idx"]
@@ -48,7 +52,21 @@ def _rooted_depths() -> Column:
             ).alias("hops"),
         )
 
-    def finish(acc):
+    return F.aggregate(
+        F.sequence(F.lit(1), F.length(F.bin(F.count("*")))),
+        F.struct(parents.alias("anc"), F.array_repeat(F.lit(1), max_idx + 1).alias("hops")),
+        double,
+        finish,
+    )
+
+
+def _rooted_depths() -> Column:
+    """array<struct<span_idx, depth>> over one doc's rows, one entry per
+    row. Every span, the root too, counts the hop to -1, so depth is
+    hops - 1. A span that never reaches -1 (in or behind a parent cycle,
+    or under a dangling pointer) gets a null depth."""
+
+    def depths(acc):
         # gap entries keep a null ancestor for good: drop them
         return F.filter(
             F.transform(
@@ -64,30 +82,36 @@ def _rooted_depths() -> Column:
             lambda r: r.isNotNull(),
         )
 
-    return F.aggregate(
-        F.sequence(F.lit(1), F.length(F.bin(F.count("*")))),
-        F.struct(parents.alias("anc"), F.array_repeat(F.lit(1), max_idx + 1).alias("hops")),
-        double,
-        finish,
+    return _doubled(depths)
+
+
+def _cycle_members() -> Column:
+    """array<int>: the span_idx of every span on a parent cycle in one
+    doc's rows. No tail outlives 2^k > n_rows steps, so a 2^k-th ancestor
+    is either where a walk stopped (-1, a dropped span, a pointer out of
+    range, a span with a null parent) or a cycle member; and doubling maps
+    each cycle onto itself, so every member is some span's 2^k-th
+    ancestor. A stop has no ancestor of its own in ``anc`` (null), a cycle
+    member has one, so the final ancestors that have one are exactly the
+    cycle members."""
+    return _doubled(
+        lambda acc: F.array_distinct(
+            F.filter(acc["anc"], lambda a: F.get(acc["anc"], a).isNotNull())
+        )
     )
 
 
-def compute_depths(join_result: DataFrame, depth_complete: bool = False) -> DataFrame:
+def compute_depths(join_result: DataFrame) -> DataFrame:
     """(doc_id, span_idx, depth) from parent pointers; no Spark job.
 
-    ``depth_complete`` is the producer's contract: True means every row's
-    ``depth`` column is filled and current (exact-mode cascade output) and
-    it passes through. Anything else re-derives depth from ``parent_idx``
-    in one groupBy(doc_id): pointer doubling inside each doc's row
-    (:func:`_rooted_depths`), O(n log n) per doc of n spans, whatever the
-    size of the other docs in the frame.
+    Re-derives depth from ``parent_idx`` in one groupBy(doc_id): pointer
+    doubling inside each doc's row (:func:`_doubled`), O(n log n) per doc
+    of n spans, whatever the size of the other docs in the frame.
 
     Depth counts parent hops from the doc root (depth 0). A span that is
     not reachable from the root -- in or behind a parent cycle, which rank
     mode can produce, or under a pointer to a span not in the frame -- gets
     a null depth."""
-    if depth_complete:
-        return join_result.select("doc_id", "span_idx", "depth")
     return (
         join_result.groupBy("doc_id")
         .agg(_rooted_depths().alias("depths"))
@@ -105,11 +129,12 @@ def doc_stats(
     ``total_chain`` and ``tree_depth`` come from one groupBy(doc_id) over
     ``join_result``. ``tree_depth`` is the deepest depth reachable from
     the root, plus 1; spans with a null depth (unreachable, see
-    :func:`compute_depths`) do not count. ``depth_complete`` as in
-    :func:`compute_depths`: pass True only for exact-mode cascade output
-    as the kernel emits it -- e.g. not after ``pages.attach_pages``, which
-    re-parents rows and nulls only THEIR depths, leaving descendants'
-    depths stale (r7 ADVICE #1)."""
+    :func:`compute_depths`) do not count. ``depth_complete`` is the
+    producer's contract: True means every row's ``depth`` column is filled
+    and current, so its max is read as is. Pass True only for exact-mode
+    cascade output as the kernel emits it -- e.g. not after
+    ``pages.attach_pages``, which re-parents rows and nulls only THEIR
+    depths, leaving descendants' depths stale (r7 ADVICE #1)."""
     f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
     base = f.groupBy("doc_id").agg(
         F.count("*").cast("int").alias("total_spans"),
@@ -175,20 +200,16 @@ def hash_groups(features: DataFrame) -> DataFrame:
     )
 
 
-def redirect_chains(
-    features: DataFrame,
-    join_result: DataFrame,
-    depth_complete: bool = False,
-) -> DataFrame:
+def redirect_chains(features: DataFrame, join_result: DataFrame) -> DataFrame:
     """Redirect-chain listing per doc (the ``redirects`` property analogue,
     har2tree.py:530-533): redirect-edge members ordered root-to-leaf.
     ``chain_len`` counts redirect EDGES anywhere in the tree — a whole-tree
     figure, deliberately broader than the reference's ``redirects`` list
     (which is the root->rendered-node path only; r7 ADVICE #3 documents
-    the divergence). ``depth_complete`` as in :func:`doc_stats`."""
+    the divergence). Depths are re-derived from the parent pointers
+    (:func:`compute_depths`)."""
     red = join_result.filter(F.col("join_kind") == "redirect")
-    d = compute_depths(join_result, depth_complete=depth_complete)
-    d = d.withColumnRenamed("depth", "d")
+    d = compute_depths(join_result).withColumnRenamed("depth", "d")
     return (
         red.join(d, ["doc_id", "span_idx"])
         .groupBy("doc_id")

@@ -20,14 +20,15 @@ from pyspark.sql import functions as F
 from har2tree_spark.geo import grid
 
 
-def tile_assignment(features: DataFrame, levels: tuple[int, ...] = grid.TILE_LEVELS) -> DataFrame:
-    """One row per (span, level): (doc_id, span_idx, cell, level, parent_cell).
+def tile_assignment(features: DataFrame) -> DataFrame:
+    """One row per (span, level in ``grid.TILE_LEVELS``): (doc_id, span_idx,
+    cell, level, parent_cell).
     parent_cell = the span's cell at the previous (coarser) level; null at
     the first level — mirroring hostname-tree parent hosts."""
     f = features.filter(F.col("cell").isNotNull())
     structs = []
     prev = None
-    for lvl in levels:
+    for lvl in grid.TILE_LEVELS:
         cur = grid.col_cell_parent(F.col("cell"), grid.FINE_RES, lvl) if lvl != grid.FINE_RES else F.col("cell")
         structs.append(
             F.struct(

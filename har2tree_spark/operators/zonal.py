@@ -41,10 +41,10 @@ def rasterize_spans(features: DataFrame) -> DataFrame:
     )
 
 
-def zonal_stats_by_cell(pixels: DataFrame, zone_res: int = grid.COARSE_RES) -> DataFrame:
+def zonal_stats_by_cell(pixels: DataFrame) -> DataFrame:
     """Grid-zone variant (no polygon side): zones are coarse cells; fully
     relational, one shuffle — the scale path when zones align to the index."""
-    zone = grid.col_cell_parent(F.col("cell"), grid.FINE_RES, zone_res)
+    zone = grid.col_cell_parent(F.col("cell"), grid.FINE_RES, grid.COARSE_RES)
     return pixels.groupBy(zone.alias("zone_cell")).agg(
         F.count("*").cast("long").alias("n_pixels"),
         F.count_distinct("doc_id").cast("long").alias("n_docs"),

@@ -39,10 +39,16 @@ def run_pipeline(docs: DataFrame, mode: str = "exact") -> dict[str, DataFrame]:
     exact kernel fills ``depth``, so rank-mode doc_stats re-derives it.
 
     Building the dict runs parse and the cascade eagerly, once each: the
-    features and the join result are local checkpoints (not ``persist()``,
-    for the reason in ``cascade.resolve_rank``), and the other outputs are
-    lazy frames that read them. A checkpoint is a cheap re-scan leaf, so
-    ``resolve_rank`` skips its own slim checkpoint of the features."""
+    features and the join result are local checkpoints, and the other
+    outputs are lazy frames that read them. Both cascades read the
+    features checkpoint, never lazy parse output. An eager
+    ``localCheckpoint``, not ``persist()``: (a) a lazy persist lets the
+    branches of one cold job race to compute the uncached upstream
+    concurrently (measured ~5x the upstream cost); (b) a ``persist()``
+    entry lives in the CacheManager until someone calls unpersist, so
+    repeated runs on a long-lived driver (bench, streaming foreachBatch)
+    accumulate cached tables, while checkpoint blocks are freed by the
+    ContextCleaner when the frame is GC'd."""
     features = parse.parse_documents(docs).localCheckpoint()
     resolve = cascade.resolve_exact if mode == "exact" else cascade.resolve_rank
     join_result = resolve(features).localCheckpoint()
@@ -94,7 +100,7 @@ def capture_report(spark: SparkSession, path: str) -> DataFrame:
     from har2tree_spark.sources import har_cookies, har_source  # noqa: PLC0415
 
     # ONE binaryFile listing + ONE JSON parse per capture, materialized
-    # eagerly (the cascade.py localCheckpoint rationale applies): the
+    # eagerly (the run_pipeline localCheckpoint rationale applies): the
     # report fans the captures frame out to features, the pages ladder,
     # cookie totals and the meta projection — lazily, each consumer
     # re-ran the whole scan+parse subtree (9 binaryFile scans in the
@@ -133,7 +139,7 @@ def capture_report(spark: SparkSession, path: str) -> DataFrame:
     # total_redirects = whole-tree redirect-EDGE count (see redirect_chains
     # docstring: deliberately broader than the reference's root->rendered
     # ``redirects`` path list — r7 ADVICE #3, documented deviation).
-    chains = stats.redirect_chains(features, tree, depth_complete=False).select(
+    chains = stats.redirect_chains(features, tree).select(
         "doc_id", F.col("chain_len").alias("total_redirects")
     )
     totals = har_cookies.capture_cookie_totals(

@@ -63,3 +63,12 @@ def test_forest_cycle_terminates(spark):
     jr = resolve_exact(feats)
     fj = forest_join(feats, jr).toPandas()
     assert len(fj) == 2  # terminated; deterministic ancestors
+
+
+def test_forest_join_leaves_no_cache_entry(spark):
+    # a long-lived driver runs forest_join again and again: it must not
+    # leave a persist() entry behind in the session's CacheManager
+    spark.catalog.clearCache()
+    feats = parse_documents(spark.createDataFrame(_forest_docs(), DOCUMENTS_SCHEMA))
+    assert len(forest_join(feats, resolve_exact(feats)).collect()) == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

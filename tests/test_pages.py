@@ -295,7 +295,8 @@ def test_attach_pages_duckdb_cross_check(spark, tmp_path):
     # cycle-guard replay (r7 ADVICE #2), implemented INDEPENDENTLY as a
     # plain dict walk: a re-parented row whose anchor path (over the
     # post-ladder parent map) returns to the row itself is rejected back
-    # to its original fallback edge — mirror of pages._CYCLE_WALK_CAP.
+    # to its original fallback edge. The walk is uncapped: it stops at the
+    # span, at the root or a missing pointer, or on a node it has seen.
     orig = {
         (r[0], r[1]): tuple(r)
         for r in con.execute(
@@ -309,15 +310,11 @@ def test_attach_pages_duckdb_cross_check(spark, tmp_path):
     fixed = []
     for (d, s), r in post.items():
         if r[3] in ("page", "page_rendered", "page_before"):
-            cur, cyc = r[2], False
-            for _ in range(256):
-                if cur == s:
-                    cyc = True
-                    break
+            cur, seen = r[2], set()
+            while cur is not None and cur != -1 and cur != s and cur not in seen:
+                seen.add(cur)
                 cur = pmap[d].get(cur)
-                if cur is None or cur == -1:
-                    break
-            if cyc:
+            if cur == s:
                 fixed.append(orig[(d, s)])
                 continue
         fixed.append(r)
@@ -343,7 +340,7 @@ def test_depths_recomputed_after_page_reparenting(spark, multipage_dir):
     tree = attach_pages(resolve_exact(feats), caps)
     depths = {
         r["span_idx"]: r["depth"]
-        for r in stats.compute_depths(tree, depth_complete=False).collect()
+        for r in stats.compute_depths(tree).collect()
     }
     assert depths == {0: 0, 1: 1, 2: 1, 3: 2}
     ds = stats.doc_stats(feats, tree, depth_complete=False).collect()[0]
@@ -356,8 +353,11 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
     must NOT be re-parented — orphan->anchor->orphan would leave both
     unreachable to the depth pass. The re-parent is rejected and the
     orphan keeps its fallback_root edge; independent re-parents in the
-    same doc still land."""
+    same doc still land. A 301-member cycle (longer than any fixed walk
+    cap would cover) is rejected just the same."""
     import pyspark.sql.types as T
+
+    from har2tree_spark.operators import stats
 
     tree = spark.createDataFrame(
         [
@@ -370,6 +370,15 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
         ],
         "doc_id string, span_idx int, parent_idx int, join_kind string, priority int, depth int",
     )
+    cap_schema = T.StructType([
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("rendered_span_idx", T.IntegerType()),
+        T.StructField("span_pagerefs", T.ArrayType(T.StringType())),
+        T.StructField("page_ids", T.ArrayType(T.StringType())),
+        T.StructField("pages_root_idx", T.ArrayType(T.IntegerType())),
+        T.StructField("page_before_root_idx", T.ArrayType(T.IntegerType())),
+        T.StructField("page_default_anchor_idx", T.IntegerType()),
+    ])
     caps = spark.createDataFrame(
         [
             (
@@ -382,15 +391,7 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
                 None,               # page_default_anchor_idx
             )
         ],
-        T.StructType([
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("rendered_span_idx", T.IntegerType()),
-            T.StructField("span_pagerefs", T.ArrayType(T.StringType())),
-            T.StructField("page_ids", T.ArrayType(T.StringType())),
-            T.StructField("pages_root_idx", T.ArrayType(T.IntegerType())),
-            T.StructField("page_before_root_idx", T.ArrayType(T.IntegerType())),
-            T.StructField("page_default_anchor_idx", T.IntegerType()),
-        ]),
+        cap_schema,
     )
     out = {r["span_idx"]: r for r in attach_pages(tree, caps).collect()}
     # span 1: arm A would anchor to span 2, but 2's parent chain is 2->1
@@ -402,3 +403,20 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
     assert out[3]["parent_idx"] == 2
     # untouched rows stay untouched
     assert out[2]["join_kind"] == "resource" and out[2]["parent_idx"] == 1
+
+    # orphan 1 under root 0 with a chain 2..301 below it; arm B anchors it
+    # to the rendered node 301, the chain's far end: a 301-member cycle
+    chain = [("c", 0, -1, "root", 0, 0), ("c", 1, 0, "fallback_root", 9, None)]
+    chain += [("c", i, i - 1, "resource", 5, None) for i in range(2, 302)]
+    tree = spark.createDataFrame(
+        chain,
+        "doc_id string, span_idx int, parent_idx int, join_kind string, priority int, depth int",
+    )
+    caps = spark.createDataFrame([("c", 301, [None] * 302, [], [], [], None)], cap_schema)
+    got = attach_pages(tree, caps)
+    out = {r["span_idx"]: r for r in got.collect()}
+    assert out[1]["join_kind"] == "fallback_root"
+    assert out[1]["parent_idx"] == 0
+    depths = {r["span_idx"]: r["depth"] for r in stats.compute_depths(got).collect()}
+    assert len(depths) == 302
+    assert None not in depths.values()

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from har2tree_spark.datagen import gen_documents_df
-from har2tree_spark.geo import grid
 from har2tree_spark.operators import tiling, zonal
 from har2tree_spark.operators.cascade import resolve_exact
 from har2tree_spark.operators.parse import parse_documents
@@ -124,7 +123,7 @@ def test_zonal_by_cell_single_shuffle(spark, tmp_path):
     p = str(tmp_path / "docs5")
     gen_documents_df(spark, 50, seed=3).write.parquet(p)
     pix = zonal.rasterize_spans(parse_documents(spark.read.parquet(p)))
-    zs = zonal.zonal_stats_by_cell(pix, grid.COARSE_RES)
+    zs = zonal.zonal_stats_by_cell(pix)
     assert _n_exchanges(_plan(zs)) <= 2  # distinct-agg needs its expand exchange
 
 
@@ -212,12 +211,12 @@ def _jobs_started(spark, group: str, build):
 def test_rank_pipeline_build_jobs(spark, tmp_path):
     """Building the rank-mode output frames runs exactly the two
     materializations -- the features checkpoint and the rank cascade over
-    it -- and nothing else; the rank cascade takes the checkpoint as a
-    cheap re-scan leaf (no slim checkpoint of its own), and depths need no
-    job of their own (no probe, no max-size count, no checkpointed
-    doubling loop)."""
+    it -- and nothing else; the rank cascade is lazy over any features
+    (building it starts no job, even over lazy parse output), and
+    depths need no job of their own (no probe, no max-size count, no
+    checkpointed doubling loop)."""
     from har2tree_spark.operators import stats
-    from har2tree_spark.operators.cascade import _is_cheap_rescan, resolve_rank
+    from har2tree_spark.operators.cascade import resolve_rank
     from har2tree_spark.pipeline import run_pipeline
 
     p = str(tmp_path / "docs_jobs")
@@ -227,7 +226,10 @@ def test_rank_pipeline_build_jobs(spark, tmp_path):
     feats, n_feats = _jobs_started(
         spark, "rank-feats", lambda: parse_documents(docs).localCheckpoint()
     )
-    assert _is_cheap_rescan(feats)
+    _, n_lazy = _jobs_started(
+        spark, "rank-lazy", lambda: resolve_rank(parse_documents(docs))
+    )
+    assert n_lazy == 0, f"building resolve_rank over parse output started {n_lazy} jobs"
     _, n_cascade = _jobs_started(
         spark, "rank-cascade", lambda: resolve_rank(feats).localCheckpoint()
     )

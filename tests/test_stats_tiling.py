@@ -60,8 +60,7 @@ def test_depths_match_oracle_chain(spark):
 
 def test_depths_mixed_frame_recomputed(spark):
     # a caller-made union of exact rows (depth filled) and rank rows
-    # (depth null): depth_complete=False must re-derive every depth from
-    # the pointers
+    # (depth null): compute_depths re-derives every depth from the pointers
     import pyspark.sql.functions as F
 
     docs = [scenario_docs()[0]]
@@ -71,9 +70,7 @@ def test_depths_mixed_frame_recomputed(spark):
         "depth",
         F.when(F.col("span_idx") % 2 == 0, F.col("depth")).otherwise(F.lit(None)),
     )
-    d = stats.compute_depths(mixed, depth_complete=False).toPandas().sort_values(
-        "span_idx"
-    )
+    d = stats.compute_depths(mixed).toPandas().sort_values("span_idx")
     assert list(d.depth) == [0, 1, 2, 3]
 
 
@@ -108,7 +105,7 @@ def test_depths_recomputed_equal_exact_kernel(spark):
     docs = scenario_docs() + gen_docs(23, 120)
     jr = resolve_exact(parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))).cache()
     kernel = jr.select("doc_id", "span_idx", "depth")
-    recomputed = stats.compute_depths(jr, depth_complete=False)
+    recomputed = stats.compute_depths(jr)
     assert kernel.exceptAll(recomputed).count() == 0
     assert recomputed.exceptAll(kernel).count() == 0
     jr.unpersist()

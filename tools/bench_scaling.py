@@ -114,10 +114,12 @@ def main() -> None:
 scaling analysis is BENCH/BASELINE.md — merge this table there by hand;
 this file is overwritten on every run.)
 
-Protocol (BASELINE.md): the identical job (parse -> exact consume-once
-cascade -> tile rollup -> doc stats) on the identical input at two local
-parallelism levels, each in its own JVM (spark-submit analogue), with
-`spark.sql.shuffle.partitions` scaled proportionally (= cores per run).
+Protocol (BASELINE.md): the identical job (`pipeline.run_pipeline(docs,
+"exact")` -- parse, exact consume-once cascade, tiles, doc stats -- plus
+the parquet writes of join_result, tile_rollup and doc_stats) on the
+identical input at two local parallelism levels, each in its own JVM
+(spark-submit analogue), with `spark.sql.shuffle.partitions` scaled
+proportionally (= cores per run).
 AQE + skew-join enabled in both (session.py defaults). Input: seeded
 (seed=42) synthetic interleaved-documents corpus, zipf-hot keys
 (GenConfig(max_spans=32, p_hot=0.2, zipf_s=1.2)), {n_docs:,} docs.

@@ -54,7 +54,7 @@ def summarize(plan: str) -> dict:
         "broadcast_joins": n("BroadcastHashJoin", "BroadcastNestedLoopJoin"),
         "shuffle_joins": n("SortMergeJoin", "ShuffledHashJoin"),
         "python_stages": n(
-            "MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas",
+            "MapInPandas", "MapInArrow", "ArrowEvalPython", "FlatMapGroupsInPandas",
             "BatchEvalPython",
         ),
         "windows": n("Window"),
@@ -72,7 +72,7 @@ def main() -> None:
     from har2tree_spark.session import get_spark  # noqa: PLC0415
     from har2tree_spark.sources import events_spans  # noqa: PLC0415
 
-    spark = get_spark("plan_audit", parallelism=8, driver_memory="8g")
+    spark = get_spark("plan_audit", driver_memory="8g")
     # AQE wraps the static plan in AdaptiveSparkPlan(isFinalPlan=false),
     # which hides codegen-span annotations until execution. The audit is
     # explain-only, so disable AQE HERE ONLY to read the full static plan
@@ -85,17 +85,24 @@ def main() -> None:
     queries = {
         "q1_cascade_exact": (
             cascade.resolve_exact(feats),
-            "One hash exchange on doc_id feeds the Tungsten sort + the "
-            "Arrow-batched consume-once kernel (MapInPandas); everything "
-            "before it is codegen'd narrow parse. The explicit "
-            "4-tasks/core repartition is the only shuffle.",
+            "One exchange: the events->documents fold hash-partitions on "
+            "doc_id (one task per core), and the cascade's "
+            "repartition(cores, doc_id) and its groupBy(doc_id) doc-row "
+            "aggregate reuse that distribution, so the doc rows reach the "
+            "Arrow-batched consume-once kernel (MapInArrow) with no second "
+            "exchange and no sort; parse in between is narrow.",
         ),
         "q2_cascade_rank": (
             cascade.resolve_rank(feats),
-            "5 candidate joins resolved in a single consume-once window; "
-            "design budget is <=2 exchanges (plan-asserted in "
-            "test_plans.py) with the edge-priority argmax inside the "
-            "window, no per-join shuffles.",
+            "ONE probe->target equi-join on (doc_id, key) (shuffled hash "
+            "join, one exchange per side) yields the candidate edges of "
+            "all five stages; the no-candidate fallback edges union in and "
+            "one min_by aggregate per (doc_id, child) picks each winner "
+            "(partial aggregate, one exchange). The audit builds it over "
+            "lazy parse output, so each branch re-runs the "
+            "events->documents fold (a window and an exchange per "
+            "branch, some reused); run_pipeline hands it the features "
+            "checkpoint instead.",
         ),
         "q3_tile_rollup": (
             tiling.tile_rollup(tiling.tile_assignment(feats)),
@@ -107,7 +114,9 @@ def main() -> None:
             cascade.resolve_exact(parse.parse_documents(gen)).select(
                 "doc_id"
             ).distinct(),
-            "Same kernel plan as q1 over the generated corpus plus the "
+            "The generator's Python stage (MapInPandas), then q1's kernel "
+            "plan; the generated rows are not partitioned by doc_id, so the "
+            "repartition(cores, doc_id) is an exchange here, plus the "
             "distinct doc count (one extra agg exchange).",
         ),
         "q5_tpch_q1": (
@@ -173,7 +182,8 @@ def main() -> None:
         "",
         "Python stages appear ONLY where they are the designed "
         "Arrow-batched path: q1/q4's consume-once DFS kernel (the "
-        "reference-exact contract) and q8's fused signature matmul "
+        "reference-exact contract), q4's document generator and q8's "
+        "fused signature matmul "
         "(vectorized pandas_udf over stacked hyperplanes). No "
         "row-at-a-time Python anywhere; every other headline query is "
         "fully JVM-side. `test_plans.py` pins the load-bearing subset of "

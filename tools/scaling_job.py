@@ -1,10 +1,13 @@
-"""One scaling-bench run: full pipeline over a pre-generated corpus at a
-given parallelism. Invoked as a separate process per parallelism level so
-each run gets its own JVM (the spark-submit analogue):
+"""One scaling-bench run: the shipped pipeline over a pre-generated corpus
+at a given parallelism. Invoked as a separate process per parallelism level
+so each run gets its own JVM (the spark-submit analogue):
 
     SPARK_GRAFT_CPUS=8 python tools/scaling_job.py /path/corpus
 
-Prints one JSON line {parallelism, docs, spans, join_rows, wall_s,
+The timed job is ``pipeline.run_pipeline(docs, "exact")`` plus the three
+parquet writes of perfbench's batch iteration (join_result, tile_rollup,
+doc_stats), with the session's default shuffle partitions (= cores).
+Prints one JSON line {parallelism, docs, join_rows, tile_rollups, wall_s,
 docs_per_sec}.
 """
 
@@ -13,68 +16,44 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from har2tree_spark.operators import cascade, parse, stats, tiling  # noqa: E402
+from har2tree_spark import pipeline  # noqa: E402
 from har2tree_spark.session import get_spark, host_heap  # noqa: E402
+
+OUTPUTS = ("join_result", "tile_rollup", "doc_stats")
 
 
 def main() -> None:
     corpus = sys.argv[1]
     spark = get_spark("scaling_job", driver_memory=host_heap())
     cpus = spark.sparkContext.defaultParallelism
-    # shuffle partitions scale with the core count, as they would with
-    # executor count on a cluster (BASELINE.md protocol); 4 tasks per core
-    # so the scheduler absorbs stragglers instead of the slowest partition
-    # gating the stage
-    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cpus))
     docs = spark.read.parquet(corpus)
     # warm-up (excluded from timing): JVM task-thread + python-worker spawn
     # and codegen compilation are cold-start costs a long-lived cluster
     # amortizes away; without this they dominate the small-N run's wall
-    import pandas as _pd  # noqa: PLC0415
-
     spark.range(0, cpus * 1000, numPartitions=cpus).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).count()
-    t0 = time.time()
-    phases = {}
-    # Materialization strategy (measured at 600k docs):
-    #  - parse ONCE: the slim scalar projection (text/ref_tokens dropped —
-    #    caching array<string> JVM objects costs more than the parse) is
-    #    eagerly materialized and feeds BOTH the cascade and the tiles; the
-    #    kernel needs only scalar columns, so nothing re-parses;
-    #  - cache the flat cascade output (cheap, reused by stats).
-    feats = parse.parse_documents(docs)
-    slim = feats.drop("text", "ref_tokens").persist()
-    t1 = time.time()
-    slim.count()
-    phases["parse_s"] = round(time.time() - t1, 2)
-    jr = cascade.resolve_exact(slim).persist()
-    t1 = time.time()
-    n_join = jr.count()
-    phases["cascade_s"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    tiles = tiling.tile_assignment(slim)
-    n_tiles = tiling.tile_rollup(tiles).count()
-    phases["tiles_s"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    st = stats.doc_stats(slim, jr, depth_complete=True)
-    n_docs = st.count()
-    phases["stats_s"] = round(time.time() - t1, 2)
-    wall = time.time() - t0
+    with tempfile.TemporaryDirectory(prefix="scaling_job_") as out_dir:
+        t0 = time.time()
+        out = pipeline.run_pipeline(docs, "exact")
+        for name in OUTPUTS:
+            out[name].write.mode("overwrite").parquet(os.path.join(out_dir, name))
+        wall = time.time() - t0
+        n = {name: spark.read.parquet(os.path.join(out_dir, name)).count() for name in OUTPUTS}
     print(
         json.dumps(
             {
                 "parallelism": cpus,
-                "docs": n_docs,
-                "join_rows": n_join,
-                "tile_rollups": n_tiles,
+                "docs": n["doc_stats"],
+                "join_rows": n["join_result"],
+                "tile_rollups": n["tile_rollup"],
                 "wall_s": round(wall, 2),
-                "docs_per_sec": round(n_docs / wall, 2),
-                "phases": phases,
+                "docs_per_sec": round(n["doc_stats"] / wall, 2),
             }
         )
     )

@@ -40,7 +40,7 @@ def rows_to_multiset(rows, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("selfcheck", parallelism=16, driver_memory="6g")
+    spark = get_spark("selfcheck", driver_memory="6g")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
