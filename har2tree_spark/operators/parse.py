@@ -23,6 +23,11 @@ joins/aggregations genuinely need.
 ``kernel_docs`` stops the same array stage before the explode and emits
 the exact kernel's doc rows (one row per document, KERNEL_FIELDS per live
 span); the flat table's kernel columns come from the same definitions.
+
+The column expressions are built once per JVM (``session.per_jvm``): the
+``_live_columns`` / ``_kernel_doc_columns`` / ``_feature_columns``
+builders take no DataFrame, and the first call in a JVM pays their
+~2,700 py4j round trips; every later call only makes the selects.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
+from har2tree_spark.session import per_jvm
 
 KEY_TOKEN_RE = "^k(0|[1-9][0-9]{0,14})\\z"  # canonical: no leading zeros, <=15 digits; \z anchor (Java $ also matches before a trailing newline — RE2/pycascade alignment)
 # (key<->int64 bijection that also survives a float64 round trip: < 2^53)
@@ -121,8 +127,10 @@ def _kernel_fields(p: Column, key_num: Column, ref_nums: Column) -> dict[str, Co
     }
 
 
-def _live_spans(docs: DataFrame) -> DataFrame:
-    """documents -> (doc_id, _parsed, _live): every span parsed and the
+@per_jvm
+def _live_columns() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """The two select lists of the array stage: documents -> (doc_id,
+    _parsed), then -> (doc_id, _parsed, _live), every span parsed and the
     surviving ones, as per-document arrays (no explode yet)."""
     spans = F.coalesce(F.col("spans"), F.array())
 
@@ -170,19 +178,23 @@ def _live_spans(docs: DataFrame) -> DataFrame:
     # (A single select here made Catalyst re-embed the whole parse tree
     # into root_idx/n_live and re-evaluate it per EXPLODED ROW — O(n^2)
     # array scans per doc, observed as the dominant pipeline cost.)
-    step1 = docs.select(F.col("doc_id"), parsed.alias("_parsed"))
-    return step1.select(
-        "doc_id",
-        "_parsed",
-        F.filter(F.col("_parsed"), lambda p: ~p["dropped"]).alias("_live"),
+    doc_id, parsed_col = F.col("doc_id"), F.col("_parsed")
+    return (doc_id, parsed.alias("_parsed")), (
+        doc_id,
+        parsed_col,
+        F.filter(parsed_col, lambda p: ~p["dropped"]).alias("_live"),
     )
 
 
-def kernel_docs(docs: DataFrame) -> DataFrame:
-    """documents -> exact-kernel doc rows ``(doc_id, live:
-    array<struct<KERNEL_FIELDS>>)``: one row per input document, its live
-    spans in span order (empty for a quarantined doc). A narrow map -- the
-    same array stage as ``parse_documents``, stopped before the explode."""
+def _live_spans(docs: DataFrame) -> DataFrame:
+    """documents -> (doc_id, _parsed, _live) (see ``_live_columns``)."""
+    parsed, live = _live_columns()
+    return docs.select(*parsed).select(*live)
+
+
+@per_jvm
+def _kernel_doc_columns() -> tuple[Column, ...]:
+    """``kernel_docs``' select list over the array stage."""
     def fields(p: Column) -> Column:
         key_num = grid.col_key_num(p["key"])
         ref_nums = _ref_nums(_ref_tokens(p["text"], p["key"]))
@@ -190,33 +202,42 @@ def kernel_docs(docs: DataFrame) -> DataFrame:
             *(c.alias(n) for n, c in _kernel_fields(p, key_num, ref_nums).items())
         )
 
-    return _live_spans(docs).select(
-        "doc_id", F.transform(F.col("_live"), fields).alias("live")
-    )
+    return F.col("doc_id"), F.transform(F.col("_live"), fields).alias("live")
 
 
-def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
-    """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
-    root_idx, n_live). One output row per surviving span."""
-    step2 = _live_spans(docs)
+def kernel_docs(docs: DataFrame) -> DataFrame:
+    """documents -> exact-kernel doc rows ``(doc_id, live:
+    array<struct<KERNEL_FIELDS>>)``: one row per input document, its live
+    spans in span order (empty for a quarantined doc). A narrow map -- the
+    same array stage as ``parse_documents``, stopped before the explode."""
+    return _live_spans(docs).select(*_kernel_doc_columns())
+
+
+@per_jvm
+def _feature_columns(
+    keep_dropped: bool,
+) -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...], Column]:
+    """``parse_documents``' select lists after the array stage: the doc
+    root and live count, the explode, and the flat feature columns; then
+    the ``ref_nums`` column added over the flat ones."""
+    doc_id, root_idx, n_live = F.col("doc_id"), F.col("root_idx"), F.col("n_live")
+    parsed, live = F.col("_parsed"), F.col("_live")
     # doc root = first live span by (offset, span_idx) — har2tree.py:428
     root = F.array_min(
-        F.transform(F.col("_live"), lambda p: F.struct(p["offset"], p["span_idx"]))
+        F.transform(live, lambda p: F.struct(p["offset"], p["span_idx"]))
     )["span_idx"]
-    step3 = step2.select(
-        "doc_id",
+    per_doc = (
+        doc_id,
         F.coalesce(root, F.lit(-1)).alias("root_idx"),
-        F.size(F.col("_live")).alias("n_live"),
-        "_parsed",
-        "_live",
+        F.size(live).alias("n_live"),
+        parsed,
+        live,
     )
-    out = step3.select(
-        "doc_id",
-        "root_idx",
-        "n_live",
-        F.posexplode_outer(
-            F.col("_parsed") if keep_dropped else F.col("_live")
-        ).alias("pos", "p"),
+    exploded = (
+        doc_id,
+        root_idx,
+        n_live,
+        F.posexplode_outer(parsed if keep_dropped else live).alias("pos", "p"),
     )
 
     key = F.col("p.key")
@@ -226,10 +247,10 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
     # ref_nums derives from the ref_tokens column (referenced twice ->
     # CollapseProject keeps the token filter evaluated once)
     kc = _kernel_fields(F.col("p"), key_num, _ref_nums(F.col("ref_tokens")))
-    return out.select(
-        "doc_id",
-        "root_idx",
-        "n_live",
+    flat = (
+        doc_id,
+        root_idx,
+        n_live,
         kc["span_idx"].alias("span_idx"),
         F.col("p.kind").alias("kind"),
         text.alias("text"),
@@ -250,4 +271,19 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
         kc["kind_code"].alias("kind_code"),
         kc["has_media"].alias("has_media"),
         kc["media_num"].alias("media_num"),
-    ).withColumn("ref_nums", kc["ref_nums"])
+    )
+    return per_doc, exploded, flat, kc["ref_nums"]
+
+
+def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
+    """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
+    root_idx, n_live). One output row per surviving span (every span,
+    dropped ones too, with ``keep_dropped``)."""
+    per_doc, exploded, flat, ref_nums = _feature_columns(keep_dropped)
+    return (
+        _live_spans(docs)
+        .select(*per_doc)
+        .select(*exploded)
+        .select(*flat)
+        .withColumn("ref_nums", ref_nums)
+    )

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
+from har2tree_spark.operators.cascade import live_features
+from har2tree_spark.session import per_jvm
 
 
 def _doubled(finish: Callable[[Column], Column]) -> Column:
@@ -60,6 +62,7 @@ def _doubled(finish: Callable[[Column], Column]) -> Column:
     )
 
 
+@per_jvm
 def _rooted_depths() -> Column:
     """array<struct<span_idx, depth>> over one doc's rows, one entry per
     row. Every span, the root too, counts the hop to -1, so depth is
@@ -85,6 +88,7 @@ def _rooted_depths() -> Column:
     return _doubled(depths)
 
 
+@per_jvm
 def _cycle_members() -> Column:
     """array<int>: the span_idx of every span on a parent cycle in one
     doc's rows. No tail outlives 2^k > n_rows steps, so a 2^k-th ancestor
@@ -101,6 +105,13 @@ def _cycle_members() -> Column:
     )
 
 
+@per_jvm
+def _depth_columns() -> tuple[Column, Column, tuple[Column, ...]]:
+    """compute_depths' (group key, aggregate, output rows)."""
+    doc_id = F.col("doc_id")
+    return doc_id, _rooted_depths().alias("depths"), (doc_id, F.inline("depths"))
+
+
 def compute_depths(join_result: DataFrame) -> DataFrame:
     """(doc_id, span_idx, depth) from parent pointers; no Spark job.
 
@@ -112,10 +123,37 @@ def compute_depths(join_result: DataFrame) -> DataFrame:
     not reachable from the root -- in or behind a parent cycle, which rank
     mode can produce, or under a pointer to a span not in the frame -- gets
     a null depth."""
+    doc_id, depths, rows = _depth_columns()
+    return join_result.groupBy(doc_id).agg(depths).select(*rows)
+
+
+@per_jvm
+def _doc_stats_columns(
+    depth_complete: bool,
+) -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...]]:
+    """doc_stats' (per-doc feature aggregates, per-doc join-result
+    aggregates, output columns)."""
+    deepest = F.max("depth") if depth_complete else F.array_max(_rooted_depths()["depth"])
     return (
-        join_result.groupBy("doc_id")
-        .agg(_rooted_depths().alias("depths"))
-        .select("doc_id", F.inline("depths"))
+        (
+            F.count("*").cast("int").alias("total_spans"),
+            F.count_distinct("key").cast("int").alias("unique_keys"),
+            F.count(F.col("cell")).cast("int").alias("total_cells"),
+            F.count_distinct("cell").cast("int").alias("unique_cells"),
+            F.sum("nbytes").cast("long").alias("total_bytes"),
+        ),
+        (
+            F.sum(F.when(F.col("join_kind") == "redirect", 1).otherwise(0))
+            .cast("int")
+            .alias("total_chain"),
+            (deepest + 1).cast("int").alias("tree_depth"),
+        ),
+        (
+            *(F.col(n) for n in ("doc_id", "total_spans", "unique_keys", "total_cells", "unique_cells")),
+            F.coalesce("tree_depth", F.lit(0)).alias("tree_depth"),
+            F.coalesce("total_chain", F.lit(0)).alias("total_chain"),
+            F.col("total_bytes"),
+        ),
     )
 
 
@@ -135,30 +173,13 @@ def doc_stats(
     cascade output as the kernel emits it -- e.g. not after
     ``pages.attach_pages``, which re-parents rows and nulls only THEIR
     depths, leaving descendants' depths stale (r7 ADVICE #1)."""
-    f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
-    base = f.groupBy("doc_id").agg(
-        F.count("*").cast("int").alias("total_spans"),
-        F.count_distinct("key").cast("int").alias("unique_keys"),
-        F.count(F.col("cell")).cast("int").alias("total_cells"),
-        F.count_distinct("cell").cast("int").alias("unique_cells"),
-        F.sum("nbytes").cast("long").alias("total_bytes"),
-    )
-    deepest = F.max("depth") if depth_complete else F.array_max(_rooted_depths()["depth"])
-    per_doc = join_result.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("join_kind") == "redirect", 1).otherwise(0))
-        .cast("int")
-        .alias("total_chain"),
-        (deepest + 1).cast("int").alias("tree_depth"),
-    )
-    return base.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        "total_spans",
-        "unique_keys",
-        "total_cells",
-        "unique_cells",
-        F.coalesce("tree_depth", F.lit(0)).alias("tree_depth"),
-        F.coalesce("total_chain", F.lit(0)).alias("total_chain"),
-        "total_bytes",
+    base, per_doc, out = _doc_stats_columns(depth_complete)
+    return (
+        live_features(features)
+        .groupBy("doc_id")
+        .agg(*base)
+        .join(join_result.groupBy("doc_id").agg(*per_doc), "doc_id", "left")
+        .select(*out)
     )
 
 

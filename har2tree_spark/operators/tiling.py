@@ -14,18 +14,16 @@ of groupBy passes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
+from har2tree_spark.session import per_jvm
 
 
-def tile_assignment(features: DataFrame) -> DataFrame:
-    """One row per (span, level in ``grid.TILE_LEVELS``): (doc_id, span_idx,
-    cell, level, parent_cell).
-    parent_cell = the span's cell at the previous (coarser) level; null at
-    the first level — mirroring hostname-tree parent hosts."""
-    f = features.filter(F.col("cell").isNotNull())
+@per_jvm
+def _tile_columns() -> tuple[Column, tuple[Column, ...], tuple[Column, ...]]:
+    """tile_assignment's (cell filter, inline select, output columns)."""
     structs = []
     prev = None
     for lvl in grid.TILE_LEVELS:
@@ -38,24 +36,38 @@ def tile_assignment(features: DataFrame) -> DataFrame:
             )
         )
         prev = cur
-    return f.select(
-        "doc_id",
-        "span_idx",
-        F.inline(F.array(*structs)),
-    ).select("doc_id", "span_idx", "cell", "level", "parent_cell")
+    doc_id, span_idx = F.col("doc_id"), F.col("span_idx")
+    return (
+        F.col("cell").isNotNull(),
+        (doc_id, span_idx, F.inline(F.array(*structs))),
+        tuple(F.col(n) for n in ("doc_id", "span_idx", "cell", "level", "parent_cell")),
+    )
+
+
+def tile_assignment(features: DataFrame) -> DataFrame:
+    """One row per (span, level in ``grid.TILE_LEVELS``): (doc_id, span_idx,
+    cell, level, parent_cell).
+    parent_cell = the span's cell at the previous (coarser) level; null at
+    the first level — mirroring hostname-tree parent hosts."""
+    has_cell, inlined, out = _tile_columns()
+    return features.filter(has_cell).select(*inlined).select(*out)
+
+
+@per_jvm
+def _rollup_columns() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """tile_rollup's (group keys, aggregates)."""
+    return (F.col("level"), F.col("cell")), (
+        F.count("*").alias("n_spans"),
+        F.approx_count_distinct("doc_id").alias("n_docs"),
+        F.first("parent_cell").alias("parent_cell"),
+    )
 
 
 def tile_rollup(tiles: DataFrame) -> DataFrame:
     """Per-tile aggregate (HostNode rollup analogue, reference
     nodes.py:802-835): span count, doc count, child-tile fanout."""
-    return (
-        tiles.groupBy("level", "cell")
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.approx_count_distinct("doc_id").alias("n_docs"),
-            F.first("parent_cell").alias("parent_cell"),
-        )
-    )
+    keys, aggs = _rollup_columns()
+    return tiles.groupBy(*keys).agg(*aggs)
 
 
 def compact_cells(cells: DataFrame, res: int = grid.FINE_RES, min_res: int = 0) -> DataFrame:

@@ -1,15 +1,29 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the build-once rule
+for operator expressions.
 
 Local-mode knobs are test-scale; the same settings (AQE, skew join,
 shuffle partitions ~ cores, Arrow batching) are what we would set on a
 1000-executor cluster, just with cluster-scaled values.
+
+Build once per JVM: every ``F.*`` call and Column operator is one py4j
+round trip from the driver, and an operator's expression tree is the
+same on every call. So the hot operators build their Columns in
+``per_jvm`` builders: a builder takes only hashable arguments (mode
+flags, resolutions), never takes or captures a DataFrame and never
+reads a ``df["x"]`` column; the first call in a JVM pays the build, and
+later calls only make the ``select``/``join``/``groupBy`` calls.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -103,3 +117,31 @@ def host_heap() -> str:
     phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
     return f"{min(16, max(1, phys_gb // 4))}g"
 
+
+
+def per_jvm(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoise a Column builder on its positional arguments and on the
+    live JVM gateway.
+
+    The first call for some arguments in a JVM runs ``build`` and pays
+    its round trips; every later call with the same arguments while the
+    same ``SparkContext._gateway`` object is live returns the very same
+    result. A different gateway object (the JVM was shut down and a new
+    one launched) rebuilds: the gateway is compared with ``is``, since an
+    ``id()`` can be reused. Stopping and restarting a session inside one
+    JVM keeps the built Columns, which belong to no session.
+
+    ``build`` must return Columns (or tuples of them) built only from its
+    arguments: no DataFrame, no ``df["x"]`` column, nothing that is
+    mutated afterwards -- every caller shares the one result."""
+    built: dict[tuple, tuple[object, T]] = {}
+
+    @functools.wraps(build)
+    def cached(*args):
+        gateway = SparkContext._gateway
+        hit = built.get(args)
+        if hit is None or hit[0] is not gateway:
+            hit = built[args] = (gateway, build(*args))
+        return hit[1]
+
+    return cached

@@ -187,11 +187,21 @@ def test_rank_cascade_plan_shape(spark, tmp_path):
     # the join), one for the probe side of the shuffled join, one for the
     # winners' min_by aggregate; the edge-dedup shuffle must stay gone,
     # and the winner pick must be an aggregate that partial-combines
-    # map-side (min_by plans as SortAggregate partial+final — struct
-    # buffers are not HashAggregate-able), not a row_number window over
-    # the full edge fan-out
+    # map-side, not a row_number window over the full edge fan-out:
+    # exactly one partial and one final aggregate, both keyed by
+    # (doc_id, child_idx). min_by's struct buffer is not
+    # HashAggregate-able, so both are SortAggregates.
     assert _n_exchanges(plan) <= 3, plan
-    assert re.search(r"\(\d+\) (?:SortAggregate|ObjectHashAggregate|HashAggregate)", plan), plan
+    aggs = re.findall(
+        r"\(\d+\) (\w*Aggregate)\nInput \[\d+\]: .*\nKeys \[2\]: "
+        r"\[doc_id#\d+, child_idx#\d+\]\nFunctions \[1\]: \[(\w+)\(",
+        plan,
+    )
+    assert aggs == [
+        ("SortAggregate", "partial_min_by"),
+        ("SortAggregate", "min_by"),
+    ], plan
+    assert len(re.findall(r"\(\d+\) \w*Aggregate\n", plan)) == 2, plan
 
 
 def _jobs_started(spark, group: str, build):
@@ -263,6 +273,85 @@ def test_pipeline_outputs_read_checkpoints(spark, tmp_path, mode):
         assert "posexplode" not in plan, f"{name} re-runs parse:\n{plan}"
     assert "MapInArrow" not in plans["doc_stats"], plans["doc_stats"]
     assert len(re.findall(r"\bJoin\b", plans["doc_stats"])) == 1, plans["doc_stats"]
+
+
+
+def _round_trips(monkeypatch, build) -> int:
+    """py4j round trips that the second ``build()`` in this JVM makes from
+    this thread: the first call pays for the operator's per-JVM
+    expression builders. py4j's finalizer thread releases JVM objects of
+    earlier garbage on its own connection; those sends are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    build()
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+    sent = 0
+
+    def counting(self, command):
+        nonlocal sent
+        sent += threading.get_ident() == caller
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        build()
+    return sent
+
+
+def test_operator_build_round_trips(spark, tmp_path, monkeypatch):
+    """Building an operator's frame again in the same JVM reuses its
+    Column trees: only the DataFrame calls cross py4j. Rebuilding the
+    trees on every call cost a micro-batch 1,585 round trips, parse 2,751,
+    the rank cascade 2,214 and doc_stats 993; built once per JVM they
+    take 60, 62, 135 and 53."""
+    from har2tree_spark.operators import stats
+    from har2tree_spark.operators.cascade import resolve_rank
+    from har2tree_spark.streaming import ingest
+
+    p = str(tmp_path / "docs_trips")
+    gen_documents_df(spark, 50, seed=3).write.parquet(p)
+    docs = spark.read.parquet(p)
+    feats = parse_documents(docs)
+    jr = resolve_rank(feats)
+    budgets = {
+        "micro_batch_join_result": (100, lambda: ingest.micro_batch_join_result(docs, 0)),
+        "parse_documents": (100, lambda: parse_documents(docs)),
+        "resolve_rank": (200, lambda: resolve_rank(feats)),
+        "doc_stats": (100, lambda: stats.doc_stats(feats, jr)),
+    }
+    trips = {name: _round_trips(monkeypatch, build) for name, (_, build) in budgets.items()}
+    over = {name: n for name, n in trips.items() if n > budgets[name][0]}
+    assert not over, trips
+
+
+def test_per_jvm_rebuilds_on_new_gateway(spark, monkeypatch):
+    """A ``per_jvm`` builder returns the same object while the gateway
+    lives and rebuilds when ``SparkContext._gateway`` is another object."""
+    from pyspark import SparkContext
+
+    from har2tree_spark.session import per_jvm
+
+    builds = []
+
+    @per_jvm
+    def level(res):
+        builds.append(res)
+        return F.lit(res).alias("level")
+
+    first = level(3)
+    assert level(3) is first and builds == [3]
+    assert level(6) is not first and builds == [3, 6]
+    live = SparkContext._gateway
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "_gateway", object())
+        assert level(3) is not first and builds == [3, 6, 3]
+    assert SparkContext._gateway is live
+    again = level(3)
+    assert builds == [3, 6, 3, 3] and level(3) is again
+    assert spark.range(1).select(again).first()["level"] == 3
 
 
 def test_lsh_fused_signatures_match_per_table(spark):

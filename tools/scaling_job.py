@@ -7,8 +7,11 @@ so each run gets its own JVM (the spark-submit analogue):
 The timed job is ``pipeline.run_pipeline(docs, "exact")`` plus the three
 parquet writes of perfbench's batch iteration (join_result, tile_rollup,
 doc_stats), with the session's default shuffle partitions (= cores).
+``build_s`` is the serial driver share inside it: ``run_pipeline``'s wall
+time minus the time spent in its two ``localCheckpoint`` calls (the
+features and join-result jobs), i.e. building the frames.
 Prints one JSON line {parallelism, docs, join_rows, tile_rollups, wall_s,
-docs_per_sec}.
+build_s, docs_per_sec}.
 """
 
 from __future__ import annotations
@@ -38,9 +41,26 @@ def main() -> None:
     spark.range(0, cpus * 1000, numPartitions=cpus).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).count()
+    frame_class = type(docs)
+    checkpoint = frame_class.localCheckpoint
+    checkpoint_s = []
+
+    def timed_checkpoint(df, *args, **kwargs):
+        t = time.perf_counter()
+        try:
+            return checkpoint(df, *args, **kwargs)
+        finally:
+            checkpoint_s.append(time.perf_counter() - t)
+
     with tempfile.TemporaryDirectory(prefix="scaling_job_") as out_dir:
         t0 = time.time()
-        out = pipeline.run_pipeline(docs, "exact")
+        frame_class.localCheckpoint = timed_checkpoint
+        try:
+            t_build = time.perf_counter()
+            out = pipeline.run_pipeline(docs, "exact")
+            build = time.perf_counter() - t_build - sum(checkpoint_s)
+        finally:
+            frame_class.localCheckpoint = checkpoint
         for name in OUTPUTS:
             out[name].write.mode("overwrite").parquet(os.path.join(out_dir, name))
         wall = time.time() - t0
@@ -53,6 +73,7 @@ def main() -> None:
                 "join_rows": n["join_result"],
                 "tile_rollups": n["tile_rollup"],
                 "wall_s": round(wall, 2),
+                "build_s": round(build, 3),
                 "docs_per_sec": round(n["doc_stats"] / wall, 2),
             }
         )
