@@ -5,7 +5,7 @@ pipeline stages with the noop sink so the computation is measured without
 the sink, and optionally dumps .explain("formatted") per stage.
 
 Usage:
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
         python bench_extra.py [--explain-dir plans/r08] [--repeats 2]
 """
 
@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod  # noqa: E402
 from har2tree_spark.datagen import GenConfig, gen_documents_df  # noqa: E402
 from har2tree_spark.operators import cascade, parse, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import get_spark, host_heap  # noqa: E402
 from har2tree_spark.sources import events_spans  # noqa: E402
 
 
@@ -38,7 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench_extra", driver_memory="24g")
+    spark = get_spark("bench_extra", driver_memory=host_heap())
     sc = spark.sparkContext
     cpus = sc.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(4 * cpus))

@@ -14,8 +14,9 @@ offline anyway, sampling keeps the operator reproducible bit-for-bit and
 (centroids are a SELECT, assignment is an argmax window, probing is a
 top-nprobe window). Swapping in trained centroids changes one DataFrame.
 
-Scores are exact cosine computed JVM-side (zip_with/aggregate fold, same
-operand order as the oracle's list_dot_product)."""
+Every operator reads ``(vec_id, embedding)``. Scores are exact cosine
+computed JVM-side (zip_with/aggregate fold, same operand order as the
+oracle's list_dot_product)."""
 
 from __future__ import annotations
 
@@ -25,15 +26,13 @@ from pyspark.sql import functions as F
 from har2tree_spark.ann.knn import _as_double, _dot, _norm
 
 
-def sampled_centroids(
-    corpus: DataFrame, k: int = 32, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def sampled_centroids(corpus: DataFrame, k: int = 32) -> DataFrame:
     """Deterministic coarse quantizer: the K lowest-id vectors.
     Returns (centroid_id, cv) — small, always broadcast. orderBy+limit,
     not a global window: TakeOrderedAndProject does a per-partition
     partial top-K, no single-partition funnel."""
     return corpus.select(
-        F.col(id_col).alias("centroid_id"), _as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("centroid_id"), _as_double(F.col("embedding")).alias("cv")
     ).orderBy("centroid_id").limit(k)
 
 
@@ -43,8 +42,6 @@ def _assign(
     n_lists: int,
     id_alias: str,
     vec_alias: str,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Top-``n_lists`` centroid assignments per vector (cosine argmax,
     ties broken by centroid_id). Broadcast join, then:
@@ -61,7 +58,7 @@ def _assign(
     window's (cscore DESC, centroid_id ASC) tie-break exactly —
     plan-asserted and gate-checked identical (`ann_ivf`)."""
     v = df.select(
-        F.col(id_col).alias(id_alias), _as_double(F.col(vec_col)).alias(vec_alias)
+        F.col("vec_id").alias(id_alias), _as_double(F.col("embedding")).alias(vec_alias)
     )
     score = _dot(F.col(vec_alias), F.col("cv")) / (
         _norm(F.col(vec_alias)) * _norm(F.col("cv"))
@@ -93,16 +90,14 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 32,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: corpus vectors live in ONE inverted list each
     (their nearest centroid); queries probe their ``nprobe`` nearest
     lists; exact cosine re-rank over the union of probed lists.
     Returns (query_id, neighbor_id, rk, score); self-matches excluded."""
-    cents = sampled_centroids(corpus, n_centroids, id_col, vec_col)
-    lists = _assign(corpus, cents, 1, "neighbor_id", "nv", id_col, vec_col)
-    probes = _assign(queries, cents, nprobe, "query_id", "qv", id_col, vec_col)
+    cents = sampled_centroids(corpus, n_centroids)
+    lists = _assign(corpus, cents, 1, "neighbor_id", "nv")
+    probes = _assign(queries, cents, nprobe, "query_id", "qv")
     # score BEFORE the pair-dedup exchange and aggregate instead of
     # dropDuplicates (guide §2.3): a pair reached via several probed
     # lists computes the identical score from the identical vectors, so

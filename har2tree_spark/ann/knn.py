@@ -6,12 +6,15 @@ Two paths:
     per query. The correctness baseline.
   * ``lsh_cosine_topk``  — scale path: random-hyperplane signatures bucket
     the corpus (signature computed in one Arrow-vectorized matrix multiply),
-    candidates = same-bucket rows across ``tables`` independent hash tables,
+    candidates = same-bucket rows across ``LSH_TABLES`` independent hash tables,
     exact cosine re-rank on candidates only.
   * ``embedding_neardup_pairs`` — near-duplicate pairs by cosine >= tau
     over LSH buckets.
 
-Hyperplanes are seeded deterministically (no RNG state on executors)."""
+Every operator reads ``(vec_id, embedding)``. The LSH paths hash with
+``LSH_TABLES`` tables of ``LSH_BITS`` hyperplanes each, seeded with
+``LSH_SEED`` (no RNG state on executors); the driver's DuckDB oracle
+replays the same planes."""
 
 from __future__ import annotations
 
@@ -20,6 +23,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+LSH_BITS = 10
+LSH_TABLES = 4
+LSH_SEED = 42
 
 
 def _as_double(a: Column) -> Column:
@@ -40,20 +47,14 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine: queries broadcast against the corpus.
     Returns (query_id, neighbor_id, rk, score). Self-matches excluded."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("cv")
     )
     j = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
     score = _dot(F.col("qv"), F.col("cv")) / (
@@ -77,57 +78,49 @@ def cosine_topk(
     )
 
 
-def _planes(dim: int, bits: int, table: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(np.random.SeedSequence([seed, table]))
+def _planes(dim: int, bits: int, table: int) -> np.ndarray:
+    rng = np.random.default_rng(np.random.SeedSequence([LSH_SEED, table]))
     return rng.standard_normal((dim, bits)).astype(np.float64)
 
 
-def hyperplane_signatures(dim: int, bits: int, tables: int, seed: int = 42):
+def hyperplane_signatures(dim: int):
     """Pandas UDF: embedding -> array of per-table LSH buckets. All
-    ``tables`` signatures in ONE matmul over the horizontally stacked
+    ``LSH_TABLES`` signatures in ONE matmul over the horizontally stacked
     planes — one corpus scan and one Python stage instead of one per
     table. Bucket values are identical to one matmul per table's (same
     planes, column-independent dot products)."""
     planes = np.concatenate(
-        [_planes(dim, bits, t, seed) for t in range(tables)], axis=1
+        [_planes(dim, LSH_BITS, t) for t in range(LSH_TABLES)], axis=1
     )
-    weights = (1 << np.arange(bits)).astype(np.int64)
+    weights = (1 << np.arange(LSH_BITS)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(v: pd.Series) -> pd.Series:
         m = np.stack(v.to_numpy())
-        b = (m @ planes > 0).astype(np.int64).reshape(len(m), tables, bits) @ weights
+        b = (m @ planes > 0).astype(np.int64).reshape(len(m), LSH_TABLES, LSH_BITS) @ weights
         return pd.Series(list(b))
 
     return sig
 
 
-def lsh_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    bits: int = 10,
-    tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: same-bucket candidates across ``tables``
+def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5) -> DataFrame:
+    """Approximate top-k: same-bucket candidates across ``LSH_TABLES``
     hyperplane tables, exact cosine re-rank. All table signatures come
     from one Arrow-batched matmul per side (one corpus scan, one Python
     stage), posexploded to (table, bucket) and matched with a single
     broadcast equi-join on the pair — same candidate set as the
-    per-table union, one join instead of ``tables``."""
+    per-table union, one join instead of one per table."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    sig = hyperplane_signatures(dim, bits, tables)
+    sig = hyperplane_signatures(dim)
+    vec = F.col("embedding")
     cq = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"),
-        F.posexplode(sig(F.col(vec_col))).alias("t", "bucket"),
+        F.col("vec_id").alias("query_id"), _as_double(vec).alias("qv"),
+        F.posexplode(sig(vec)).alias("t", "bucket"),
     )
     cc = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv"),
-        F.posexplode(sig(F.col(vec_col))).alias("t", "bucket"),
+        F.col("vec_id").alias("neighbor_id"), _as_double(vec).alias("cv"),
+        F.posexplode(sig(vec)).alias("t", "bucket"),
     )
     # score BEFORE the pair-dedup exchange and aggregate instead of
     # dropDuplicates (guide §2.3: project before the exchange): the qv/cv
@@ -157,36 +150,19 @@ def lsh_cosine_topk(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    dim: int,
-    tau: float = 0.95,
-    bits: int = 10,
-    tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int | None = None,
-) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, dim: int, tau: float = 0.95) -> DataFrame:
     """Near-duplicate pairs (cosine >= tau) via LSH buckets + exact verify.
 
-    ``max_bucket`` is an OPT-IN skew guard for the 100 TB path: buckets
-    larger than it are dropped before the pair self-join (a degenerate
-    bucket of identical embeddings would emit O(bucket^2) pairs). It is off
-    by default because dropping a bucket silently loses recall — a corpus of
-    exact-duplicate embeddings would report zero pairs for those groups.
-    Callers that enable it own the recall trade-off (mirror the cap in any
-    oracle, as minhash_lsh_pairs' does)."""
-    sig = hyperplane_signatures(dim, bits, tables)
+    No bucket is capped: dropping a bucket silently loses recall (a corpus
+    of exact-duplicate embeddings would report zero pairs for those
+    groups), so a degenerate bucket of identical embeddings emits all
+    O(bucket^2) of its pairs."""
+    sig = hyperplane_signatures(dim)
+    vec = F.col("embedding")
     s = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"),
-        F.posexplode(sig(F.col(vec_col))).alias("t", "bucket"),
+        F.col("vec_id").alias("id"), _as_double(vec).alias("v"),
+        F.posexplode(sig(vec)).alias("t", "bucket"),
     )
-    if max_bucket is not None:
-        sizes = s.groupBy("t", "bucket").agg(F.count("*").alias("bn"))
-        s = s.join(
-            sizes.filter(F.col("bn") <= max_bucket).select("t", "bucket"),
-            ["t", "bucket"],
-        )
     a = s.select("t", "bucket", F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = s.select("t", "bucket", F.col("id").alias("id_b"), F.col("v").alias("vb"))
     # cosine BEFORE the pair-dedup exchange (guide §2.3): duplicate pairs

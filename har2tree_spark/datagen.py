@@ -284,9 +284,9 @@ def gen_documents_df(spark, n_docs: int, seed: int = 42, cfg: GenConfig | None =
 
 
 def write_corpus(spark, path: str, n_docs: int, seed: int = 42,
-                 cfg: GenConfig | None = None, include_scenarios: bool = True) -> None:
+                 cfg: GenConfig | None = None) -> None:
     (
-        gen_documents_df(spark, n_docs, seed, cfg, include_scenarios)
+        gen_documents_df(spark, n_docs, seed, cfg, include_scenarios=True)
         .write.mode("overwrite")
         .parquet(path)
     )

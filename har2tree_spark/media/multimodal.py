@@ -46,32 +46,34 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 16
+MEDIA_SEED = 42
+FRAME_EVERY_MS = 5000
 
 
-def payload_bytes(i: int, seed: int = 42) -> bytes:
+def payload_bytes(i: int) -> bytes:
     """Payload for media row ``i``: the first ``64 + i % 192`` bytes of the
-    md5 chain md5(f"{seed}:{i}:0") || md5(f"{seed}:{i}:1") || ... — chosen
-    over an RNG stream precisely so a SQL oracle can replay it
+    md5 chain md5(f"{MEDIA_SEED}:{i}:0") || md5(f"{MEDIA_SEED}:{i}:1") || ...
+    — chosen over an RNG stream precisely so a SQL oracle can replay it
     (DuckDB: md5('42:5:0') || md5('42:5:1') ... -> from_hex)."""
     size = 64 + i % 192
     blocks = (size + 15) // 16
     raw = b"".join(
-        hashlib.md5(f"{seed}:{i}:{j}".encode()).digest() for j in range(blocks)
+        hashlib.md5(f"{MEDIA_SEED}:{i}:{j}".encode()).digest() for j in range(blocks)
     )
     return raw[:size]
 
 
-def synthesize_media(spark, n: int, seed: int = 42, partitions: int | None = None) -> DataFrame:
-    """Deterministic fake media table (binary payload derived from the id)
-    for exercising the plumbing at any scale — distributed generation."""
-    partitions = partitions or spark.sparkContext.defaultParallelism
+def synthesize_media(spark, n: int) -> DataFrame:
+    """Deterministic fake media table (binary payload derived from the id
+    and ``MEDIA_SEED``) for exercising the plumbing at any scale —
+    distributed generation, one partition per core."""
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for i in pdf["id"].tolist():
                 mtype = ["image", "audio", "video"][int(i) % 3]
-                payload = payload_bytes(int(i), seed)
+                payload = payload_bytes(int(i))
                 rows.append(
                     {
                         "media_id": f"m{int(i):08d}",
@@ -92,7 +94,9 @@ def synthesize_media(spark, n: int, seed: int = 42, partitions: int | None = Non
                 )
             yield pd.DataFrame(rows)
 
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, MEDIA_SCHEMA)
+    return spark.range(
+        0, n, numPartitions=spark.sparkContext.defaultParallelism
+    ).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -135,15 +139,15 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fx, out_schema)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video rows: one output row per sampled
-    timestamp (explode on a JVM-computed sequence; the decode of the actual
-    frame is the same stubbed codec)."""
+    timestamp, every ``FRAME_EVERY_MS`` (explode on a JVM-computed
+    sequence; the decode of the actual frame is the same stubbed codec)."""
     v = media.filter(F.col("media_type") == "video")
     ts = F.sequence(
         F.lit(0).cast("long"),
         F.greatest(F.col("duration_ms") - 1, F.lit(0)).cast("long"),
-        F.lit(every_ms).cast("long"),
+        F.lit(FRAME_EVERY_MS).cast("long"),
     )
     return v.select(
         "media_id",

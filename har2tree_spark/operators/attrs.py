@@ -34,18 +34,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
+from har2tree_spark.operators.cascade import live_features
 from har2tree_spark.operators.parse import KEY_TOKEN_RE
-
-
-def _live(features: DataFrame) -> DataFrame:
-    return features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
 
 
 def pages_root_fill(features: DataFrame) -> DataFrame:
     """(doc_id, span_idx, page_cell, page_root_idx): W5 first-over-window
     fill. page_cell = own coarse cell, else the doc's first non-null coarse
     cell by (offset, span_idx); page_root_idx = the page's first span."""
-    f = _live(features).select("doc_id", "span_idx", "offset", "coarse_cell")
+    f = live_features(features).select("doc_id", "span_idx", "offset", "coarse_cell")
     w_doc = (
         Window.partitionBy("doc_id")
         .orderBy("offset", "span_idx")
@@ -68,7 +65,7 @@ def pages_root_fill(features: DataFrame) -> DataFrame:
 def resources_hashes(features: DataFrame) -> DataFrame:
     """(doc_id, span_idx, n_hashes, resources_hashes): per-span digest set,
     serialized sorted+comma-joined so the set is hash-comparable."""
-    f = _live(features)
+    f = live_features(features)
     body = F.when(F.col("text") != "", F.sha2(F.col("text"), 256))
     embedded = F.transform(F.col("ref_tokens"), lambda t: F.sha2(t, 256))
     arr = F.array_sort(
@@ -90,7 +87,7 @@ def marker_extract(features: DataFrame) -> DataFrame:
     """(doc_id, span_idx, marker, marker_cell, cross_zone): one row per
     received marker (embedded key token); cross_zone when the marker's
     coarse cell differs from the receiving span's."""
-    f = _live(features).select("doc_id", "span_idx", "coarse_cell", "ref_tokens")
+    f = live_features(features).select("doc_id", "span_idx", "coarse_cell", "ref_tokens")
     ex = f.select(
         "doc_id",
         "span_idx",
@@ -126,7 +123,7 @@ def marker_rollup(markers: DataFrame) -> DataFrame:
 def identifiers_extract(features: DataFrame) -> DataFrame:
     """(doc_id, span_idx, n_ids, identifiers): distinct sorted identifier
     tokens in the span text (one regexp scan, serialized for comparison)."""
-    f = _live(features)
+    f = live_features(features)
     ids = F.array_sort(
         F.array_distinct(F.regexp_extract_all(F.col("text"), F.lit("k[0-9]+"), 0))
     )
@@ -149,7 +146,7 @@ def span_timings(features: DataFrame) -> DataFrame:
     last span gets 0 — the reference's open-ended final entry). Epoch is
     emitted alongside the formatted UTC timestamp so both engines compare
     exactly."""
-    f = _live(features).select("doc_id", "span_idx", "offset")
+    f = live_features(features).select("doc_id", "span_idx", "offset")
     w = Window.partitionBy("doc_id").orderBy("offset", "span_idx")
     epoch = (F.lit(_BASE_EPOCH) + F.col("offset")).cast("long")
     dur = F.coalesce(
@@ -169,7 +166,7 @@ def span_timings(features: DataFrame) -> DataFrame:
 def key_class(features: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     """(doc_id, span_idx, ref, ref_class, decoded_ref): grammar
     classification + canonical normalization of a ref column."""
-    f = _live(features)
+    f = live_features(features)
     ref = F.col(ref_col)
     cls = (
         F.when(ref == "", "none")

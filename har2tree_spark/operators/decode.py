@@ -124,8 +124,9 @@ def _unb64(c: Column) -> Column:
     return F.unbase64(c).cast("string")
 
 
-def decode_dispatch(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Adds (decode_kind, decode_ok, decoded, decoded_size).
+def decode_dispatch(df: DataFrame) -> DataFrame:
+    """Adds (decode_kind, decode_ok, decoded, decoded_size) for the
+    ``payload`` column.
 
     The form arm does full application/x-www-form-urlencoded decoding
     (``F.try_url_decode``: %XX unescape + '+' -> space — the reference's
@@ -139,7 +140,7 @@ def decode_dispatch(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     ensures every '%' opens a valid %XX escape either way, so the try_
     variant's null branch never fires on dispatched rows (coalesce kept
     as belt-and-braces)."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     is_gzip_garbled = p.startswith(GZIP_GARBLED_PREFIX)
     is_data = p.startswith("data:")
     duri_hdr = F.split_part(p, F.lit(","), F.lit(1))

@@ -9,9 +9,9 @@ ONE nested JSON document per doc_id.
 
 Scale shape: tree assembly is inherently per-doc sequential — exactly like
 the exact cascade kernel — so it reuses the same plan: hash-repartition by
-doc_id + sortWithinPartitions + ``mapInPandas`` with carry-over buffering
-for docs straddling Arrow batches. Parallel across docs, one pass within a
-doc, no driver-side collection.
+doc_id, one ``groupBy(doc_id)`` row per doc on that partitioning (no second
+exchange, no sort), then ``mapInPandas`` emits each row's tree. Parallel
+across docs, one pass within a doc, no driver-side collection.
 
 Serialization uses an explicit-stack emitter: an adversarial deep chain can
 exhaust neither the Python stack nor ``json.dumps``'s recursive C encoder.
@@ -28,6 +28,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from har2tree_spark.operators.cascade import live_features
 
 EXPORT_SCHEMA = "doc_id string, n_nodes long, tree string"
 
@@ -97,47 +99,42 @@ def _emit_doc(
     return "".join(out)
 
 
-def _export_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, g in pdf.groupby("doc_id", sort=False):
-        spans = g["span_idx"].astype(int).tolist()
-        parents = dict(zip(spans, g["parent_idx"].astype(int)))
-        kinds = dict(zip(spans, g["kind"]))
-        jks = dict(zip(spans, g["join_kind"]))
-        rows.append((doc_id, len(spans), _emit_doc(spans, parents, kinds, jks)))
-    return pd.DataFrame(rows, columns=["doc_id", "n_nodes", "tree"])
+def _export_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """One tree row per doc row; each row's node arrays are sorted by
+    span_idx."""
+    for pdf in batches:
+        rows = []
+        for doc_id, spans, parents, kinds, jks in zip(
+            pdf["doc_id"], pdf["span_idx"], pdf["parent_idx"], pdf["kind"], pdf["join_kind"]
+        ):
+            spans = spans.tolist()
+            tree = _emit_doc(
+                spans,
+                dict(zip(spans, parents.tolist())),
+                dict(zip(spans, kinds)),
+                dict(zip(spans, jks)),
+            )
+            rows.append((doc_id, len(spans), tree))
+        yield pd.DataFrame(rows, columns=["doc_id", "n_nodes", "tree"])
 
 
 def tree_json(join_result: DataFrame, features: DataFrame) -> DataFrame:
     """(doc_id, n_nodes, tree): the per-doc d3 JSON tree assembled from the
     cascade's parent pointers + feature attributes."""
-    f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0)).select(
-        "doc_id", "span_idx", "kind"
-    )
+    f = live_features(features).select("doc_id", "span_idx", "kind")
     rows = join_result.select("doc_id", "span_idx", "parent_idx", "join_kind").join(
         f, ["doc_id", "span_idx"]
     )
+    # explicit partition count, as in cascade.resolve_exact: AQE would
+    # coalesce by shuffle bytes, but the Python consumer costs CPU per span
     par = rows.sparkSession.sparkContext.defaultParallelism
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["doc_id"].iloc[-1]
-            mask = pdf["doc_id"] == last
-            carry = pdf[mask]
-            head = pdf[~mask]
-            if len(head):
-                yield _export_frame(head)
-        if carry is not None and len(carry):
-            yield _export_frame(carry)
-
+    nodes = F.array_sort(
+        F.collect_list(F.struct("span_idx", "parent_idx", "kind", "join_kind"))
+    ).alias("nodes")
     return (
         rows.repartition(par, "doc_id")
-        .sortWithinPartitions("doc_id", "span_idx")
-        .mapInPandas(run, EXPORT_SCHEMA)
+        .groupBy("doc_id")
+        .agg(nodes)
+        .select("doc_id", "nodes.span_idx", "nodes.parent_idx", "nodes.kind", "nodes.join_kind")
+        .mapInPandas(_export_docs, EXPORT_SCHEMA)
     )

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from har2tree_spark.geo import grid
 from har2tree_spark.geo.geometry import points_in_polygon
 from har2tree_spark.geo.rtree import STRtree
+from har2tree_spark.operators.cascade import live_features
 from har2tree_spark.operators.kernel import MAX_RING
 from har2tree_spark.schema import PRIORITY
 
@@ -236,7 +237,7 @@ def resolve_with_fallbacks(features: DataFrame, base: DataFrame) -> DataFrame:
     fallback cascade: coarse-cell host match first, then ring-kNN over
     attached spans out to the exact kernel's ``MAX_RING``, then root (the
     relational J10->J13 chain)."""
-    f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
+    f = live_features(features)
     unmatched = base.filter(F.col("join_kind") == "fallback_root").select(
         "doc_id", "span_idx"
     )

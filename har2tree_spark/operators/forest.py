@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from har2tree_spark.operators.cascade import live_features
+
 # doubling rounds: resolves forest chains up to 2^10 docs deep; a cycle
 # stops here with each doc on its current ancestor
 _MAX_DOUBLING = 10
@@ -29,7 +31,7 @@ def doc_summaries(features: DataFrame, join_result: DataFrame) -> DataFrame:
     """One row per doc: root span's key + media_ref, and the landing key
     (deepest node of the pure redirect chain from the root, else root key)
     — the final_redirect analogue (reference har2tree.py:268-302)."""
-    f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
+    f = live_features(features)
     roots = (
         join_result.filter(F.col("join_kind") == "root")
         .select("doc_id", F.col("span_idx").alias("root_span"))

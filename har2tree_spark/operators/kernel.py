@@ -239,13 +239,13 @@ _STAGE_CODE = {s: i for i, s in enumerate(_STAGE_NAMES)}
 _STAGE_PRIO = [PRIORITY[s] for s in _STAGE_NAMES]
 
 
-def _np_nullable(col, dtype=np.float64):
+def _np_nullable(col):
     """Arrow column -> numpy float64 with nulls as NaN."""
     import pyarrow.compute as pc  # noqa: PLC0415
 
     if col.null_count:
         return pc.cast(col, "double").to_numpy(zero_copy_only=False)
-    return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    return col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
 
 
 def _prep_arrow(batch) -> dict:

@@ -276,9 +276,13 @@ def _feature_columns(
 
 
 def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
-    """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
-    root_idx, n_live). One output row per surviving span (every span,
-    dropped ones too, with ``keep_dropped``)."""
+    """documents -> features: (doc_id, root_idx, n_live, span_idx, kind,
+    text, media_ref, offset, key, key_num, lon, lat, cell, coarse_cell,
+    valid, suppressed, dropped, nbytes, ref_tokens, kind_code, has_media,
+    media_num, ref_nums). One output row per surviving span (every span,
+    dropped ones too, with ``keep_dropped``). Without ``keep_dropped`` a
+    quarantined doc (``n_live`` 0) keeps one placeholder row with a null
+    ``span_idx``."""
     per_doc, exploded, flat, ref_nums = _feature_columns(keep_dropped)
     return (
         _live_spans(docs)

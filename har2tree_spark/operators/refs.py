@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from har2tree_spark.operators.cascade import live_features
+
 
 def ref_variants(ref: Column) -> Column:
     """Ordered rewrite candidates for a (possibly mangled) ref:
@@ -42,7 +44,7 @@ def resolve_refs(features: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     """(doc_id, span_idx, ref, resolved_ref, variant_rank) for every span
     whose ref resolves to a key in the same document. Unresolvable refs
     produce no row (callers left-join and treat null as dangling)."""
-    f = features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
+    f = live_features(features)
     probes = (
         f.filter((F.col(ref_col) != "") & F.col(ref_col).isNotNull())
         .select(

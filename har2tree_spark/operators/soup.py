@@ -152,14 +152,15 @@ def _parse_markup_events(body: str) -> tuple[list[str], list[str]]:
     return tags, refs
 
 
-def soup_features(df: DataFrame, body_col: str = "body") -> DataFrame:
-    """Adds (tags, domhash, res_refs, n_tags, n_res) for a markup column.
+def soup_features(df: DataFrame) -> DataFrame:
+    """Adds (tags, domhash, res_refs, n_tags, n_res) for the ``body``
+    markup column.
     ``res_refs`` = attribute refs ++ CSS url() refs ++ @import refs, in
     that deterministic order (the reference appends per category too).
     Pure-JVM regexp extraction — the 100-TB hot path for the regular
     markup grammar."""
     orig_cols = df.columns
-    body = F.col(body_col)
+    body = F.col("body")
     css = (
         _extract_all(body, CSS_URL_RE),
         _extract_all(body, CSS_IMPORT_RE),
@@ -181,25 +182,20 @@ def soup_features(df: DataFrame, body_col: str = "body") -> DataFrame:
     return out.select(*orig_cols, "tags", "domhash", "res_refs", "n_tags", "n_res")
 
 
-def js_redirects(
-    df: DataFrame,
-    features: DataFrame,
-    body_col: str = "body",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def js_redirects(df: DataFrame, features: DataFrame) -> DataFrame:
     """Per span: the first JS-redirect / meta-refresh target found in the
-    body, resolved against the doc's key universe.
+    ``body`` column, resolved against the doc's key universe.
 
     Returns (doc_id, span_idx, redirect_url, redirect_kind) where
     redirect_kind is 'js' | 'meta' | null and redirect_url is null when
     the target does not resolve (redirect_to_nothing: flagged, kept).
     The universe join ships only (doc_id, key) — hash early, join small.
     """
-    body = F.col(body_col)
+    body = F.col("body")
     js_t = F.regexp_extract(body, JS_REDIRECT_RE, 1)
     meta_t = F.regexp_extract(body, META_REFRESH_RE, 1)
     cand = df.select(
-        doc_col,
+        "doc_id",
         "span_idx",
         F.when(js_t != "", js_t)
         .when(meta_t != "", meta_t)
@@ -208,17 +204,17 @@ def js_redirects(
     ).filter(F.col("target").isNotNull())
     universe = (
         features.filter(F.col("key").isNotNull())
-        .select(doc_col, F.col("key").alias("target"))
+        .select("doc_id", F.col("key").alias("target"))
         .dropDuplicates()
     )
     return (
         cand.join(
             universe.withColumn("resolved", F.lit(True)),
-            [doc_col, "target"],
+            ["doc_id", "target"],
             "left",
         )
         .select(
-            doc_col,
+            "doc_id",
             "span_idx",
             F.when(F.col("resolved"), F.col("target")).alias("redirect_url"),
             "redirect_kind",

@@ -162,7 +162,9 @@ def doc_stats(
     join_result: DataFrame,
     depth_complete: bool = False,
 ) -> DataFrame:
-    """Golden per-doc stats (DOC_STATS_SCHEMA; A4 analogue).
+    """Golden per-doc stats (A4 analogue): (doc_id, total_spans,
+    unique_keys, total_cells, unique_cells, tree_depth, total_chain,
+    total_bytes).
 
     ``total_chain`` and ``tree_depth`` come from one groupBy(doc_id) over
     ``join_result``. ``tree_depth`` is the deepest depth reachable from

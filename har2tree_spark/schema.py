@@ -1,9 +1,11 @@
-"""Canonical fixed schemas for the engine.
+"""Canonical fixed schemas for the engine: the input documents, the
+cascade's join result and the stage priorities.
 
 The reference attaches features dynamically at runtime (ete3
 ``add_feature``; reference nodes.py:176,205 and ``hasattr`` probes all over
 har2tree.py) — Spark needs a closed schema, so every dynamic feature becomes
-a nullable column here (SURVEY.md §1.1).
+a nullable column (SURVEY.md §1.1). Each operator's own ``select`` lists
+its output columns.
 """
 
 from __future__ import annotations
@@ -24,42 +26,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
-    ]
-)
-
-# Span kinds (FIXTURES.md §1). 'empty' is the invalid/status-0 analogue
-# (reference har2tree.py:575-603); 'redirect' carries a forward pointer;
-# 'iframe' embeds child keys in text; 'js' uses initiator semantics.
-KINDS = (
-    "text",
-    "html",
-    "css",
-    "js",
-    "img",
-    "video",
-    "audio",
-    "iframe",
-    "redirect",
-    "empty",
-)
-
-# One row per span after the parse pass (vectorized; no per-row Python).
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("span_idx", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-        T.StructField("key", T.StringType(), True),  # own feature key, null if none
-        T.StructField("key_num", T.LongType(), True),
-        T.StructField("lon", T.DoubleType(), True),
-        T.StructField("lat", T.DoubleType(), True),
-        T.StructField("cell", T.LongType(), True),  # fine-resolution grid cell
-        T.StructField("valid", T.BooleanType(), False),  # kind != 'empty'
-        T.StructField("suppressed", T.BooleanType(), False),  # status-0 dedup (P2)
-        T.StructField("nbytes", T.LongType(), True),  # body-size analogue
     ]
 )
 
@@ -92,39 +58,3 @@ PRIORITY = {
     "fallback_knn": 8,
     "fallback_root": 9,
 }
-
-TILE_ASSIGNMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("span_idx", T.IntegerType(), False),
-        T.StructField("cell", T.LongType(), False),
-        T.StructField("level", T.IntegerType(), False),
-        T.StructField("parent_cell", T.LongType(), True),
-    ]
-)
-
-DOC_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("total_spans", T.IntegerType(), True),
-        T.StructField("unique_keys", T.IntegerType(), True),
-        T.StructField("total_cells", T.IntegerType(), True),
-        T.StructField("unique_cells", T.IntegerType(), True),
-        T.StructField("tree_depth", T.IntegerType(), True),
-        T.StructField("total_chain", T.IntegerType(), True),
-        T.StructField("total_bytes", T.LongType(), True),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), True),
-        T.StructField("span_count", T.LongType(), True),
-        T.StructField("quarantined", T.LongType(), True),
-        T.StructField("snapshot_id", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-    ]
-)

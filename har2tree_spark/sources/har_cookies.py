@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from har2tree_spark.operators.cascade import live_features
 from har2tree_spark.sources.har_source import _dict
 
 
@@ -115,7 +116,7 @@ def initial_cookies(cookies: DataFrame, features: DataFrame) -> DataFrame:
     the parse output), not blindly span 0 — ignored entries are skipped in
     the reference's node list too."""
     roots = (
-        features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
+        live_features(features)
         .select("doc_id", "root_idx")
         .dropDuplicates(["doc_id"])
     )

@@ -19,14 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_sidecar(docs: DataFrame, sidecar: DataFrame, on: str = "doc_id") -> DataFrame:
-    """docs + sidecar columns (nullable). A sidecar with duplicate keys is
-    reduced deterministically first (min struct of the extra columns), so
-    the join can never fan out document rows."""
-    extra = [c for c in sidecar.columns if c != on]
+def with_sidecar(docs: DataFrame, sidecar: DataFrame) -> DataFrame:
+    """docs + sidecar columns (nullable), joined on ``doc_id``. A sidecar
+    with duplicate keys is reduced deterministically first (min struct of
+    the extra columns), so the join can never fan out document rows."""
+    extra = [c for c in sidecar.columns if c != "doc_id"]
     packed = (
-        sidecar.groupBy(on)
+        sidecar.groupBy("doc_id")
         .agg(F.min(F.struct(*extra)).alias("_sc"))
-        .select(on, *[F.col(f"_sc.{c}").alias(c) for c in extra])
+        .select("doc_id", *[F.col(f"_sc.{c}").alias(c) for c in extra])
     )
-    return docs.join(packed, on, "left")
+    return docs.join(packed, "doc_id", "left")

@@ -15,9 +15,14 @@ in DuckDB, so the driver's oracle can replay signatures bit-identically);
 min over the hex string is a valid uniform min-hash.
 
 Scale notes: shingle explode is narrow; the only shuffles are the band/
-shingle groupBys. Band buckets are capped (``max_bucket``) before the
+shingle groupBys. Band buckets are capped (``MAX_BUCKET``) before the
 pair self-join so one degenerate bucket (all-identical boilerplate docs —
 the hot-cell analogue) cannot produce a quadratic pair blowup.
+
+Every operator reads ``(doc_id, text)`` and has one fixed shape: 3-word
+shingles, a 16-hash MinHash signature in 4 bands, buckets capped at 64
+members, shingles shared by more than 1000 documents dropped. The
+driver's DuckDB oracle replays these values as literals.
 """
 
 from __future__ import annotations
@@ -25,13 +30,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+SHINGLE_N = 3
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+MAX_BUCKET = 64
+MAX_DF = 1000
 
-def exact_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    members_cap: int = 100,
-) -> DataFrame:
+
+def exact_dedup(df: DataFrame, members_cap: int = 100) -> DataFrame:
     """Groups by content digest; keeper = min id per group.
 
     ``members`` holds only the ``members_cap`` smallest ids per group
@@ -47,10 +53,7 @@ def exact_dedup(
     constant-state count/min aggregate. Cost: the 2-column (hash, id)
     projection is scanned by two branches (prunable-cheap from parquet)
     plus one extra sort-shuffle."""
-    digest = F.md5(F.col(text_col))
-    h = df.select(
-        digest.alias("content_hash"), F.col(id_col).alias("_mid")
-    )
+    h = df.select(F.md5("text").alias("content_hash"), F.col("doc_id").alias("_mid"))
     counts = h.groupBy("content_hash").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.min("_mid").alias("keeper"),
@@ -65,8 +68,10 @@ def exact_dedup(
     return counts.join(capped, "content_hash")
 
 
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """n-word shingles of a text column (array<string>), JVM-side."""
+def word_shingles(text_col: Column) -> Column:
+    """``SHINGLE_N``-word shingles of a text column (array<string>),
+    JVM-side."""
+    n = SHINGLE_N
     words = F.split(F.trim(text_col), "\\s+")
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
     return F.when(F.size(words) >= n,
@@ -98,7 +103,7 @@ def minhash_base(shingles: Column) -> Column:
     )
 
 
-def minhash_signature(base: Column, num_hashes: int = 16) -> Column:
+def minhash_signature(base: Column) -> Column:
     """array<long> signature over ``minhash_base`` values: per seed i,
     min((a_i*h + b_i) mod 2^48). SQL-replayable: the driver oracle inlines
     the same (a_i, b_i) literals.
@@ -115,44 +120,35 @@ def minhash_signature(base: Column, num_hashes: int = 16) -> Column:
     return F.array(
         *[
             F.array_min(F.transform(base, uh(a, b)))
-            for a, b in _mh_params(num_hashes)
+            for a, b in _mh_params(MINHASH_HASHES)
         ]
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int = 64,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Candidate pairs via LSH banding, verified by signature-estimated
     Jaccard >= threshold. Returns (id_a, id_b, est_jaccard).
 
     Plan shape (r6 rewrite): ONE hash exchange on (band, bucket-hash) does
     all the pair generation — a window row_number pre-cap bounds per-bucket
-    state at max_bucket+1 rows (the bounded-buffer pattern from exact
+    state at MAX_BUCKET+1 rows (the bounded-buffer pattern from exact
     dedup), the groupBy reuses the window's partitioning (no second
     exchange), and the in-bucket pairwise expansion is a JVM higher-order
     transform over the collected members. This replaces the r4/r5 shape
     (eager localCheckpoint job + bucket-size agg + semi-join + a-b
     self-join: 3 extra shuffles plus a checkpoint write) which bench.py
     showed was overhead-bound at sf0.1, not md5-bound. Semantics are
-    bit-identical: buckets with >max_bucket members are dropped whole
+    bit-identical: buckets with >MAX_BUCKET members are dropped whole
     (they hit the cap+1 sentinel and fail the size filter), smaller
     buckets are complete, and the est filter runs BEFORE the pair-dedup
     shuffle so rejected candidates never cross the wire."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     # Two measured perf guards (16.6x together at sf0.1):
     #  * repartition: a single small parquet file reads as ONE partition, so
     #    the md5 sweep — the dominant cost — would run on one core;
     #  * staged select: projecting the shingles column first keeps
     #    CollapseProject from re-inlining the shingle construction into each
-    #    of the num_hashes seed lambdas (it preserves intermediates that are
+    #    of the MINHASH_HASHES seed lambdas (it preserves intermediates that are
     #    referenced more than once).
     # (An explode -> md5 -> 16-min-aggregates formulation was A/B-measured
     # in round 4 and is ~2x SLOWER at sf0.1 — the extra groupBy shuffle of
@@ -162,11 +158,10 @@ def minhash_lsh_pairs(
     sig = (
         df.repartition(par)
         .select(
-            F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), shingle_n).alias("sh"),
+            F.col("doc_id").alias("id"), word_shingles(F.col("text")).alias("sh")
         )
         .select("id", minhash_base(F.col("sh")).alias("hv"))
-        .select("id", minhash_signature(F.col("hv"), num_hashes).alias("sig"))
+        .select("id", minhash_signature(F.col("hv")).alias("sig"))
     )
     band_structs = [
         F.struct(
@@ -181,16 +176,16 @@ def minhash_lsh_pairs(
                 )
             ).alias("bh"),
         )
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     ]
     banded = sig.select("id", "sig", F.explode(F.array(*band_structs)).alias("bb")).select(
         "id", "sig", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
     # Skew/degenerate-bucket guard with BOUNDED state: row_number over the
-    # bucket key caps what the collect_list can buffer at max_bucket+1
+    # bucket key caps what the collect_list can buffer at MAX_BUCKET+1
     # rows, so a pathological bucket holds cap+1 structs, never the whole
-    # key's population. A bucket whose true size exceeds max_bucket
-    # surfaces as exactly max_bucket+1 members and is dropped whole by the
+    # key's population. A bucket whose true size exceeds MAX_BUCKET
+    # surfaces as exactly MAX_BUCKET+1 members and is dropped whole by the
     # size filter — identical semantics to the old count-and-semi-join
     # guard, minus two shuffles. The groupBy immediately after the window
     # shares its HashPartitioning(band, bh), so the whole guard+collect is
@@ -198,10 +193,10 @@ def minhash_lsh_pairs(
     w = Window.partitionBy("band", "bh").orderBy("id")
     buckets = (
         banded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_bucket + 1)
+        .filter(F.col("rn") <= MAX_BUCKET + 1)
         .groupBy("band", "bh")
         .agg(F.sort_array(F.collect_list(F.struct("id", "sig"))).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET))
     )
     # In-bucket pairwise expansion, JVM-side: for member i, pair it with
     # every later member (slice is 1-based; the two-arg lambda binds
@@ -238,26 +233,18 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int = 1000,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """n-gram Jaccard near-dup pairs over discriminative shingles: explode
-    distinct shingles, drop shingles shared by more than ``max_df`` docs
+    distinct shingles, drop shingles shared by more than ``MAX_DF`` docs
     (skew guard — one stopword-like shingle in 10^6 docs would alone emit
     ~10^12 pairs), equi-join on shingle, |A∩B|/(|A|+|B|-|A∩B|) >= threshold.
     Set sizes are counted AFTER the frequency cap, so the Jaccard is exact
     over the capped shingle space (boilerplate shingles carry no signal)."""
     sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
+        F.col("doc_id").alias("id"), F.explode(word_shingles(F.col("text"))).alias("sh")
     ).distinct()
     freq = sh.groupBy("sh").agg(F.count("*").alias("df_n"))
-    sh = sh.join(freq.filter(F.col("df_n") <= max_df).select("sh"), "sh")
+    sh = sh.join(freq.filter(F.col("df_n") <= MAX_DF).select("sh"), "sh")
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id_a"), "sh")
     b = sh.select(F.col("id").alias("id_b"), "sh")
@@ -279,7 +266,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document, fully JVM-side (no Python stage).
 
     Token hash = first 8 bytes (16 hex chars) of md5(token) — the same
@@ -297,9 +284,9 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     Plan shape note: hi/lo are projected in their OWN select before the
     aggregate — each is referenced 32 times, and CollapseProject only
     preserves intermediates that are materialized as named columns."""
-    toks = F.split(F.trim(F.col(text_col)), "\\s+")
+    toks = F.split(F.trim(F.col("text")), "\\s+")
     tok_rows = (
-        df.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
+        df.select(F.col("doc_id").alias("id"), F.explode(toks).alias("tok"))
         .select("id", F.md5("tok").alias("h"))
         .select(
             "id",
@@ -323,7 +310,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     )
     sh = low + F.when(majority[63], F.lit(-(1 << 63))).otherwise(F.lit(0))
     fp = agg.select("id", sh.alias("simhash"))
-    ids = df.select(F.col(id_col).alias("id"))
+    ids = df.select(F.col("doc_id").alias("id"))
     return ids.join(fp, "id", "left").select(
         "id", F.coalesce("simhash", F.lit(0)).cast("long").alias("simhash")
     )
@@ -343,42 +330,26 @@ def simhash_band_layout(bands: int) -> list[tuple[int, int]]:
     return out
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bands: int | None = None,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64 bits into ``bands`` chunks,
-    bucket-join, verify exact Hamming distance. Recall is exact only when
-    ``bands >= max_hamming + 1`` (pigeonhole over a full partition of the
-    64 bits), so bands is derived from max_hamming when not given and a
-    too-small explicit value is rejected. Buckets larger than
-    ``max_bucket`` are dropped before the pair join (skew guard, same
-    contract as minhash_lsh_pairs)."""
-    if bands is None:
-        bands = max_hamming + 1
-    if bands < max_hamming + 1:
-        raise ValueError(
-            f"bands={bands} cannot guarantee recall at max_hamming={max_hamming}; "
-            f"need bands >= {max_hamming + 1}"
-        )
-    sh = simhash(df, id_col, text_col)
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by SimHash: band the 64 bits into ``max_hamming + 1``
+    chunks, bucket-join, verify exact Hamming distance. That band count
+    makes recall exact (pigeonhole over a full partition of the 64 bits).
+    Buckets larger than ``MAX_BUCKET`` are dropped before the pair join
+    (skew guard, same contract as minhash_lsh_pairs)."""
+    sh = simhash(df)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
             F.pmod(F.shiftrightunsigned("simhash", start), F.lit(1 << width)).alias("bh"),
         )
-        for b, (start, width) in enumerate(simhash_band_layout(bands))
+        for b, (start, width) in enumerate(simhash_band_layout(max_hamming + 1))
     ]
     banded = sh.select("id", "simhash", F.explode(F.array(*band_structs)).alias("bb")).select(
         "id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
     bucket_sizes = banded.groupBy("band", "bh").agg(F.count("*").alias("bn"))
     banded = banded.join(
-        bucket_sizes.filter(F.col("bn") <= max_bucket).select("band", "bh"),
+        bucket_sizes.filter(F.col("bn") <= MAX_BUCKET).select("band", "bh"),
         ["band", "bh"],
     )
     a = banded.select("band", "bh", F.col("id").alias("id_a"), F.col("simhash").alias("h_a"))

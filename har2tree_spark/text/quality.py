@@ -50,10 +50,11 @@ def lang_id(text_col: Column) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def quality_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-doc quality signals: lengths, token count, word stats, stopword /
-    punctuation / digit ratios, and a composite [0,1] quality score."""
-    t = F.col(text_col)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Per-doc quality signals over ``(doc_id, text)``: lengths, token
+    count, word stats, stopword / punctuation / digit ratios, and a
+    composite [0,1] quality score."""
+    t = F.col("text")
     words = F.split(F.trim(t), "\\s+")
     n_words = F.greatest(F.size(words), F.lit(1))
     mean_wlen = F.aggregate(
@@ -71,7 +72,7 @@ def quality_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         + F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio * 5 - digit_ratio * 2) * 0.25
     )
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.length(t).cast("long").alias("n_chars"),
         F.size(words).cast("long").alias("n_words"),
         token_count(t).alias("n_tokens"),
@@ -84,12 +85,13 @@ def quality_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Normalized content fingerprint: lowercase, collapse whitespace,
-    strip non-alphanumerics, md5 — robust to formatting-only edits."""
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Normalized content fingerprint of ``(doc_id, text)``: lowercase,
+    collapse whitespace, strip non-alphanumerics, md5 — robust to
+    formatting-only edits."""
     norm = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", ""), r"\s+", " "
+        F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""), r"\s+", " "
     )
     return df.select(
-        F.col(id_col).alias("id"), F.md5(F.trim(norm)).alias("fingerprint")
+        F.col("doc_id").alias("id"), F.md5(F.trim(norm)).alias("fingerprint")
     )

@@ -35,7 +35,7 @@ def test_lsh_topk_recall(spark):
     df, _ = _emb(spark, n=120)
     qs = df.filter("vec_id < 5")
     exact = knn.cosine_topk(df, qs, k=1).toPandas()
-    approx = knn.lsh_cosine_topk(df, qs, dim=8, k=1, bits=6, tables=6).toPandas()
+    approx = knn.lsh_cosine_topk(df, qs, dim=8, k=1).toPandas()
     e = exact.set_index("query_id").neighbor_id
     a = approx.set_index("query_id").neighbor_id
     # clustered data: LSH must recover the exact nearest for most queries
@@ -73,23 +73,18 @@ def test_embedding_neardup(spark):
         (2, [0.0, 1.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = knn.embedding_neardup_pairs(df, dim=4, tau=0.99, bits=4, tables=8).toPandas()
+    got = knn.embedding_neardup_pairs(df, dim=4, tau=0.99).toPandas()
     assert {(0, 1)} == set(map(tuple, got[["id_a", "id_b"]].to_numpy()))
 
 
 def test_embedding_neardup_exact_duplicates_kept_by_default(spark):
-    # the degenerate all-identical corpus: with the (opt-in) bucket cap
-    # disabled by default, every pair must be reported, not silently dropped
+    # the degenerate all-identical corpus: no bucket is capped, so every
+    # pair must be reported, not silently dropped
     n = 12
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(n)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = knn.embedding_neardup_pairs(df, dim=4, tau=0.99, bits=4, tables=2)
+    got = knn.embedding_neardup_pairs(df, dim=4, tau=0.99)
     assert got.count() == n * (n - 1) // 2
-    # opting into a cap smaller than the bucket drops the group entirely
-    capped = knn.embedding_neardup_pairs(
-        df, dim=4, tau=0.99, bits=4, tables=2, max_bucket=4
-    )
-    assert capped.count() == 0
 
 
 def test_ann_on_driver_embeddings(spark):

@@ -77,21 +77,35 @@ def test_dedup_on_driver_documents(spark):
 
 
 def test_degenerate_corpus_bounded(spark):
-    """1k identical docs: every pair generator must stay bounded (bucket /
+    """Identical docs: every pair generator must stay bounded (bucket /
     document-frequency caps drop the degenerate groups instead of emitting
-    ~500k quadratic pairs)."""
-    rows = [(i, "same boilerplate text repeated in every single document") for i in range(1000)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    assert dedup.minhash_lsh_pairs(d, max_bucket=64).count() == 0
-    assert dedup.simhash_pairs(d, max_hamming=3, max_bucket=64).count() == 0
-    assert dedup.ngram_jaccard_pairs(d, max_df=100).count() == 0
+    ~500k quadratic pairs). A bucket of exactly ``MAX_BUCKET`` docs is kept
+    whole; one more doc drops it, and ``MAX_DF + 1`` docs drop every
+    shared shingle."""
+    text = "same boilerplate text repeated in every single document"
+
+    def same(n):
+        return spark.createDataFrame([(i, text) for i in range(n)], "doc_id long, text string")
+
+    n = dedup.MAX_BUCKET
+    assert dedup.minhash_lsh_pairs(same(n)).count() == n * (n - 1) // 2
+    assert dedup.simhash_pairs(same(n)).count() == n * (n - 1) // 2
+    assert dedup.minhash_lsh_pairs(same(n + 1)).count() == 0
+    assert dedup.simhash_pairs(same(n + 1)).count() == 0
+    d = same(dedup.MAX_DF + 1)
+    assert dedup.minhash_lsh_pairs(d).count() == 0
+    assert dedup.simhash_pairs(d, max_hamming=3).count() == 0
+    assert dedup.ngram_jaccard_pairs(d).count() == 0
 
 
 def test_simhash_bands_guard(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup.simhash_pairs(_docs(spark), max_hamming=8, bands=4)
+    # simhash_pairs bands max_hamming + 1 chunks, so a pair within
+    # max_hamming bits shares one whole band: the near dup (1, 3) is found
+    pairs = dedup.simhash_pairs(_docs(spark), max_hamming=8).toPandas()
+    got = dict(zip(zip(pairs.id_a, pairs.id_b), pairs.hamming))
+    want = {r.id: r.simhash for r in dedup.simhash(_docs(spark)).collect()}
+    d13 = bin((want[1] ^ want[3]) & (2**64 - 1)).count("1")
+    assert (d13 <= 8) == ((1, 3) in got)
     # band layout partitions all 64 bits
     layout = dedup.simhash_band_layout(9)
     assert sum(w for _, w in layout) == 64

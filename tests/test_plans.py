@@ -363,14 +363,14 @@ def test_lsh_fused_signatures_match_per_table(spark):
     rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     fused = df.select(
-        "vec_id", knn.hyperplane_signatures(16, 8, 3)("embedding").alias("sigs")
+        "vec_id", knn.hyperplane_signatures(16)("embedding").alias("sigs")
     ).toPandas()
     vecs = np.asarray([v for _, v in rows])
-    weights = (1 << np.arange(8)).astype(np.int64)
+    weights = (1 << np.arange(knn.LSH_BITS)).astype(np.int64)
     got = dict(zip(fused.vec_id, fused.sigs))
-    for t in range(3):
+    for t in range(knn.LSH_TABLES):
         # one table's buckets from its own planes, computed in numpy
-        single = (vecs @ knn._planes(16, 8, t) > 0).astype(np.int64) @ weights
+        single = (vecs @ knn._planes(16, knn.LSH_BITS, t) > 0).astype(np.int64) @ weights
         assert [got[i][t] for i, _ in rows] == single.tolist(), f"table {t}"
 
 
@@ -414,12 +414,12 @@ def test_ivf_assignment_partial_agg(spark):
     rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = ivf.sampled_centroids(df, 8)
-    lists = ivf._assign(df, cents, 1, "neighbor_id", "nv", "vec_id", "embedding")
+    lists = ivf._assign(df, cents, 1, "neighbor_id", "nv")
     plan = _plan(lists)
     assert "max_by" in plan and "partial" in plan.lower(), plan
     assert "(1) Window" not in plan and " Window" not in plan, plan
     # the nprobe>1 probe path keeps its window (natural top-n shape)
-    probes = ivf._assign(df, cents, 4, "query_id", "qv", "vec_id", "embedding")
+    probes = ivf._assign(df, cents, 4, "query_id", "qv")
     assert "Window" in _plan(probes)
 
 

@@ -16,8 +16,10 @@ generates a small seeded corpus (datagen runs distributed, so executors
 must import the package too — the mapInPandas stages exercise the
 executor-side import path that forgetting --py-files breaks).
 
-Prints one JSON line {docs, join_rows, tile_rollups} for the caller to
-assert on.
+Runs the shipped ``pipeline.run_pipeline(docs, "exact")`` and prints one
+JSON line {docs, join_rows, tile_rollups, pkg_from} for the caller to
+assert on: the document count and the row counts of the pipeline's
+``join_result`` and ``tile_rollup`` outputs.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from pyspark.sql import SparkSession
 
 import har2tree_spark  # noqa: F401 — must come from --py-files
 from har2tree_spark.datagen import GenConfig, gen_documents_df
-from har2tree_spark.operators import cascade, parse, tiling
+from har2tree_spark.pipeline import run_pipeline
 
 
 def main() -> None:
@@ -43,11 +45,11 @@ def main() -> None:
         docs = gen_documents_df(
             spark, n_docs, seed=42, cfg=GenConfig(max_spans=16)
         )
-    feats = parse.parse_documents(docs).localCheckpoint()
+    tables = run_pipeline(docs, "exact")
     out = {
         "docs": docs.count(),
-        "join_rows": cascade.resolve_exact(feats).count(),
-        "tile_rollups": tiling.tile_rollup(tiling.tile_assignment(feats)).count(),
+        "join_rows": tables["join_result"].count(),
+        "tile_rollups": tables["tile_rollup"].count(),
         "pkg_from": har2tree_spark.__file__,
     }
     print(json.dumps(out))
