@@ -224,12 +224,13 @@ def _run_doc(a: dict, lo: int, hi: int) -> tuple[list[int], list[int], list[str]
 
 # --------------------------------------------------------------- Arrow ----
 # mapInArrow skips the Arrow->pandas block-manager round trip that
-# dominated the kernel stage (r8, guide §4.2; measured: identity
-# mapInPandas 0.66s vs identity mapInArrow 0.50s vs kernel compute +0.05s
-# on the 20k-doc corpus). Columns become numpy views straight from the
-# Arrow buffers; doc_id stays an Arrow string array end-to-end (doc
-# boundaries from list parent indices or dictionary codes, output via
-# take), so no Python string object is ever materialized per row.
+# dominated the kernel stage (r8, guide §4.2; measured on 4 cores over
+# the 326k feature rows of a 20k-doc corpus, to the noop sink: identity
+# mapInPandas 0.79s vs identity mapInArrow 0.44s). Columns become numpy
+# views straight from the Arrow buffers; doc_id stays an Arrow string
+# array end-to-end (doc boundaries from list parent indices or dictionary
+# codes, output via take), so no Python string object is ever
+# materialized per row.
 
 _STAGE_NAMES = (
     "root", "redirect", "frame", "initiator", "referer", "resource",

@@ -41,8 +41,9 @@ def micro_batch_join_result(batch_df: DataFrame, epoch_id: int) -> DataFrame:
     sort: with at least one input split per core this is one narrow
     stage. A batch of fewer splits (one file is one split) is first dealt
     round-robin over the cores, so parse and the CPU-bound kernel do not
-    run on one core (measured on 4 cores, one file of 12,000 docs: 6.7 s
-    unspread, 3.0 s spread; 250 docs: 0.67 vs 0.80 s)."""
+    run on one core (measured on 4 cores to the noop sink, medians: one
+    file of 12,000 docs 5.3 s unspread, 1.8-2.0 s spread; 250 docs
+    0.30-0.33 vs 0.30-0.36 s, within noise)."""
     n = batch_df.sparkSession.sparkContext.defaultParallelism
     if batch_df.rdd.getNumPartitions() < n:
         batch_df = batch_df.repartition(n)
