@@ -20,5 +20,3 @@ built-ins cannot express the semantics.
 """
 
 __version__ = "0.1.0"
-
-from har2tree_spark.session import get_spark  # noqa: F401

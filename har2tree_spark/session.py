@@ -14,18 +14,22 @@ reads a ``df["x"]`` column; the first call in a JVM pays the build, and
 later calls only make the ``select``/``join``/``groupBy`` calls.
 
 Python daemon: ``get_spark`` sets ``spark.python.daemon.module`` to
-``har2tree_spark.daemon``. Stock PySpark re-reads the central directory
-of every zip archive its workers import from (``pyspark.zip``, py4j,
-the ``spark-core`` jar) at the start of every task, 0.19-0.25 s of CPU
-per task on Python 3.11; that daemon's workers re-read an archive only
-when it changed. The executors' Python must therefore import
-``har2tree_spark``, which the exact kernel already requires (its
-functions are pickled by reference). ``get_spark`` is local-only; a
-``spark-submit`` deployment may pass ``--conf
+``har2tree_spark.daemon``. Stock PySpark compiles pyspark from the
+sources in ``pyspark.zip`` at every daemon launch (about 0.9 s of each
+session's first Python task), and re-reads the central directory of
+every zip archive its workers import from (``pyspark.zip``, py4j, the
+``spark-core`` jar) at the start of every task, 0.19-0.25 s of CPU per
+task on Python 3.11. That daemon imports pyspark and py4j from their
+installed copies when those are the releases in the zips, and its
+workers re-read an archive only when it changed. The executors' Python
+must therefore import ``har2tree_spark``, which the exact kernel already
+requires (its functions are pickled by reference). ``get_spark`` is
+local-only; a ``spark-submit`` deployment may pass ``--conf
 spark.python.daemon.module=har2tree_spark.daemon`` only where the package
 is installed in the executors' Python, not where it ships only through
 ``--py-files`` (those reach ``sys.path`` task by task, after the daemon
-has started).
+has started). Where no pyspark is installed next to it, the daemon keeps
+the stock order and imports pyspark from the zip.
 """
 
 from __future__ import annotations

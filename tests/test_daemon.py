@@ -1,16 +1,79 @@
-"""The Python worker daemon re-reads a zip archive on the path only when
-the archive changed (``har2tree_spark.daemon``)."""
+"""The Python worker daemon (``har2tree_spark.daemon``) imports pyspark
+from its installed copy when that is the release in ``pyspark.zip``, and
+re-reads a zip archive on the path only when the archive changed."""
 
 import importlib
+import subprocess
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def _write_zip(path, modules):
     with zipfile.ZipFile(path, "w") as zf:
         for name, source in modules.items():
             zf.writestr(f"{name}.py", source)
+
+
+def _fake_pyspark(tmp_path, zipped_version, installed_version):
+    """A ``pyspark.zip`` and an installed ``site/pyspark/`` under
+    ``tmp_path``; a version of None leaves that side's ``version.py`` out
+    (and the installed package out altogether)."""
+    modules = {"pyspark/__init__": ""}
+    if zipped_version is not None:
+        modules["pyspark/version"] = f"__version__ = {zipped_version!r}\n"
+    archive = tmp_path / "pyspark.zip"
+    _write_zip(archive, modules)
+    site = tmp_path / "site"
+    site.mkdir()
+    if installed_version is not None:
+        (site / "pyspark").mkdir()
+        (site / "pyspark" / "__init__.py").write_text("")
+        (site / "pyspark" / "version.py").write_text(f"__version__ = {installed_version!r}\n")
+    return str(archive), str(site)
+
+
+@pytest.mark.parametrize(
+    "zipped, installed, on_path, moves",
+    [
+        ("4.1.2", "4.1.2", True, True),
+        ("4.1.2", "4.0.0", True, False),  # another release: stock order
+        (None, "4.1.2", True, False),  # no version.py in the zip
+        ("4.1.2", None, True, False),  # no installed copy
+        ("4.1.2", "4.1.2", False, False),  # no zip on the path
+    ],
+)
+def test_zip_moves_behind_installed_copy_of_same_release(
+    tmp_path, zipped, installed, on_path, moves
+):
+    """The zip moves to just after the installed copy's path entry only
+    when both hold the same ``version.py``; otherwise the path is kept."""
+    from har2tree_spark.daemon import prefer_installed
+
+    archive, site = _fake_pyspark(tmp_path, zipped, installed)
+    first, stdlib = str(tmp_path / "first"), str(tmp_path / "stdlib")
+    stock = [first, archive, stdlib, site] if on_path else [first, stdlib, site]
+    path = list(stock)
+    prefer_installed("pyspark", path)
+    assert path == ([first, stdlib, site, archive] if moves else stock)
+
+
+def test_package_import_leaves_pyspark_unloaded():
+    """``python -m har2tree_spark.daemon`` runs the package's ``__init__``
+    before ``main`` can reorder the path, so neither may import pyspark."""
+    code = (
+        "import sys, har2tree_spark, har2tree_spark.daemon; "
+        "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]", out.stdout
 
 
 def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
@@ -57,7 +120,7 @@ def test_workers_do_not_reread_archives(spark):
     """In every task of a 4-partition Python stage, a second
     ``importlib.invalidate_caches()`` (the first ran in the worker's task
     set-up) re-reads no zip archive, and the worker does import from
-    at least one (pyspark's own)."""
+    at least one (py4j's or the ``spark-core`` jar)."""
     import pyarrow as pa
 
     def probe(batches):
@@ -86,3 +149,21 @@ def test_workers_do_not_reread_archives(spark):
     assert len(rows) == 4
     assert all(r.importers > 0 for r in rows), rows
     assert all(r.reads == 0 for r in rows), rows
+
+
+def test_workers_import_installed_pyspark(spark):
+    """This host's installed pyspark is the release in Spark's
+    ``pyspark.zip``, so every worker of a 4-partition Python stage imports
+    pyspark from the installed copy, not from the zip."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"file": [pyspark.__file__]})
+
+    rows = spark.range(4, numPartitions=4).mapInArrow(probe, "file string").collect()
+    assert len(rows) == 4
+    assert all("pyspark.zip" not in r.file for r in rows), rows
