@@ -22,8 +22,9 @@ def _write_zip(path, modules):
 
 def _fake_pyspark(tmp_path, zipped_version, installed_version):
     """A ``pyspark.zip`` and an installed ``site/pyspark/`` under
-    ``tmp_path``; a version of None leaves that side's ``version.py`` out
-    (and the installed package out altogether)."""
+    ``tmp_path``. A zipped version of None leaves the zip's
+    ``version.py`` out; an installed version of None leaves the whole
+    installed package out."""
     modules = {"pyspark/__init__": ""}
     if zipped_version is not None:
         modules["pyspark/version"] = f"__version__ = {zipped_version!r}\n"
@@ -152,9 +153,9 @@ def test_workers_do_not_reread_archives(spark):
 
 
 def test_workers_import_installed_pyspark(spark):
-    """This host's installed pyspark is the release in Spark's
-    ``pyspark.zip``, so every worker of a 4-partition Python stage imports
-    pyspark from the installed copy, not from the zip."""
+    """The test environment installs the pyspark release that Spark's
+    ``pyspark.zip`` holds, so every worker of a 4-partition Python stage
+    imports pyspark from the installed copy, not from the zip."""
     import pyarrow as pa
 
     def probe(batches):
