@@ -13,7 +13,7 @@ tables of interleaved text+media documents::
 Spans are parsed into point features, encoded into hierarchical grid cells
 (H3-style integer quadtree), resolved into a parent tree via a
 priority-ordered consume-once join cascade with spatial fallbacks
-(broadcast R-tree point-in-polygon, cell-ring-expansion kNN), tiled at
+(page-region point-in-polygon, cell-ring-expansion kNN), tiled at
 multiple resolutions, and aggregated into per-document stats — all with
 DataFrame/Catalyst-first plans and vectorized (Arrow) UDFs only where
 built-ins cannot express the semantics.

@@ -5,8 +5,9 @@ reference's per-page fallback attachment (reference har2tree.py:806-853):
 every attached ``html`` span (page root) owns a hexagonal region around its
 point; dangling points falling inside a region attach to that page root.
 
-These kernels are shared verbatim by the Python oracle and by the Spark
-``mapInPandas`` probe so float behavior is bit-identical on both sides.
+These kernels are shared verbatim by the Python oracle and by the exact
+kernel's ``fallback_pip`` step so float behavior is bit-identical on both
+sides.
 """
 
 from __future__ import annotations

@@ -8,10 +8,12 @@ deterministic point on the [-180,180)x[-90,90) plane via two multiplicative
 integer hashes, and the cell at resolution ``r`` is the quadtree square
 containing it.
 
-Every function here exists in THREE synchronized forms:
-  * numpy (vectorized, used by the Python oracle and pandas UDFs),
+The cell math comes in THREE synchronized forms:
+  * numpy (vectorized, used by the Python oracle and the exact kernel),
   * pyspark Column expressions (JVM-side, whole-stage-codegen — the hot path),
   * a SQL-text builder (DuckDB dialect, for the driver's oracle cross-check).
+The numpy cell assembly and parent that the other two forms are checked
+against live with the tests (``tests/grid_ref.py``).
 
 Cell id layout (resolution <= 16):
     cell = (ix * 2^16 + iy) * 32 + r        (< 2^37)
@@ -69,17 +71,6 @@ def np_cell_xy(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return res, rest // _IY, rest % _IY
 
 
-def make_cell(res, ix, iy):
-    return (np.asarray(ix, dtype=np.int64) * _IY + np.asarray(iy, dtype=np.int64)) * _RB + res
-
-
-def np_cell_parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
-    """Re-index a cell at a coarser resolution (H3 cellToParent analogue)."""
-    res, ix, iy = np_cell_xy(cell)
-    shift = res - parent_res
-    return ((ix >> shift) * _IY + (iy >> shift)) * _RB + parent_res
-
-
 _RING_OFFSETS: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
@@ -112,57 +103,6 @@ def np_ring(cell: int, radius: int) -> np.ndarray:
     return (((ix + dx) % n) * _IY + ((iy + dy) % n)) * _RB + res
 
 
-def np_cover_bbox(
-    min_lon: float, min_lat: float, max_lon: float, max_lat: float,
-    max_cells: int = 64, max_res: int = FINE_RES,
-) -> np.ndarray:
-    """S2-style covering: the set of cells covering a bbox, refined to the
-    finest resolution that stays within ``max_cells``, then compacted
-    (complete 4-child quartets promoted to their parent). Used to turn a
-    polygon/region into an indexable cell set for pruning joins."""
-    min_lon = max(min_lon, -180.0)
-    min_lat = max(min_lat, -90.0)
-    max_lon = min(max_lon, 180.0 - 1e-9)
-    max_lat = min(max_lat, 90.0 - 1e-9)
-    chosen = None
-    for res in range(max_res, -1, -1):
-        n = 1 << res
-        x0 = int((min_lon + 180.0) / 360.0 * n)
-        x1 = int((max_lon + 180.0) / 360.0 * n)
-        y0 = int((min_lat + 90.0) / 180.0 * n)
-        y1 = int((max_lat + 90.0) / 180.0 * n)
-        if (x1 - x0 + 1) * (y1 - y0 + 1) <= max_cells:
-            xs = np.arange(x0, x1 + 1, dtype=np.int64)
-            ys = np.arange(y0, y1 + 1, dtype=np.int64)
-            gx, gy = np.meshgrid(xs, ys, indexing="ij")
-            chosen = make_cell(res, gx.ravel(), gy.ravel())
-            break
-    assert chosen is not None
-    return np_compact(chosen)
-
-
-def np_compact(cells: np.ndarray) -> np.ndarray:
-    """Compact a cell set: any parent whose 4 children are all present
-    replaces them; repeated up the hierarchy (H3 compactCells)."""
-    out: list[int] = []
-    cur = np.unique(np.asarray(cells, dtype=np.int64))
-    while len(cur) > 0:
-        res = int(cur[0] % _RB)
-        if res == 0:
-            out.extend(cur.tolist())
-            break
-        parents = np_cell_parent(cur, res - 1)
-        uniq, counts = np.unique(parents, return_counts=True)
-        promote = set(uniq[counts == 4].tolist())
-        keep = np.asarray(
-            [c for c, p in zip(cur.tolist(), parents.tolist()) if p not in promote],
-            dtype=np.int64,
-        )
-        out.extend(keep.tolist())
-        cur = np.asarray(sorted(promote), dtype=np.int64)
-    return np.asarray(sorted(out), dtype=np.int64)
-
-
 # ------------------------------------------------------- Spark columns ----
 def col_key_num(key: Column) -> Column:
     """'k123' -> 123; null-safe."""
@@ -193,33 +133,38 @@ def col_point(key_num: Column) -> tuple[Column, Column]:
     return hx / MOD32 * 360.0 - 180.0, hy / MOD32 * 180.0 - 90.0
 
 
-def col_cell_lonlat(lon: Column, lat: Column, res: int) -> Column:
-    """Cell id from lon/lat columns (consistent with np_cell for points
-    produced by np_point: the float math floors to the same integer grid)."""
-    n = 1 << res
-    ix = F.floor((lon + 180.0) / 360.0 * n)
-    iy = F.floor((lat + 90.0) / 180.0 * n)
+def _col_make_cell(res: int, ix: Column, iy: Column) -> Column:
     return ((ix * F.lit(_IY) + iy) * F.lit(_RB) + F.lit(res)).cast("long")
+
+
+def col_cell_xy(cell: Column) -> tuple[Column, Column]:
+    """(ix, iy) of a cell column (np_cell_xy without the resolution)."""
+    rest = F.floor(cell / F.lit(_RB))
+    return F.floor(rest / F.lit(_IY)), F.pmod(rest, F.lit(_IY))
 
 
 def col_cell(key_num: Column, res: int = FINE_RES) -> Column:
     hx, hy = col_hashes(key_num)
     ix = F.floor(hx / F.lit(1 << (32 - res)))
     iy = F.floor(hy / F.lit(1 << (32 - res)))
-    return ((ix * F.lit(_IY) + iy) * F.lit(_RB) + F.lit(res)).cast("long")
+    return _col_make_cell(res, ix, iy)
 
 
 def col_cell_parent(cell: Column, res: int, parent_res: int) -> Column:
     """Coarsen a resolution-``res`` cell column to ``parent_res``."""
-    rest = F.floor(cell / F.lit(_RB))
-    ix = F.floor(rest / F.lit(_IY))
-    iy = F.pmod(rest, F.lit(_IY))
+    ix, iy = col_cell_xy(cell)
     shift = 1 << (res - parent_res)
-    return (
-        (F.floor(ix / F.lit(shift)) * F.lit(_IY) + F.floor(iy / F.lit(shift)))
-        * F.lit(_RB)
-        + F.lit(parent_res)
-    ).cast("long")
+    return _col_make_cell(
+        parent_res, F.floor(ix / F.lit(shift)), F.floor(iy / F.lit(shift))
+    )
+
+
+def col_cell_offset(cell: Column, dx: Column, dy: Column, res: int) -> Column:
+    """The resolution-``res`` cell ``(dx, dy)`` steps from ``cell``, with
+    np_ring's toroidal wrap at the grid edge."""
+    n = 1 << res
+    ix, iy = col_cell_xy(cell)
+    return _col_make_cell(res, F.pmod(ix + dx, F.lit(n)), F.pmod(iy + dy, F.lit(n)))
 
 
 # ------------------------------------------------------------ SQL text ----

@@ -1,15 +1,9 @@
-"""Spatial fallback + generic geospatial join operators.
+"""Spatial fallback chain over rank-mode resolution.
 
 Re-grounds the reference's fallback attachment cascade
 (_make_subtree_fallback, reference har2tree.py:770-853) relationally:
 
   * ``fallback_host``  — coarse-cell equi-join + preference window (J10);
-  * ``pip_join``       — broadcast R-tree point-in-polygon via ray casting
-                         (J11/J12 page-region containment): the polygon side
-                         is small per north_star, so it broadcasts; the probe
-                         runs inside ``mapInPandas`` with numpy ray casting —
-                         the only Python stage, Arrow-batched, no per-row
-                         Python;
   * ``knn_join``       — cell-ring-expansion kNN (J13) as ONE equi-join:
                          explode the (2R+1)^2 neighbor-cell disk of each
                          probe (pure integer column arithmetic, JVM-side),
@@ -20,34 +14,20 @@ Re-grounds the reference's fallback attachment cascade
 unmatched spans try host-cell, then kNN, then root — the relational
 counterpart of the sequential fallback loop (exact mode implements the
 reference-faithful sequential semantics in operators/kernel.py; the two
-contracts differ only in visit order, documented there).
+contracts differ only in visit order, documented there). The page-region
+containment step (J11/J12, ``fallback_pip``) runs only in the exact
+kernel, whose attached set grows while it walks a document.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
-from har2tree_spark.geo.geometry import points_in_polygon
-from har2tree_spark.geo.rtree import STRtree
 from har2tree_spark.operators.cascade import live_features
 from har2tree_spark.operators.kernel import MAX_RING
 from har2tree_spark.schema import PRIORITY
-
-_IY = 1 << 16
-_RB = 32
-# grid resolution of pip_join's polygon covering prune
-PIP_PRUNE_RES = 4
-# the point columns pip_join passes through
-_PIP_KEEP_COLS = ("doc_id", "span_idx")
-
-
-def _cell_parts(cell):
-    rest = F.floor(cell / F.lit(_RB))
-    return F.floor(rest / F.lit(_IY)), F.pmod(rest, F.lit(_IY))
 
 
 def neighbor_cells(df: DataFrame, cell_col: str, radius: int) -> DataFrame:
@@ -55,21 +35,15 @@ def neighbor_cells(df: DataFrame, cell_col: str, radius: int) -> DataFrame:
     ``grid.FINE_RES`` grid (toroidal wrap), adding ``nbr_cell`` and
     ``ring`` (Chebyshev distance) and ``d2`` columns — all integer column
     arithmetic, whole-stage-codegen'd."""
-    n = 1 << grid.FINE_RES
     offs = [
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
         for dx in range(-radius, radius + 1)
         for dy in range(-radius, radius + 1)
     ]
-    ix, iy = _cell_parts(F.col(cell_col))
     out = df.withColumn("_o", F.explode(F.array(*offs)))
     dx = F.col("_o.dx")
     dy = F.col("_o.dy")
-    nbr = (
-        (F.pmod(ix + dx, F.lit(n)) * F.lit(_IY) + F.pmod(iy + dy, F.lit(n)))
-        * F.lit(_RB)
-        + F.lit(grid.FINE_RES)
-    ).cast("long")
+    nbr = grid.col_cell_offset(F.col(cell_col), dx, dy, grid.FINE_RES)
     return (
         out.withColumn("nbr_cell", nbr)
         .withColumn("ring", F.greatest(F.abs(dx), F.abs(dy)))
@@ -149,87 +123,6 @@ def knn_join(
     rest = probes.join(done, [*keys, "probe_id"], "left_anti")
     r2 = _disk_knn(rest, candidates, k, max_ring, keys, exclude_self)
     return r1_done.unionByName(r2)
-
-
-def pip_join(points: DataFrame, polygons: list[tuple]) -> DataFrame:
-    """Broadcast R-tree point-in-polygon join. ``polygons`` is a driver-side
-    list of (poly_id, vertices) with vertices an (m, 2) array-like — the
-    small/broadcastable side (tile boundaries, page regions). Returns one
-    row per (point, containing polygon): (doc_id, span_idx, poly_id).
-
-    Plan shape: (1) S2-style covering prune — the union of the polygons'
-    bbox coverings at resolution ``PIP_PRUNE_RES`` becomes a JVM-side `isin`
-    filter on the point's cell, so points nowhere near any polygon never
-    reach Python; (2) R-tree built once on the driver, broadcast; (3) probe
-    in a mapInPandas stage (numpy ray casting per Arrow batch) — no
-    shuffle, no per-row Python."""
-    spark = points.sparkSession
-    polys = [(pid, np.asarray(v, dtype=np.float64)) for pid, v in polygons]
-    if polys:
-        cover: set[int] = set()
-        for _, v in polys:
-            cover.update(
-                grid.np_cover_bbox(
-                    float(v[:, 0].min()), float(v[:, 1].min()),
-                    float(v[:, 0].max()), float(v[:, 1].max()),
-                    max_cells=64, max_res=PIP_PRUNE_RES,
-                ).tolist()
-            )
-        # the cover is mixed-resolution (compacted): a point survives if its
-        # cell at ANY cover resolution is in the cover's cells of that res
-        conds = []
-        for r in range(0, PIP_PRUNE_RES + 1):
-            cells_r = [c for c in cover if c % 32 == r]
-            if cells_r:
-                conds.append(
-                    grid.col_cell_lonlat(F.col("lon"), F.col("lat"), r).isin(cells_r)
-                )
-        if conds:
-            cond = conds[0]
-            for extra in conds[1:]:
-                cond = cond | extra
-            points = points.filter(cond)
-    boxes = np.asarray(
-        [
-            [v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max()]
-            for _, v in polys
-        ]
-    ).reshape(-1, 4)
-    bc = spark.sparkContext.broadcast((polys, boxes))
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in points.select(*_PIP_KEEP_COLS).schema.fields
-    ) + ", poly_id string"
-
-    def probe(batches):
-        polys_l, boxes_l = bc.value
-        tree = STRtree(boxes_l)
-        cols = list(_PIP_KEEP_COLS)
-        for pdf in batches:
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            # vectorized bbox pairs, then ONE ray cast per candidate polygon
-            # over all of its probe points (no per-row Python)
-            pt, box = tree.query_pairs(lon, lat)
-            hit_rows: list[np.ndarray] = []
-            hit_pids: list[str] = []
-            for ci in np.unique(box):
-                pts = pt[box == ci]
-                pid, verts = polys_l[int(ci)]
-                inside = points_in_polygon(lon[pts], lat[pts], verts)
-                kept = pts[inside]
-                hit_rows.append(kept)
-                hit_pids.extend([pid] * len(kept))
-            if hit_rows:
-                idx = np.concatenate(hit_rows)
-                out = pdf.iloc[idx][cols].copy()
-                out["poly_id"] = hit_pids
-            else:
-                out = pdf.iloc[:0][cols].copy()
-                out["poly_id"] = pd.Series(dtype="object")
-            yield out
-
-    return points.select(*_PIP_KEEP_COLS, "lon", "lat").mapInPandas(probe, out_schema)
 
 
 def resolve_with_fallbacks(features: DataFrame, base: DataFrame) -> DataFrame:

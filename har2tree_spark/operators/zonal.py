@@ -4,8 +4,7 @@ Re-grounds the reference's embedded/external-resource extraction + tagging
 (helper.py:356-466 + the J7 resource-type tagging join, har2tree.py:389-426):
 a document's span *content* (text tokens = "pixels") is rasterized into
 point features and aggregated per zone — explode -> groupBy(zone). The
-zones are coarse grid cells; polygon zones assign the same pixels with
-``operators/fallback.pip_join``.
+zones are coarse grid cells.
 """
 
 from __future__ import annotations
@@ -19,7 +18,7 @@ from har2tree_spark.operators.parse import KEY_TOKEN_RE
 
 def rasterize_spans(features: DataFrame) -> DataFrame:
     """Every key-like token in every span's text becomes one 'pixel' point
-    (doc_id, span_idx, pix_idx, key_num, lon, lat, cell) — the raster side.
+    (doc_id, span_idx, pix_idx, key_num, cell) — the raster side.
     Narrow (explode only), all JVM."""
     f = features.filter(F.col("span_idx").isNotNull())
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t.rlike(KEY_TOKEN_RE))
@@ -29,21 +28,17 @@ def rasterize_spans(features: DataFrame) -> DataFrame:
         F.posexplode(toks).alias("pix_idx", "tok"),
     )
     key_num = grid.col_key_num(F.col("tok"))
-    lon, lat = grid.col_point(key_num)
     return out.select(
         "doc_id",
         "span_idx",
         "pix_idx",
         key_num.alias("key_num"),
-        lon.alias("lon"),
-        lat.alias("lat"),
         grid.col_cell(key_num, grid.FINE_RES).alias("cell"),
     )
 
 
 def zonal_stats_by_cell(pixels: DataFrame) -> DataFrame:
-    """Grid-zone variant (no polygon side): zones are coarse cells; fully
-    relational, one shuffle — the scale path when zones align to the index."""
+    """Zones are coarse cells: fully relational, one shuffle."""
     zone = grid.col_cell_parent(F.col("cell"), grid.FINE_RES, grid.COARSE_RES)
     return pixels.groupBy(zone.alias("zone_cell")).agg(
         F.count("*").cast("long").alias("n_pixels"),

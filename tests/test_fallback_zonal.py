@@ -1,51 +1,24 @@
-"""Spatial fallback chain, PIP R-tree join, ring-kNN, zonal join."""
+"""Spatial fallback chain, ring-kNN, zonal join."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from har2tree_spark.datagen import GenConfig, gen_docs
 from har2tree_spark.geo import grid
-from har2tree_spark.geo.geometry import hex_polygon
 from har2tree_spark.operators import zonal
 from har2tree_spark.operators.cascade import resolve_rank
-from har2tree_spark.operators.fallback import knn_join, pip_join, resolve_with_fallbacks
+from har2tree_spark.operators.fallback import knn_join, resolve_with_fallbacks
 from har2tree_spark.operators.parse import parse_documents
 from har2tree_spark.schema import DOCUMENTS_SCHEMA
 
-
-def test_pip_join_hits_and_misses(spark):
-    # points: key 1's exact location inside its own hexagon; a far key outside
-    lon1, lat1 = (float(x[0]) for x in grid.np_point(np.asarray([1])))
-    pts = spark.createDataFrame(
-        [("d", 0, lon1, lat1), ("d", 1, lon1 + 50.0, lat1)],
-        "doc_id string, span_idx int, lon double, lat double",
-    )
-    polys = [("z1", hex_polygon(lon1, lat1, 1.0))]
-    got = pip_join(pts, polys).toPandas()
-    assert len(got) == 1
-    assert got.span_idx.iloc[0] == 0 and got.poly_id.iloc[0] == "z1"
-
-
-def test_pip_join_many_polygons_rtree(spark):
-    # 200 disjoint-ish hexagons; each key point must land in its own hexagon
-    ks = np.arange(1, 201, dtype=np.int64)
-    lon, lat = grid.np_point(ks)
-    polys = [(f"z{k}", hex_polygon(float(lon[i]), float(lat[i]), 0.001))
-             for i, k in enumerate(ks)]
-    pts = spark.createDataFrame(
-        [("d", int(k), float(lon[i]), float(lat[i])) for i, k in enumerate(ks)],
-        "doc_id string, span_idx int, lon double, lat double",
-    )
-    got = pip_join(pts, polys).toPandas()
-    own = got[got.apply(lambda r: r.poly_id == f"z{r.span_idx}", axis=1)]
-    assert len(own) == 200  # every point found in its own polygon
+from grid_ref import make_cell
 
 
 def test_knn_join_prefers_closer_ring(spark):
     res = grid.FINE_RES
-    c0 = int(grid.make_cell(res, np.int64(100), np.int64(100)))
-    near = int(grid.make_cell(res, np.int64(101), np.int64(100)))  # ring 1
-    far = int(grid.make_cell(res, np.int64(103), np.int64(100)))  # ring 3
+    c0 = int(make_cell(res, np.int64(100), np.int64(100)))
+    near = int(make_cell(res, np.int64(101), np.int64(100)))  # ring 1
+    far = int(make_cell(res, np.int64(103), np.int64(100)))  # ring 3
     probes = spark.createDataFrame(
         [("d", 0, c0)], "doc_id string, probe_id int, cell long"
     )
@@ -61,8 +34,8 @@ def test_knn_join_prefers_closer_ring(spark):
 def test_knn_join_torus_wrap(spark):
     res = grid.FINE_RES
     n = 1 << res
-    c0 = int(grid.make_cell(res, np.int64(0), np.int64(0)))
-    wrap = int(grid.make_cell(res, np.int64(n - 1), np.int64(0)))  # ring 1 via wrap
+    c0 = int(make_cell(res, np.int64(0), np.int64(0)))
+    wrap = int(make_cell(res, np.int64(n - 1), np.int64(0)))  # ring 1 via wrap
     probes = spark.createDataFrame([("d", 0, c0)], "doc_id string, probe_id int, cell long")
     cands = spark.createDataFrame(
         [("d", 7, wrap, 0)], "doc_id string, cand_id int, cell long, cand_offset int"
@@ -97,22 +70,6 @@ def test_zonal_stats_by_cell(spark):
     zs = zonal.zonal_stats_by_cell(pix).toPandas()
     assert (zs.n_pixels > 0).all()
     assert zs.n_pixels.sum() == pix.count()
-
-
-def test_zonal_stats_polygons(spark):
-    lon1, lat1 = (float(x[0]) for x in grid.np_point(np.asarray([1])))
-    docs = [
-        {
-            "doc_id": "d",
-            "spans": [
-                {"kind": "html", "text": "k9 k1 k1", "media_ref": "", "offset": 0}
-            ],
-        }
-    ]
-    feats = parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA))
-    pix = zonal.rasterize_spans(feats)
-    hits = pip_join(pix, [("z1", hex_polygon(lon1, lat1, 0.5))]).toPandas()
-    assert len(hits) == 2 and set(hits.poly_id) == {"z1"}  # both k1 pixels
 
 
 def test_knn_two_phase_identical(spark):

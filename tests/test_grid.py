@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from har2tree_spark.geo import grid
 
+from grid_ref import make_cell, np_cell_parent
+
 
 def test_cell_roundtrip():
     k = np.arange(1, 5000, dtype=np.int64)
@@ -13,7 +15,7 @@ def test_cell_roundtrip():
     res, ix, iy = grid.np_cell_xy(cell)
     assert (res == grid.FINE_RES).all()
     assert (ix < (1 << grid.FINE_RES)).all() and (iy < (1 << grid.FINE_RES)).all()
-    assert (grid.make_cell(grid.FINE_RES, ix, iy) == cell).all()
+    assert (make_cell(grid.FINE_RES, ix, iy) == cell).all()
     assert int(cell.max()) < (1 << 53)  # float64-safe
 
 
@@ -21,7 +23,7 @@ def test_parent_consistency():
     k = np.arange(1, 2000, dtype=np.int64)
     fine = grid.np_cell(k, grid.FINE_RES)
     coarse_direct = grid.np_cell(k, grid.COARSE_RES)
-    coarse_via_parent = grid.np_cell_parent(fine, grid.COARSE_RES)
+    coarse_via_parent = np_cell_parent(fine, grid.COARSE_RES)
     assert (coarse_direct == coarse_via_parent).all()
 
 
@@ -54,6 +56,32 @@ def test_spark_column_matches_numpy(spark):
     assert (got["coarse2"].to_numpy() == got["coarse"].to_numpy()).all()
 
 
+def test_column_offsets_match_ring(spark):
+    """col_cell_offset over the radius-2 disk gives np_ring's cells ring by
+    ring, wrap included (cells on the grid's edges), and col_cell_xy splits a
+    cell as np_cell_xy does."""
+    res, n = grid.FINE_RES, 1 << grid.FINE_RES
+    cells = [int(make_cell(res, ix, iy)) for ix, iy in ((0, 0), (n - 1, 5), (100, n - 1))]
+    offs = [(dx, dy) for dx in range(-2, 3) for dy in range(-2, 3)]
+    df = spark.createDataFrame(
+        [(c, dx, dy) for c in cells for dx, dy in offs], "cell long, dx int, dy int"
+    )
+    ix, iy = grid.col_cell_xy(F.col("cell"))
+    got = df.select(
+        "cell",
+        F.greatest(F.abs("dx"), F.abs("dy")).alias("ring"),
+        grid.col_cell_offset(F.col("cell"), F.col("dx"), F.col("dy"), res).alias("nbr"),
+        ix.cast("long").alias("ix"),
+        iy.cast("long").alias("iy"),
+    ).toPandas()
+    for c in cells:
+        mine = got[got.cell == c]
+        for r in (0, 1, 2):
+            assert sorted(mine[mine.ring == r].nbr) == sorted(grid.np_ring(c, r).tolist())
+        _, want_x, want_y = grid.np_cell_xy(np.asarray([c]))
+        assert set(mine.ix) == {int(want_x[0])} and set(mine.iy) == {int(want_y[0])}
+
+
 def test_sql_matches_numpy():
     k = np.arange(1, 3000, 11, dtype=np.int64)
     con = duckdb.connect()
@@ -65,30 +93,6 @@ def test_sql_matches_numpy():
     ).fetchnumpy()
     assert (got["cell"] == grid.np_cell(k, grid.FINE_RES)).all()
     assert (got["coarse"] == grid.np_cell(k, grid.COARSE_RES)).all()
-
-
-def test_cover_bbox_and_compact():
-    # cover must contain the cells of points inside the bbox at each res
-    cover = grid.np_cover_bbox(-10, -10, 10, 10, max_cells=64)
-    assert 1 <= len(cover) <= 64
-    # a point well inside the box is covered at SOME ancestor level
-    k = np.asarray([12345], dtype=np.int64)
-    lon, lat = grid.np_point(k)
-    inside = (-10 <= lon[0] < 10) and (-10 <= lat[0] < 10)
-    cell = int(grid.np_cell(k, grid.FINE_RES)[0])
-    ancestors = {
-        int(grid.np_cell_parent(np.asarray([cell]), r)[0]) for r in range(0, 13)
-    } | {cell}
-    if inside:
-        assert ancestors & set(cover.tolist())
-    # compaction law: a full quartet promotes
-    ix, iy = 8, 4
-    quartet = grid.make_cell(
-        3, np.asarray([2 * ix, 2 * ix, 2 * ix + 1, 2 * ix + 1]),
-        np.asarray([2 * iy, 2 * iy + 1, 2 * iy, 2 * iy + 1]),
-    )
-    compacted = grid.np_compact(quartet)
-    assert list(compacted) == [int(grid.make_cell(2, np.int64(ix), np.int64(iy)))]
 
 
 def test_point_range():

@@ -7,8 +7,8 @@ re-grounded as a flat scan + one theta join + one distinct-set rollup.
 The reference pins these on its cookie/no_cookie capture samples
 (tests/simple_test.py:172-183,229-241); those sample files are absent in
 this environment, so the scenario tests construct the same shapes
-deterministically and the lalibre corpus (present, 200 of 216 captures
-carry cookies) pins the real-input literals.
+deterministically, and the lalibre corpus (200 of 216 captures carry
+cookies) pins the real-input literals when it is present.
 """
 
 import json
@@ -22,7 +22,8 @@ from har2tree_spark.sources.har_cookies import entry_cookies
 
 REF_DATA = "/root/reference/tests/data"
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference capture corpus skip without it
+needs_corpus = pytest.mark.skipif(
     not os.path.isdir(REF_DATA), reason="reference HAR corpora not present"
 )
 
@@ -185,6 +186,7 @@ def test_initial_cookies_from_root_span(spark, cookie_capture_dir):
     assert init == {("cookie", "seen=1")}
 
 
+@needs_corpus
 def test_lalibre_cookie_literals(spark):
     """Real-corpus pin: the lalibre captures' cookie surface, counted once
     and asserted literally so adapter regressions surface immediately."""
@@ -209,6 +211,7 @@ def test_lalibre_cookie_literals(spark):
 PINNED_LALIBRE = (3, 511, 1079, 5482)
 
 
+@needs_corpus
 def test_cookie_ops_duckdb_cross_check(spark, tmp_path):
     """Value-exact DuckDB cross-check of the relational cookie operators on
     the REAL lalibre corpus: the flat cookie table round-trips through

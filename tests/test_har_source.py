@@ -17,7 +17,8 @@ from har2tree_spark.sources import har_source
 
 REF_DATA = "/root/reference/tests/data"
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference capture corpus skip without it
+needs_corpus = pytest.mark.skipif(
     not os.path.isdir(REF_DATA), reason="reference HAR corpora not present"
 )
 
@@ -124,6 +125,7 @@ def lalibre_out(spark):
     return docs, out
 
 
+@needs_corpus
 def test_lalibre_corpus_end_to_end(spark, lalibre_out):
     docs, out = lalibre_out
     assert docs.count() == 216  # reference tests/test.py:14-18 forest corpus
@@ -151,6 +153,7 @@ def test_lalibre_corpus_end_to_end(spark, lalibre_out):
     assert kinds.get("initiator", 0) > 100
 
 
+@needs_corpus
 def test_lalibre_span_sequence_invariant(spark, lalibre_out):
     docs, out = lalibre_out
     seq = lambda df: df.select(  # noqa: E731
@@ -163,6 +166,7 @@ def test_lalibre_span_sequence_invariant(spark, lalibre_out):
     assert joined.filter(~F.col("a.seq").eqNullSafe(F.col("b.seq"))).count() == 0
 
 
+@needs_corpus
 def test_loose_hars_and_forest_shared_keys(spark):
     # the 5 loose captures (buzzfeed/circl/lemonde/libe/nyt) parse and
     # produce referer-linked trees; identical URLs key identically across
@@ -178,6 +182,7 @@ def test_loose_hars_and_forest_shared_keys(spark):
     assert (jr.join_kind == "referer").sum() > 100
 
 
+@needs_corpus
 def test_simple_capture_initiators_and_resources(spark):
     # the reference's own pytest target (tests/simple_test.py): parser
     # initiators on every subresource + a real HTML body.
@@ -383,6 +388,7 @@ def test_capture_sidecars_end_to_end(spark, capture_dir):
     }
 
 
+@needs_corpus
 def test_wired_sidecars_without_har(spark):
     # the reference's wired/ dir ships rendered html + screenshot + meta
     # but no .har: no capture row, and the scan does not choke on the
@@ -391,6 +397,7 @@ def test_wired_sidecars_without_har(spark):
     assert docs.count() == 0
 
 
+@needs_corpus
 def test_captures_reader_matches_plain_reader(spark):
     # with no sidecars present the capture reader degrades to exactly
     # read_har_dir: same doc_ids, same span sequences

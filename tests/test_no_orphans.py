@@ -25,12 +25,11 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "har2tree_spark"
 
-# The real-HAR surface: each of these is reached only by tests that need a
-# reference capture corpus, which skip without one. Whether to wire or
-# delete them waits for a fixture factory that can run those tests
-# (ROADMAP direction 4). ``pip_join`` is SURVEY's broadcast R-tree
-# point-in-polygon join; its last caller outside the tests was the
-# polygon-list zonal aggregate.
+# The real-HAR surface: no shipped code calls these, only tests.
+# ``stream_har_documents`` is reached only by a test that needs the
+# reference capture corpus and skips without it; the others run in
+# corpus-free tests (synthetic captures written by the tests). Whether to
+# wire or delete each is ROADMAP direction 6.
 DEFERRED = {
     "capture_report": "pipeline.py real-HAR capture report",
     "attach_frames": "operators/frames.py iframe attachment from frames.json",
@@ -38,12 +37,11 @@ DEFERRED = {
     "cookie_provenance": "sources/har_cookies.py per-cookie provenance",
     "host_cookie_rollup": "sources/har_cookies.py per-host cookie rollup",
     "initial_cookies": "sources/har_cookies.py root-entry sent cookies",
-    "pip_join": "operators/fallback.py broadcast R-tree PIP join (J11/J12)",
 }
 
 # The real-HAR readers' file selectors: a capture corpus names its own
-# files, and the callers that would pass these are the skipped real-HAR
-# tests above. They wait on the same fixture factory.
+# files, and only tests pass these. They are settled with the entries
+# above.
 DEFERRED_PARAMS = {
     "read_har_dir(pattern)": "sources/har_source.py HAR file glob",
     "read_har_packed(pattern)": "sources/har_source.py packed-capture glob",

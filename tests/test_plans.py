@@ -537,7 +537,7 @@ def test_session_knobs_validated_before_any_session(monkeypatch):
 
 
 def test_only_session_reads_cpus():
-    """Tools and ad-hoc benches take the core count from the session
+    """Tools take the core count from the session
     (``defaultParallelism``); only ``session.py`` reads SPARK_GRAFT_CPUS.
     ``bench.py`` is frozen and keeps its own read; ``perfbench`` passes
     ``parallelism`` explicitly."""
@@ -545,7 +545,6 @@ def test_only_session_reads_cpus():
 
     root = Path(__file__).resolve().parent.parent
     files = [*(root / "har2tree_spark").rglob("*.py"), *(root / "tools").rglob("*.py")]
-    files.append(root / "bench_extra.py")
     read = re.compile(r"""environ(?:\.get\(|\[)\s*["']SPARK_GRAFT_CPUS""")
     readers = sorted(
         str(f.relative_to(root)) for f in files if read.search(f.read_text())

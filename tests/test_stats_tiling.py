@@ -15,6 +15,8 @@ from har2tree_spark.operators.parse import parse_documents
 from har2tree_spark.oracle import pycascade
 from har2tree_spark.schema import DOCUMENTS_SCHEMA
 
+from grid_ref import make_cell, np_cell_parent
+
 
 def test_doc_stats_vs_oracle(spark):
     docs = scenario_docs() + gen_docs(21, 80)
@@ -177,7 +179,7 @@ def test_tile_assignment_levels(spark):
         lvl = int(row.level)
         prev = grid.TILE_LEVELS[grid.TILE_LEVELS.index(lvl) - 1]
         assert int(
-            grid.np_cell_parent(np.asarray([int(row.cell)]), prev)[0]
+            np_cell_parent(np.asarray([int(row.cell)]), prev)[0]
         ) == int(row.parent_cell)
     # first level has null parent
     first = tiles[tiles.level == grid.TILE_LEVELS[0]]
@@ -188,17 +190,17 @@ def test_compact_cells_law(spark):
     # a complete quartet at FINE_RES compacts into one parent; a lone cell stays
     ix, iy = 100, 200
     quartet = [
-        int(grid.make_cell(grid.FINE_RES, np.int64(ix * 2 + a), np.int64(iy * 2 + b)))
+        int(make_cell(grid.FINE_RES, np.int64(ix * 2 + a), np.int64(iy * 2 + b)))
         for a in (0, 1)
         for b in (0, 1)
     ]
-    lone = int(grid.make_cell(grid.FINE_RES, np.int64(5), np.int64(7)))
+    lone = int(make_cell(grid.FINE_RES, np.int64(5), np.int64(7)))
     rows = [("d1", c) for c in quartet] + [("d1", lone)]
     df = spark.createDataFrame(rows, "doc_id string, cell long")
     got = sorted(
         r.cell for r in tiling.compact_cells(df, grid.FINE_RES, grid.FINE_RES - 1).collect()
     )
-    parent = int(grid.np_cell_parent(np.asarray([quartet[0]]), grid.FINE_RES - 1)[0])
+    parent = int(np_cell_parent(np.asarray([quartet[0]]), grid.FINE_RES - 1)[0])
     assert got == sorted([parent, lone])
 
 
